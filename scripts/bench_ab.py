@@ -14,7 +14,10 @@ its +8%-median / 2x-outlier drift vs the round-8 record (DESIGN.md
 "Round 9 run of record"): the r8-record binary re-run on the r9 box was
 SLOWER than the r9 binary like-for-like, proving the drift ambient.
 Runs are sequential (never concurrent) so they don't contend with each
-other; the bench's own loadavg fields ride along in both artifacts.
+other; the bench's own loadavg fields ride along in both artifacts. Both
+runs use the caller's SPARK_GRAFT_CPUS, or the cores this process may run
+on (what `nproc` prints) when it is unset, so the engine is never sized
+past the box.
 """
 import json, re, subprocess, sys, os, shutil
 
@@ -23,9 +26,10 @@ if len(sys.argv) < 3:
 base, qre = sys.argv[1], sys.argv[2]
 sfdir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 wt = "/tmp/bench_ab_wt"
+cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 def bench(cwd, out):
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir, SPARK_GRAFT_CPUS="32",
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir, SPARK_GRAFT_CPUS=cpus,
                SPARK_GRAFT_ONLY=qre, SPARK_GRAFT_BENCH_OUT=out)
     r = subprocess.run(["sbt", "-batch", "runMain graft.Bench"],
                        cwd=cwd, env=env, capture_output=True, text=True)
@@ -47,6 +51,7 @@ finally:
                    cwd="/root/repo", capture_output=True)
 
 qa, qb = a["queries"], b["queries"]
+print(f"SPARK_GRAFT_CPUS={cpus}")
 print(f"{'query':28s} {'base@'+base[:9]:>12s} {'current':>9s} {'ratio':>7s}")
 for k in sorted(set(qa) & set(qb)):
     ratio = qb[k] / qa[k] if qa[k] > 0 else float("nan")

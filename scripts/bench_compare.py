@@ -7,6 +7,10 @@ Usage: python3 scripts/bench_compare.py OLD NEW [--top N]
 Prints total/median deltas and the biggest per-query regressions and
 improvements, so a round's perf work is judged against the recorded
 artifact instead of memory.
+
+Exits 1 without comparing when the two runs timed different query sets or
+failed different queries: a bench total leaves failed queries out, so a
+change that breaks a query would otherwise read as faster.
 """
 import json, re, statistics, sys
 
@@ -18,7 +22,7 @@ def load(path):
     except json.JSONDecodeError:
         d = None
     if isinstance(d, dict) and "queries" in d and isinstance(d["queries"], dict):
-        return d["queries"], d.get("value")
+        return d["queries"], d.get("value"), d.get("failed")
     # driver artifact: find the LAST parseable {"metric":...} line in the tail
     text = d.get("tail", raw) if isinstance(d, dict) else raw
     best = None
@@ -36,8 +40,23 @@ def load(path):
         pairs.pop("value", None)
         if not pairs:
             sys.exit(f"{path}: no bench line found")
-        return pairs, None
-    return best["queries"], best.get("value")
+        return pairs, None, None
+    return best["queries"], best.get("value"), best.get("failed")
+
+
+def mismatch(old, old_failed, new, new_failed):
+    """Why the two runs are not comparable, or None."""
+    problems = []
+    only_old, only_new = sorted(set(old) - set(new)), sorted(set(new) - set(old))
+    if only_old or only_new:
+        problems.append(f"query sets differ: only in OLD {only_old}, only in NEW {only_new}")
+    # a failed query is timed as -1 (graft.Bench)
+    f_old = sorted(q for q, v in old.items() if v < 0)
+    f_new = sorted(q for q, v in new.items() if v < 0)
+    if f_old != f_new or old_failed != new_failed:
+        problems.append(f"failed queries differ: OLD failed={old_failed} {f_old}, "
+                        f"NEW failed={new_failed} {f_new}")
+    return "; ".join(problems) or None
 
 
 def main():
@@ -46,18 +65,16 @@ def main():
     if "--top" in sys.argv:
         top = int(sys.argv[sys.argv.index("--top") + 1])
         args = args[:2]
-    old, old_total = load(args[0])
-    new, new_total = load(args[1])
-    both = sorted(set(old) & set(new))
-    added, dropped = sorted(set(new) - set(old)), sorted(set(old) - set(new))
+    old, old_total, old_failed = load(args[0])
+    new, new_total, new_failed = load(args[1])
+    why = mismatch(old, old_failed, new, new_failed)
+    if why:
+        sys.exit(f"refusing to compare {args[0]} with {args[1]}: {why}")
+    both = sorted(old)
     print(f"old: {len(old)} queries, total {old_total or sum(old.values()):.2f}s, "
           f"median {statistics.median(old.values()):.2f}s")
     print(f"new: {len(new)} queries, total {new_total or sum(new.values()):.2f}s, "
           f"median {statistics.median(new.values()):.2f}s")
-    if added:
-        print(f"added ({len(added)}): {', '.join(added)}")
-    if dropped:
-        print(f"dropped ({len(dropped)}): {', '.join(dropped)}")
     deltas = sorted(((new[q] - old[q], q) for q in both), reverse=True)
     regress = [(d, q) for d, q in deltas if d > 0.05][:top]
     improve = [(d, q) for d, q in reversed(deltas) if d < -0.05][:top]

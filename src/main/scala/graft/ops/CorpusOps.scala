@@ -50,11 +50,6 @@ object CorpusOps {
   // rather than serve it to q_tfidf/q_bm25/q_hybrid_rrf/q_cooccur_lift.
   private val tfCache = new java.util.WeakHashMap[SparkSession,
     scala.collection.mutable.Map[String, (String, DataFrame)]]()
-  private def corpusFingerprint(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val st = p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
-    s"${st.getLen}|${st.getModificationTime}"
-  }
   private[graft] def sharedTf(s: SparkSession, dir: String): DataFrame =
     tfCache.synchronized {
       val perSession = Option(tfCache.get(s)).getOrElse {
@@ -62,7 +57,7 @@ object CorpusOps {
         tfCache.put(s, m)
         m
       }
-      val want = corpusFingerprint(s, dir)
+      val want = Tables.fingerprint(s, s"$dir/documents.parquet")
       perSession.get(dir) match {
         case Some((have, tf)) if have == want => tf
         case stale =>

@@ -364,12 +364,7 @@ object Similarity {
       : Option[String] = {
     val files = df.inputFiles
     if (files.isEmpty) return None
-    val conf = s.sparkContext.hadoopConfiguration
-    Some(files.sorted.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      s"$f:${st.getLen}:${st.getModificationTime}"
-    }.mkString(";"))
+    Some(files.sorted.map(f => s"$f:${Tables.fingerprint(s, f)}").mkString(";"))
   }
 
   def refinedCentroids(s: SparkSession, emb: DataFrame, k: Int)

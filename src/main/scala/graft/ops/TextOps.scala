@@ -1170,10 +1170,7 @@ object TextOps {
       trainerCache.put(s, m)
       m
     }
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val st = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(p)
-    val want = s"${st.getLen}|${st.getModificationTime}"
+    val want = Tables.fingerprint(s, s"$dir/documents.parquet")
     perSession.get((dir, kind)) match {
       case Some((have, merges)) if have == want => merges
       case _ =>

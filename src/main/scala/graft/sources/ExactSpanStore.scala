@@ -67,9 +67,9 @@ object ExactSpanStore {
 
   private def fingerprintOf(spark: SparkSession, sfDir: String,
       minLen: Int): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
-    val st = fs(spark, sfDir).getFileStatus(p)
-    s"v$FormatVersion|L$minLen|${p.toString}|${st.getLen}|${st.getModificationTime}"
+    val p = s"$sfDir/documents.parquet"
+    s"v$FormatVersion|L$minLen|${new org.apache.hadoop.fs.Path(p)}|" +
+      graft.Tables.fingerprint(spark, p)
   }
 
   /** The per-granularity content projection: chars = the text column,
@@ -104,22 +104,8 @@ object ExactSpanStore {
     val tmp = new org.apache.hadoop.fs.Path(
       indexDir + ".build-" + java.util.UUID.randomUUID().toString.take(8))
     wins.write.partitionBy("bucket").parquet(s"$tmp/wins")
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$tmp/_FINGERPRINT"), true)
-    try out.write(fingerprintOf(spark, sfDir, minLen).getBytes("UTF-8"))
-    finally out.close()
+    StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir, minLen))
     StoreSwap.swapIn(f, tmp, root)
-  }
-
-  private def isFresh(spark: SparkSession, indexDir: String,
-      want: String): Boolean = {
-    val f = fs(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_FINGERPRINT")
-    f.exists(marker) && {
-      val in = f.open(marker)
-      val have = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      have == want
-    }
   }
 
   /** Build iff missing or stale; post-build re-verify (swap races). */
@@ -127,12 +113,12 @@ object ExactSpanStore {
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0)
       .getOrElse(defaultIndexDir(spark, sfDir, minLen))
-    StoreSwap.sweepOrphans(fs(spark, indexDir),
-      new org.apache.hadoop.fs.Path(indexDir))
+    val f = fs(spark, indexDir)
+    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
     val want = fingerprintOf(spark, sfDir, minLen)
-    if (!isFresh(spark, indexDir, want)) {
+    if (!StoreSwap.isFresh(f, indexDir, want)) {
       build(spark, sfDir, indexDir, minLen)
-      if (!isFresh(spark, indexDir, want)) build(spark, sfDir, indexDir, minLen)
+      if (!StoreSwap.isFresh(f, indexDir, want)) build(spark, sfDir, indexDir, minLen)
     }
     indexDir
   }
@@ -146,7 +132,7 @@ object ExactSpanStore {
   def spans(spark: SparkSession, indexDir: String, docs: DataFrame,
       minLen: Int, crossDocOnly: Boolean = true): DataFrame =
     spansFromWindows(
-      spark.read.parquet(s"$indexDir/wins").select("doc_id", "pos", "h"),
+      graft.Tables.read(spark, s"$indexDir/wins").select("doc_id", "pos", "h"),
       docs, minLen, crossDocOnly)
 
   /** Probe core shared with [[IncrementalExactSpanStore]]: `wins` is

@@ -184,8 +184,7 @@ object IncrementalTextIndex {
     merged.write.partitionBy("bucket").parquet(s"$tmp/postings")
     stats.write.parquet(s"$tmp/stats")
     docstats.write.parquet(s"$tmp/docstats")
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$tmp/_FINGERPRINT"), true)
-    try out.write(s"stream-compacted|$indexDir".getBytes("UTF-8")) finally out.close()
+    StoreSwap.writeFingerprint(f, tmp, s"stream-compacted|$indexDir")
     StoreSwap.swapIn(f, tmp, root)
   }
 

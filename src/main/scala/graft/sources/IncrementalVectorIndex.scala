@@ -167,8 +167,7 @@ object IncrementalVectorIndex {
     codes.write.partitionBy("cell").parquet(s"$tmp/codes")
     cents.coalesce(1).write.parquet(s"$tmp/centroids")
     cb.coalesce(1).write.parquet(s"$tmp/codebook")
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$tmp/_FINGERPRINT"), true)
-    try out.write(s"stream-compacted|$indexDir".getBytes("UTF-8")) finally out.close()
+    StoreSwap.writeFingerprint(f, tmp, s"stream-compacted|$indexDir")
     StoreSwap.swapIn(f, tmp, root)
   }
 

@@ -59,13 +59,6 @@ object PackEncode {
     scala.collection.mutable.Map[(String, String, Option[String]),
       (String, DataFrame)]]()
 
-  private def fingerprint(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val st = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(p)
-    s"${st.getLen}|${st.getModificationTime}"
-  }
-
   private def cacheable(s: SparkSession, dir: String): Boolean = {
     val conf = s.sessionState.conf
     val budget = s.conf.getOption("spark.graft.packEncode.maxInputBytes")
@@ -99,7 +92,7 @@ object PackEncode {
       cache.put(s, m)
       m
     }
-    val want = fingerprint(s, dir)
+    val want = graft.Tables.fingerprint(s, s"$dir/documents.parquet")
     val key = (dir, mode, seed)
     perSession.get(key) match {
       case Some((have, df)) if have == want => df

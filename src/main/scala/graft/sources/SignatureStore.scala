@@ -60,9 +60,9 @@ object SignatureStore {
 
   private def fingerprintOf(spark: SparkSession, sfDir: String,
       bands: Int, rows: Int): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
-    val st = fs(spark, sfDir).getFileStatus(p)
-    s"v$FormatVersion|${bands}x$rows|${p.toString}|${st.getLen}|${st.getModificationTime}"
+    val p = s"$sfDir/documents.parquet"
+    s"v$FormatVersion|${bands}x$rows|${new org.apache.hadoop.fs.Path(p)}|" +
+      graft.Tables.fingerprint(spark, p)
   }
 
   /** Corpus shingle arrays, sorted for the verify kernel. */
@@ -121,22 +121,8 @@ object SignatureStore {
         .write.parquet(s"$tmp/arrays")
     graft.Par.inParallel(writeBuckets.toSeq :+ writeArrays: _*)
     arrays.unpersist()
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$tmp/_FINGERPRINT"), true)
-    try out.write(fingerprintOf(spark, sfDir, bands, rows).getBytes("UTF-8"))
-    finally out.close()
+    StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir, bands, rows))
     StoreSwap.swapIn(f, tmp, root)
-  }
-
-  private def isFresh(spark: SparkSession, indexDir: String,
-      want: String): Boolean = {
-    val f = fs(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_FINGERPRINT")
-    f.exists(marker) && {
-      val in = f.open(marker)
-      val have = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      have == want
-    }
   }
 
   /** Build iff missing or stale; post-build re-verify (swap races). */
@@ -145,12 +131,12 @@ object SignatureStore {
     val indexDir = Option(indexDir0)
       .getOrElse(defaultIndexDir(spark, sfDir, bands, rows))
     // sweep .old-*/.compact-* orphans from crashed/raced swaps (leak fix)
-    StoreSwap.sweepOrphans(fs(spark, indexDir),
-      new org.apache.hadoop.fs.Path(indexDir))
+    val f = fs(spark, indexDir)
+    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
     val want = fingerprintOf(spark, sfDir, bands, rows)
-    if (!isFresh(spark, indexDir, want)) {
+    if (!StoreSwap.isFresh(f, indexDir, want)) {
       build(spark, sfDir, indexDir, bands, rows)
-      if (!isFresh(spark, indexDir, want)) build(spark, sfDir, indexDir, bands, rows)
+      if (!StoreSwap.isFresh(f, indexDir, want)) build(spark, sfDir, indexDir, bands, rows)
     }
     indexDir
   }
@@ -171,9 +157,9 @@ object SignatureStore {
       minJaccard: Double, bands: Int, rows: Int,
       maxBucket: Int = 1000): DataFrame =
     matchAgainst(spark, probes, minJaccard, bands, rows, maxBucket,
-      bucketsFor = bs => spark.read.parquet(s"$indexDir/buckets")
+      bucketsFor = bs => graft.Tables.read(spark, s"$indexDir/buckets")
         .filter(col("bucket").isin(bs: _*)),
-      storeArrays = spark.read.parquet(s"$indexDir/arrays"))
+      storeArrays = graft.Tables.read(spark, s"$indexDir/arrays"))
 
   /** Layout-agnostic match core, shared with the streaming-maintained
     * sibling ([[IncrementalSignatureStore]]): `bucketsFor` returns the

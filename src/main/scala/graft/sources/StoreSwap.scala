@@ -41,6 +41,25 @@ object StoreSwap {
     }
   }
 
+  /** Write the `_FINGERPRINT` freshness marker into the staged tree
+    * `tmp`. Called last, after every table write: a tree without the
+    * marker always reads stale.
+    */
+  def writeFingerprint(f: FileSystem, tmp: Path, fingerprint: String): Unit = {
+    val out = f.create(new Path(tmp, "_FINGERPRINT"), true)
+    try out.write(fingerprint.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Whether the live tree at `root` carries the marker `want`. */
+  def isFresh(f: FileSystem, root: String, want: String): Boolean = {
+    val marker = new Path(s"$root/_FINGERPRINT")
+    f.exists(marker) && {
+      val in = f.open(marker)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString == want
+      finally in.close()
+    }
+  }
+
   /** Sweep stale `.old-*` / `.compact-*` siblings of `root` left by
     * crashed or racing swaps. Safe to call from any `ensure`: a live
     * swap's aside tree exists only for the instant between the two

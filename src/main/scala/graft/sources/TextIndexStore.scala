@@ -74,9 +74,8 @@ object TextIndexStore {
   private val FormatVersion = 2
 
   private def fingerprintOf(spark: SparkSession, sfDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
-    val st = fs(spark, sfDir).getFileStatus(p)
-    s"v$FormatVersion|${p.toString}|${st.getLen}|${st.getModificationTime}"
+    val p = s"$sfDir/documents.parquet"
+    s"v$FormatVersion|${new org.apache.hadoop.fs.Path(p)}|${graft.Tables.fingerprint(spark, p)}"
   }
 
   /** Driver-side xxhash64(term) mod Buckets — the same arithmetic the
@@ -143,24 +142,11 @@ object TextIndexStore {
       () => docstats.write.parquet(s"$tmp/docstats"))
     // no unpersist: tf is the session-shared relation (see above)
     // _FINGERPRINT is written LAST: a tree without it always reads stale
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$tmp/_FINGERPRINT"), true)
-    try out.write(fingerprintOf(spark, sfDir).getBytes("UTF-8")) finally out.close()
+    StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir))
     // A lost swap race means a concurrent builder of the same corpus won —
     // its tree is equivalent (same deterministic build); StoreSwap restores
     // or defers and ensure's post-build re-verify adjudicates.
     StoreSwap.swapIn(f, tmp, root)
-  }
-
-  private def isFresh(spark: SparkSession, indexDir: String,
-      want: String): Boolean = {
-    val f = fs(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_FINGERPRINT")
-    f.exists(marker) && {
-      val in = f.open(marker)
-      val have = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      have == want
-    }
   }
 
   /** Build iff missing or stale; returns the index dir. Re-verifies the
@@ -172,12 +158,12 @@ object TextIndexStore {
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0).getOrElse(defaultIndexDir(spark, sfDir))
     // sweep .old-*/.compact-* orphans from crashed/raced swaps (leak fix)
-    StoreSwap.sweepOrphans(fs(spark, indexDir),
-      new org.apache.hadoop.fs.Path(indexDir))
+    val f = fs(spark, indexDir)
+    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
     val want = fingerprintOf(spark, sfDir)
-    if (!isFresh(spark, indexDir, want)) {
+    if (!StoreSwap.isFresh(f, indexDir, want)) {
       build(spark, sfDir, indexDir)
-      if (!isFresh(spark, indexDir, want)) build(spark, sfDir, indexDir)
+      if (!StoreSwap.isFresh(f, indexDir, want)) build(spark, sfDir, indexDir)
     }
     indexDir
   }
@@ -192,11 +178,11 @@ object TextIndexStore {
   def bm25(spark: SparkSession, indexDir: String, qterms: Seq[String],
       k: Int = 10): DataFrame = {
     val qbuckets = qterms.map(bucketOf).distinct.map(_.toLong)
-    val postings = spark.read.parquet(s"$indexDir/postings")
+    val postings = graft.Tables.read(spark, s"$indexDir/postings")
       // bucket is the hive partition column → PartitionFilters, pruned at
       // planning; term is the sorted data column → row-group pruning
       .filter(col("bucket").isin(qbuckets: _*) && col("term").isin(qterms: _*))
-    val stats = spark.read.parquet(s"$indexDir/stats")
+    val stats = graft.Tables.read(spark, s"$indexDir/stats")
     val scored = postings
       .crossJoin(broadcast(stats))
       .withColumn("score",
@@ -226,9 +212,9 @@ object TextIndexStore {
       k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val qbuckets = qterms.map(bucketOf).distinct.map(_.toLong)
-    val tfq = spark.read.parquet(s"$indexDir/postings")
+    val tfq = graft.Tables.read(spark, s"$indexDir/postings")
       .filter(col("bucket").isin(qbuckets: _*) && col("term").isin(qterms: _*))
-    val stats = spark.read.parquet(s"$indexDir/stats")
+    val stats = graft.Tables.read(spark, s"$indexDir/stats")
     // retriever 1: BM25 (identical arithmetic to bm25() above)
     val scored = tfq
       .crossJoin(broadcast(stats))
@@ -249,7 +235,7 @@ object TextIndexStore {
     // comes from the pruned postings, n_terms from docstats — the
     // candidate side broadcasts, the doc-stats table streams
     val iq = tfq.groupBy(col("doc_id")).agg(count(lit(1)).as("inter"))
-    val docstats = spark.read.parquet(s"$indexDir/docstats")
+    val docstats = graft.Tables.read(spark, s"$indexDir/docstats")
     val jac = docstats.join(broadcast(iq), Seq("doc_id"))
       .withColumn("jac",
         col("inter").cast(DoubleType) / (col("n_terms") + lit(qterms.size) - col("inter")))

@@ -84,9 +84,8 @@ object VectorIndexStore {
   }
 
   private def fingerprintOf(spark: SparkSession, sfDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$sfDir/embeddings.parquet")
-    val st = fs(spark, sfDir).getFileStatus(p)
-    s"v$FormatVersion|${p.toString}|${st.getLen}|${st.getModificationTime}"
+    val p = s"$sfDir/embeddings.parquet"
+    s"v$FormatVersion|${new org.apache.hadoop.fs.Path(p)}|${graft.Tables.fingerprint(spark, p)}"
   }
 
   /** Build (or rebuild) the index: one clustering pass (the deterministic
@@ -135,21 +134,8 @@ object VectorIndexStore {
       () => centDf.coalesce(1).write.parquet(s"$tmp/centroids"),
       () => cbDf.coalesce(1).write.parquet(s"$tmp/codebook"))
     assigned.unpersist()
-    val out = f.create(new org.apache.hadoop.fs.Path(s"$tmp/_FINGERPRINT"), true)
-    try out.write(fingerprintOf(spark, sfDir).getBytes("UTF-8")) finally out.close()
+    StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir))
     StoreSwap.swapIn(f, tmp, root)
-  }
-
-  private def isFresh(spark: SparkSession, indexDir: String,
-      want: String): Boolean = {
-    val f = fs(spark, indexDir)
-    val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_FINGERPRINT")
-    f.exists(marker) && {
-      val in = f.open(marker)
-      val have = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      have == want
-    }
   }
 
   /** Build iff missing or stale; returns the index dir (post-build
@@ -160,12 +146,12 @@ object VectorIndexStore {
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0).getOrElse(defaultIndexDir(spark, sfDir))
     // sweep .old-*/.compact-* orphans from crashed/raced swaps (leak fix)
-    StoreSwap.sweepOrphans(fs(spark, indexDir),
-      new org.apache.hadoop.fs.Path(indexDir))
+    val f = fs(spark, indexDir)
+    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
     val want = fingerprintOf(spark, sfDir)
-    if (!isFresh(spark, indexDir, want)) {
+    if (!StoreSwap.isFresh(f, indexDir, want)) {
       build(spark, sfDir, indexDir)
-      if (!isFresh(spark, indexDir, want)) build(spark, sfDir, indexDir)
+      if (!StoreSwap.isFresh(f, indexDir, want)) build(spark, sfDir, indexDir)
     }
     indexDir
   }
@@ -174,7 +160,7 @@ object VectorIndexStore {
     * (NearestCells tie-breaks by cell id, so order is cosmetic).
     */
   def loadCentroids(spark: SparkSession, indexDir: String): Seq[(Int, Seq[Float])] =
-    spark.read.parquet(s"$indexDir/centroids")
+    graft.Tables.read(spark, s"$indexDir/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toIndexedSeq))
       .sortBy(_._1).toIndexedSeq
 
@@ -188,7 +174,7 @@ object VectorIndexStore {
   def ivfTopK(spark: SparkSession, indexDir: String, nQueries: Int, k: Int,
       nprobe: Int = 4): DataFrame = {
     val cents = loadCentroids(spark, indexDir)
-    val lists = spark.read.parquet(s"$indexDir/lists")
+    val lists = graft.Tables.read(spark, s"$indexDir/lists")
     val q = lists.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("a_emb"),
         col("norm").as("a_norm"),
@@ -250,7 +236,7 @@ object VectorIndexStore {
       minCos: Double, nprobe: Int = 4,
       broadcastEvalRows: Long = 100000L): DataFrame = {
     val cents = loadCentroids(spark, indexDir)
-    val lists = spark.read.parquet(s"$indexDir/lists")
+    val lists = graft.Tables.read(spark, s"$indexDir/lists")
       .filter(col("norm") > 0)
     val ev = lists.filter(col("vec_id") % 97 === 0)
       .select(col("vec_id").as("eval_id"), col("embedding").as("a_emb"),
@@ -302,7 +288,7 @@ object VectorIndexStore {
       minMargin: Double = 1.05, nprobe: Int = NList,
       broadcastSrcRows: Long = 100000L): DataFrame = {
     val cents = loadCentroids(spark, indexDir)
-    val lists = spark.read.parquet(s"$indexDir/lists")
+    val lists = graft.Tables.read(spark, s"$indexDir/lists")
       .filter(col("norm") > 0)
     val src = lists.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id").as("src_id"), col("embedding").as("a_emb"),
@@ -336,12 +322,12 @@ object VectorIndexStore {
   def ivfPqTopK(spark: SparkSession, indexDir: String, nQueries: Int, k: Int,
       nprobe: Int = 4, rerank: Int = 4): DataFrame = {
     val cents = loadCentroids(spark, indexDir)
-    val lists = spark.read.parquet(s"$indexDir/lists")
+    val lists = graft.Tables.read(spark, s"$indexDir/lists")
     val q = lists.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"),
         VectorFunctions.nearestCells(col("embedding"), cents, nprobe).as("cells"))
-    val cbDf = spark.read.parquet(s"$indexDir/codebook")
+    val cbDf = graft.Tables.read(spark, s"$indexDir/codebook")
     val subDim = 64 / NSub
     val lut = q.select(col("q_id"), col("q_emb")).crossJoin(broadcast(cbDf))
       .withColumn("pdot",
@@ -352,7 +338,7 @@ object VectorIndexStore {
     val qcells = q.select(col("q_id"), explode(col("cells")).as("cell"))
     val probed = qcells.select(col("cell")).distinct()
       .collect().map(_.getInt(0).toLong).sorted
-    val codes = spark.read.parquet(s"$indexDir/codes")
+    val codes = graft.Tables.read(spark, s"$indexDir/codes")
       .filter(col("cell").isin(probed: _*))
     val cand = broadcast(qcells).join(codes, Seq("cell"))
       .select(col("q_id"), col("vec_id").as("n_id"),
