@@ -507,13 +507,15 @@ object CorpusOps {
               SELECT doc_id, term, tf, df, score FROM scored WHERE rn <= 3
               ORDER BY doc_id, term""")),
 
-    // Corpus-wide top-100 tokens — the Zipf head. Partial aggregation
-    // combines per-partition counts map-side; the deterministic
+    // Corpus-wide top-100 tokens — the Zipf head. A term's corpus count
+    // is the sum of its per-doc tf, so this reads the session-shared tf
+    // relation instead of re-tokenizing the corpus; partial aggregation
+    // combines per-partition sums map-side, and the deterministic
     // (cnt DESC, term ASC) key makes the cut stable under ties.
     Q("q_token_freq",
       (s, dir) =>
-        tokens(t(s, dir, "documents"))
-          .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
+        sharedTf(s, dir)
+          .groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
           .orderBy(col("cnt").desc, col("term"))
           .limit(100),
       Some("""SELECT term, count(*) AS cnt
@@ -853,12 +855,12 @@ object CorpusOps {
 
     // BM25 over the STORED inverted index (sources.TextIndexStore) — the
     // lake-scale retrieval shape: the index (postings hive-partitioned on
-    // xxhash64(term) mod 64, dl/df denormalized onto each posting, 1-row
-    // stats table) is built ONCE per corpus, and the query is a
-    // partition-PRUNED postings scan (only the query terms' buckets — the
-    // plan's PartitionFilters, pinned by RetrievalIndexSpec) times a
-    // broadcast of stats, with ZERO corpus access and zero joins against
-    // doc- or term-sized tables. Shares q_bm25's oracle verbatim: the
+    // xxhash64(term) mod 64, dl/df denormalized onto each posting,
+    // n_docs/avgdl in a driver-read sidecar) is built ONCE per corpus, and
+    // the query is one partition-PRUNED postings scan (only the query
+    // terms' buckets — the plan's PartitionFilters, pinned by
+    // RetrievalIndexSpec) and one aggregate, with ZERO corpus access, no
+    // broadcast and no joins. Shares q_bm25's oracle verbatim: the
     // oracle proves the stored path returns bit-identical scores to the
     // in-query path.
     Q("q_bm25_stored",
@@ -1082,10 +1084,9 @@ object CorpusOps {
               ORDER BY rrf DESC, doc_id LIMIT 10""")),
 
     // Hybrid RRF over the STORED index (sources.TextIndexStore) — both
-    // retrievers consume the same partition-pruned postings scan; the
-    // Jaccard denominator joins the doc-keyed docstats table against the
-    // broadcast df-bounded candidate set. Zero corpus access (pinned by
-    // RetrievalIndexSpec). Shares q_hybrid_rrf's oracle verbatim — the
+    // retrievers come from ONE per-doc aggregate of the partition-pruned
+    // postings scan (the Jaccard denominator n_terms rides on each
+    // posting). Zero corpus access (pinned by RetrievalIndexSpec). Shares q_hybrid_rrf's oracle verbatim — the
     // oracle proves the stored path returns the identical fused ranking.
     Q("q_hybrid_rrf_stored",
       (s, dir) => {

@@ -47,23 +47,11 @@ object ExactSpanStore {
 
   val Buckets = 64
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private val FormatVersion = 1
 
-  /** Same config seam as the sibling stores: `graft.index.dir`, else
-    * `spark.local.dir`, else /tmp.
-    */
-  def defaultIndexDir(spark: SparkSession, sfDir: String, minLen: Int): String = {
-    val root = spark.conf.getOption("graft.index.dir")
-      .orElse(spark.sparkContext.getConf.getOption("spark.local.dir")
-        .map(_.split(",")(0).stripSuffix("/")))
-      .getOrElse("/tmp")
-    root + s"/graft_span_index_L$minLen/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-  }
+  /** `<root>/graft_span_index_L<minLen>/<sfDir>` (StoreSwap.defaultDir). */
+  def defaultIndexDir(spark: SparkSession, sfDir: String, minLen: Int): String =
+    StoreSwap.defaultDir(spark, s"graft_span_index_L$minLen", sfDir)
 
   private def fingerprintOf(spark: SparkSession, sfDir: String,
       minLen: Int): String = {
@@ -99,28 +87,21 @@ object ExactSpanStore {
     val wins = bucketedWindows(graft.Tables.load(spark, sfDir, "documents"), minLen)
       .transform(graft.Par.byKey(col("bucket")))
       .sortWithinPartitions(col("h"), col("doc_id"), col("pos"))
-    val f = fs(spark, indexDir)
+    val f = StoreSwap.fs(spark, indexDir)
     val root = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      indexDir + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+    val tmp = StoreSwap.stagingPath(indexDir)
     wins.write.partitionBy("bucket").parquet(s"$tmp/wins")
     StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir, minLen))
     StoreSwap.swapIn(f, tmp, root)
   }
 
-  /** Build iff missing or stale; post-build re-verify (swap races). */
+  /** Build iff missing or stale (StoreSwap.ensure); returns the index dir. */
   def ensure(spark: SparkSession, sfDir: String, minLen: Int,
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0)
       .getOrElse(defaultIndexDir(spark, sfDir, minLen))
-    val f = fs(spark, indexDir)
-    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
-    val want = fingerprintOf(spark, sfDir, minLen)
-    if (!StoreSwap.isFresh(f, indexDir, want)) {
-      build(spark, sfDir, indexDir, minLen)
-      if (!StoreSwap.isFresh(f, indexDir, want)) build(spark, sfDir, indexDir, minLen)
-    }
-    indexDir
+    StoreSwap.ensure(spark, indexDir, fingerprintOf(spark, sfDir, minLen))(
+      build(spark, sfDir, indexDir, minLen))
   }
 
   /** Exact duplicated-substring spans computed FROM THE STORE: the

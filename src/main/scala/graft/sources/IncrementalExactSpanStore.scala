@@ -90,8 +90,7 @@ object IncrementalExactSpanStore {
     * [[IncrementalSignatureStore.compact]] contract, same reasoning.
     */
   def compact(spark: SparkSession, indexDir: String): Unit = {
-    val f = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = StoreSwap.fs(spark, indexDir)
     StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
     if (!f.exists(new org.apache.hadoop.fs.Path(s"$indexDir/wins"))) return
     // hive partition column reads back with an inferred numeric type —

@@ -125,8 +125,7 @@ object IncrementalSignatureStore {
     * converges.
     */
   def compact(spark: SparkSession, indexDir: String): Unit = {
-    val f = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = StoreSwap.fs(spark, indexDir)
     // sweep .old-*/.compact-* orphans from crashed/raced swaps (leak fix);
     // the caller has quiesced (contract above), so no staged sibling is live
     StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))

@@ -141,8 +141,8 @@ object IncrementalTextIndex {
   }
 
   /** Compact the merge-on-read deltas into the BATCH index layout
-    * (TextIndexStore's postings/stats/docstats) WITHOUT re-reading the
-    * corpus — the LSM fold the header promises. After compaction the
+    * (TextIndexStore's v3 postings + `_STATS` sidecar) WITHOUT re-reading
+    * the corpus — the LSM fold the header promises. After compaction the
     * store is served by the exact read path the stored-index queries use
     * (`TextIndexStore.bm25` / `hybridRrf`, i.e. q_bm25_stored /
     * q_hybrid_rrf_stored), with read cost back to one pruned scan
@@ -166,26 +166,21 @@ object IncrementalTextIndex {
     val stats = spark.read.parquet(s"$indexDir/corpusstats")
       .agg(sum(col("n_docs")).as("n_docs"),
         (sum(col("sum_dl")).cast(DoubleType) / sum(col("n_docs"))).as("avgdl"))
-    val merged = postings.select(col("term"), col("doc_id"), col("tf"),
-        col("dl"), col("bucket"))
+    // each doc lives in exactly one batch, so its distinct-term count
+    // folds without double-count: n_terms = its posting count
+    val nTerms = postings.groupBy(col("doc_id")).agg(count(lit(1)).as("n_terms"))
+    val merged = postings
+      .join(nTerms, Seq("doc_id"))
       .join(dfAll, Seq("term"))
+      .select("term", "doc_id", "tf", "dl", "n_terms", "df", "bucket")
       .transform(graft.Par.byKey(col("bucket")))
       .sortWithinPartitions(col("term"), col("doc_id"))
-    // each doc lives in exactly one batch, so per-doc stats fold without
-    // double-count: n_terms = its posting count, dl rides on every posting
-    val docstats = postings.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"), max(col("dl")).as("dl"))
-      .repartition(1).sortWithinPartitions(col("doc_id"))
-    val f = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      storeDir + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+    val f = StoreSwap.fs(spark, storeDir)
+    val tmp = StoreSwap.stagingPath(storeDir)
     merged.write.partitionBy("bucket").parquet(s"$tmp/postings")
-    stats.write.parquet(s"$tmp/stats")
-    docstats.write.parquet(s"$tmp/docstats")
+    TextIndexStore.writeStats(f, tmp, stats.head())
     StoreSwap.writeFingerprint(f, tmp, s"stream-compacted|$indexDir")
-    StoreSwap.swapIn(f, tmp, root)
+    StoreSwap.swapIn(f, tmp, new org.apache.hadoop.fs.Path(storeDir))
   }
 
   /** Wire a (doc_id, text) document stream into continuous index

@@ -158,11 +158,9 @@ object IncrementalVectorIndex {
       .sortWithinPartitions(col("vec_id"))
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val cb = spark.read.parquet(s"$indexDir/codebook")
-    val f = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = StoreSwap.fs(spark, storeDir)
     val root = new org.apache.hadoop.fs.Path(storeDir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      storeDir + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+    val tmp = StoreSwap.stagingPath(storeDir)
     lists.write.partitionBy("cell").parquet(s"$tmp/lists")
     codes.write.partitionBy("cell").parquet(s"$tmp/codes")
     cents.coalesce(1).write.parquet(s"$tmp/centroids")

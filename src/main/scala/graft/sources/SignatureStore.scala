@@ -39,22 +39,10 @@ object SignatureStore {
 
   val Buckets = 64
 
-  /** Same config seam as the text index: `graft.index.dir`, else
-    * `spark.local.dir`, else /tmp.
-    */
+  /** `<root>/graft_sig_index_<bands>x<rows>/<sfDir>` (StoreSwap.defaultDir). */
   def defaultIndexDir(spark: SparkSession, sfDir: String,
-      bands: Int, rows: Int): String = {
-    val root = spark.conf.getOption("graft.index.dir")
-      .orElse(spark.sparkContext.getConf.getOption("spark.local.dir")
-        .map(_.split(",")(0).stripSuffix("/")))
-      .getOrElse("/tmp")
-    root + s"/graft_sig_index_${bands}x$rows/" +
-      sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-  }
-
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      bands: Int, rows: Int): String =
+    StoreSwap.defaultDir(spark, s"graft_sig_index_${bands}x$rows", sfDir)
 
   private val FormatVersion = 1
 
@@ -100,10 +88,9 @@ object SignatureStore {
       bands: Int, rows: Int): Unit = {
     val arrays = sortedArrays(graft.Tables.load(spark, sfDir, "documents"))
       .persist()
-    val f = fs(spark, indexDir)
+    val f = StoreSwap.fs(spark, indexDir)
     val root = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      indexDir + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+    val tmp = StoreSwap.stagingPath(indexDir)
     // rows == 0 (exact regime): the probe path never reads buckets —
     // every pair is a candidate — so writing the universal-bucket table
     // would be a pure wasted corpus shuffle + parquet write
@@ -125,20 +112,13 @@ object SignatureStore {
     StoreSwap.swapIn(f, tmp, root)
   }
 
-  /** Build iff missing or stale; post-build re-verify (swap races). */
+  /** Build iff missing or stale (StoreSwap.ensure); returns the index dir. */
   def ensure(spark: SparkSession, sfDir: String, bands: Int, rows: Int,
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0)
       .getOrElse(defaultIndexDir(spark, sfDir, bands, rows))
-    // sweep .old-*/.compact-* orphans from crashed/raced swaps (leak fix)
-    val f = fs(spark, indexDir)
-    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
-    val want = fingerprintOf(spark, sfDir, bands, rows)
-    if (!StoreSwap.isFresh(f, indexDir, want)) {
-      build(spark, sfDir, indexDir, bands, rows)
-      if (!StoreSwap.isFresh(f, indexDir, want)) build(spark, sfDir, indexDir, bands, rows)
-    }
-    indexDir
+    StoreSwap.ensure(spark, indexDir, fingerprintOf(spark, sfDir, bands, rows))(
+      build(spark, sfDir, indexDir, bands, rows))
   }
 
   /** Near-dup matches of a probe batch against the STORED corpus:

@@ -63,25 +63,14 @@ object VectorIndexStore {
   val NSub = 8
   val NCent = 16
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Bumped when the index LAYOUT changes; part of the fingerprint so an
     * old-layout index reads as stale instead of failing reads.
     */
   private val FormatVersion = 1
 
-  /** Same config seam as TextIndexStore.defaultIndexDir: root from
-    * `graft.index.dir`, else the first `spark.local.dir`, else /tmp.
-    */
-  def defaultIndexDir(spark: SparkSession, sfDir: String): String = {
-    val root = spark.conf.getOption("graft.index.dir")
-      .orElse(spark.sparkContext.getConf.getOption("spark.local.dir")
-        .map(_.split(",")(0).stripSuffix("/")))
-      .getOrElse("/tmp")
-    root + "/graft_vector_index/" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-  }
+  /** `<root>/graft_vector_index/<sfDir>` (StoreSwap.defaultDir). */
+  def defaultIndexDir(spark: SparkSession, sfDir: String): String =
+    StoreSwap.defaultDir(spark, "graft_vector_index", sfDir)
 
   private def fingerprintOf(spark: SparkSession, sfDir: String): String = {
     val p = s"$sfDir/embeddings.parquet"
@@ -122,10 +111,9 @@ object VectorIndexStore {
 
     // stage + atomic swap (the TextIndexStore convention); _FINGERPRINT
     // written LAST so a tree without it always reads stale
-    val f = fs(spark, indexDir)
+    val f = StoreSwap.fs(spark, indexDir)
     val root = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(
-      indexDir + ".build-" + java.util.UUID.randomUUID().toString.take(8))
+    val tmp = StoreSwap.stagingPath(indexDir)
     // four independent writes (one persisted relation, disjoint staging
     // paths) — overlapped (Par.inParallel)
     graft.Par.inParallel(
@@ -138,22 +126,12 @@ object VectorIndexStore {
     StoreSwap.swapIn(f, tmp, root)
   }
 
-  /** Build iff missing or stale; returns the index dir (post-build
-    * fingerprint re-verified, one retry — same contract as the text
-    * index).
-    */
+  /** Build iff missing or stale (StoreSwap.ensure); returns the index dir. */
   def ensure(spark: SparkSession, sfDir: String,
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0).getOrElse(defaultIndexDir(spark, sfDir))
-    // sweep .old-*/.compact-* orphans from crashed/raced swaps (leak fix)
-    val f = fs(spark, indexDir)
-    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
-    val want = fingerprintOf(spark, sfDir)
-    if (!StoreSwap.isFresh(f, indexDir, want)) {
-      build(spark, sfDir, indexDir)
-      if (!StoreSwap.isFresh(f, indexDir, want)) build(spark, sfDir, indexDir)
-    }
-    indexDir
+    StoreSwap.ensure(spark, indexDir, fingerprintOf(spark, sfDir))(
+      build(spark, sfDir, indexDir))
   }
 
   /** Stored centroids, collect()ed — bounded at nlist x dim, cell-sorted

@@ -1,7 +1,14 @@
 package graft.sources
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkSpec
+import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** The stored-index retrieval contract (sources.TextIndexStore):
   *
@@ -13,8 +20,10 @@ import org.apache.spark.sql.functions._
   *  3. the driver-side bucket arithmetic matches the executor-side
   *     `pmod(xxhash64(term), 64)` exactly (else pruning would silently
   *     drop postings — wrong answers, not just slow ones);
-  *  4. a stale index (corpus fingerprint changed) rebuilds; a fresh one
-  *     does not.
+  *  4. a stale index (corpus fingerprint or layout version changed)
+  *     rebuilds; a fresh one does not;
+  *  5. a stored query is one pruned postings scan and one aggregate: no
+  *     broadcast, no doc-stats table, a bounded number of Spark jobs.
   */
 class RetrievalIndexSpec extends SparkSpec {
 
@@ -94,5 +103,86 @@ class RetrievalIndexSpec extends SparkSpec {
     TextIndexStore.ensure(spark, sf0001) // second call: no rebuild
     val after = fs.getFileStatus(p).getModificationTime
     assert(before == after, "fresh index was rebuilt")
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides, so the count is exactly the body's).
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerBusDrain(sc); n.get } finally sc.removeSparkListener(l)
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private val qterms = Seq("hash", "join", "vector")
+
+  test("stored BM25 executes without a BroadcastExchange") {
+    val df = TextIndexStore.bm25(spark, idx, qterms)
+    df.collect()
+    // after execution the adaptive plan string is the final plan
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("isFinalPlan=true") && !plan.contains("BroadcastExchange"),
+      s"stored BM25 broadcasts:\n$plan")
+  }
+
+  test("stored hybrid RRF never scans docstats; the v3 tree has no docstats table") {
+    val df = TextIndexStore.hybridRrf(spark, idx, qterms)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("docstats") && !plan.contains("BroadcastExchange"), plan)
+    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new Path(s"$idx/docstats")) && !fs.exists(new Path(s"$idx/stats")))
+  }
+
+  test("stored BM25 runs at most 2 jobs and hybrid RRF at most 3") {
+    noop(TextIndexStore.bm25(spark, idx, qterms))
+    noop(TextIndexStore.hybridRrf(spark, idx, qterms))
+    val bm = jobsDuring(noop(TextIndexStore.bm25(spark, idx, qterms)))
+    assert(bm <= 2, s"bm25 ran $bm jobs")
+    val rrf = jobsDuring(noop(TextIndexStore.hybridRrf(spark, idx, qterms)))
+    assert(rrf <= 3, s"hybridRrf ran $rrf jobs")
+  }
+
+  test("the stats sidecar holds the aggregate's n_docs and avgdl bit for bit") {
+    val perDoc = graft.Tables.load(spark, sf0001, "documents")
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .filter(col("term") =!= "")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+    val agg = perDoc.agg(count(lit(1)), (sum(col("dl")).cast(DoubleType) / count(lit(1))))
+      .head()
+    val (nDocs, avgdl) = TextIndexStore.readStats(spark, idx)
+    assert(nDocs == agg.getLong(0))
+    assert(java.lang.Double.doubleToRawLongBits(avgdl) ==
+      java.lang.Double.doubleToRawLongBits(agg.getDouble(1)), s"$avgdl vs ${agg.getDouble(1)}")
+  }
+
+  test("a v2-layout store reads as stale and rebuilds to v3") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_text_v2").toString + "/idx"
+    TextIndexStore.ensure(spark, sf0001, dir)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new Path(s"$dir/_FINGERPRINT")
+    def read(p: Path) = StoreSwap.readText(fs, p).get
+    val v3 = read(marker)
+    assert(v3.startsWith("v3|"), v3)
+    // turn the tree into what the v2 build left: docstats/ and stats/
+    // tables, no sidecar, a v2 marker
+    fs.delete(new Path(s"$dir/_STATS"), false)
+    spark.range(1).toDF("doc_id").write.parquet(s"$dir/docstats")
+    spark.range(1).toDF("n_docs").write.parquet(s"$dir/stats")
+    StoreSwap.writeText(fs, marker, "v2" + v3.stripPrefix("v3"))
+    TextIndexStore.ensure(spark, sf0001, dir)
+    assert(read(marker) == v3)
+    assert(fs.exists(new Path(s"$dir/_STATS")))
+    assert(!fs.exists(new Path(s"$dir/docstats")) && !fs.exists(new Path(s"$dir/stats")))
+    assert(TextIndexStore.bm25(spark, dir, qterms).collect().toSeq ==
+      TextIndexStore.bm25(spark, idx, qterms).collect().toSeq)
   }
 }
