@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // local mode: generous broadcast budget keeps dim joins shuffle-free
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // exercise the injected function/strategy path, same as a cluster would
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus("4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM (codegen, scheduler, FS metadata) outside the timings so
     // the first query doesn't absorb ~4s of one-time cost.

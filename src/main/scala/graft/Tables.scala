@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -36,10 +34,8 @@ object Tables {
     s"${st.getLen}|${st.getModificationTime}"
   }
 
-  // per session object (a stopped session's entries become collectable):
-  // path -> (fingerprint, schema)
-  private val schemas = new java.util.WeakHashMap[SparkSession,
-    ConcurrentHashMap[String, (String, StructType)]]()
+  // path -> (fingerprint, schema), per session
+  private[graft] val schemas = new SessionMemo[String, StructType]()
 
   /** The cached schema of `path`, from `infer` on a miss or a moved
     * fingerprint; None when the path cannot be stat'ed, so that the plain
@@ -47,20 +43,10 @@ object Tables {
     */
   private def schemaOf(spark: SparkSession, path: String)(
       infer: => StructType): Option[StructType] = {
-    val want = try Some(fingerprint(spark, path))
+    val fp = try Some(fingerprint(spark, path))
       catch { case _: java.io.IOException => None }
-    want.map { fp =>
-      val perSession = schemas.synchronized {
-        schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
-      }
-      Option(perSession.get(path)) match {
-        case Some((have, s)) if have == fp => s
-        case _ =>
-          val s = infer // after the stat: a rewrite in between moves the key
-          perSession.put(path, (fp, s))
-          s
-      }
-    }
+    // infer runs after the stat: a rewrite in between moves the key
+    fp.map(f => schemas(spark, path, Some(f))(infer))
   }
 
   private def readWith(spark: SparkSession, path: String,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -23,15 +22,7 @@ object Verify {
           s"outside the filter (${existing.take(5).mkString(", ")} ...) whose " +
           "oracle entries this run would drop")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // exercise the injected function/strategy path, same as a cluster would
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val spark = GraftSession.builder(GraftSession.cpus("4"))
       // plan-fingerprint stability: FileScan metadata strings truncate at
       // spark.sql.maxMetadataStringLength CHARS before normalization can
       // strip expression-id digits — and exprIds grow with session query
@@ -44,7 +35,6 @@ object Verify {
       // exprId digit-width of everything before it — observed round 7 as
       // content-only hash drift on q_sim_topk_ivf / q_ivfpq_topk.
       .config("spark.sql.maxMetadataStringLength", "262144")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -347,18 +347,17 @@ object Similarity {
     * re-derived the same k-list over the same embedding pool (two
     * collects + one distributed per-dim mean pass per call, ~0.3 s at
     * sf0.1). The result is a deterministic, kilobyte-scale driver value,
-    * so it memoizes per session under the sharedTf discipline: keyed on
-    * k + the ANALYZED PLAN (sameResult — a filtered or otherwise
-    * different pool never collides) + the (path, len, mtime) fingerprint
-    * of every input file (a regenerated corpus evicts, never serves
-    * stale centroids). Non-file relations (checkpoints, test frames)
-    * skip the memo entirely. First consumer pays the build inside its
-    * own timed region.
+    * so it memoizes per session in a [[graft.SessionMemo]]: keyed on k +
+    * the canonicalized ANALYZED PLAN (what sameResult compares — a
+    * filtered or otherwise different pool never collides) and guarded by
+    * the (path, len, mtime) fingerprint of every input file (a regenerated
+    * corpus evicts, never serves stale centroids). Non-file relations
+    * (checkpoints, test frames) skip the memo entirely. First consumer
+    * pays the build inside its own timed region.
     */
-  private val centroidCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.ListBuffer[
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int,
-        String, Seq[(Int, Seq[Float])])]]()
+  private[graft] val centroidMemo = new graft.SessionMemo[
+    (Int, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
+    Seq[(Int, Seq[Float])]]()
 
   private def inputFingerprint(s: SparkSession, df: DataFrame)
       : Option[String] = {
@@ -369,27 +368,8 @@ object Similarity {
 
   def refinedCentroids(s: SparkSession, emb: DataFrame, k: Int)
       : Seq[(Int, Seq[Float])] =
-    inputFingerprint(s, emb) match {
-      case None => buildCentroids(s, emb, k)
-      case Some(fp) => centroidCache.synchronized {
-        val entries = Option(centroidCache.get(s)).getOrElse {
-          val l = scala.collection.mutable.ListBuffer.empty[
-            (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int,
-              String, Seq[(Int, Seq[Float])])]
-          centroidCache.put(s, l)
-          l
-        }
-        val plan = emb.queryExecution.analyzed
-        entries.find(e =>
-            e._2 == k && e._3 == fp && e._1.sameResult(plan)) match {
-          case Some(e) => e._4
-          case None =>
-            val r = buildCentroids(s, emb, k)
-            entries += ((plan, k, fp, r))
-            r
-        }
-      }
-    }
+    centroidMemo(s, (k, emb.queryExecution.analyzed.canonicalized),
+      inputFingerprint(s, emb))(buildCentroids(s, emb, k))
 
   private def buildCentroids(s: SparkSession, emb: DataFrame, k: Int)
       : Seq[(Int, Seq[Float])] = {

@@ -1149,8 +1149,8 @@ object TextOps {
         ORDER BY d.doc_id"""
 
   /** Session memo of a LEARNED MERGE TABLE keyed on (corpus dir, trainer
-    * kind) and guarded by the (len, mtime) corpus fingerprint — the
-    * sharedTf convention on a driver-side value: three queries re-learn
+    * kind) and guarded by the (len, mtime) corpus fingerprint — a
+    * [[graft.SessionMemo]] over a driver-side value: three queries re-learn
     * the full-charset table (q_bpe_train_full, q_bpe_train_encode_full,
     * q_pack_shards_trained_full) and two the letters table (q_bpe_train,
     * q_bpe_train_encode), each paying its own full-corpus histogram
@@ -1158,27 +1158,13 @@ object TextOps {
     * result. First consumer pays the histogram inside its own timed
     * region; the memo holds kilobytes.
     */
-  private val trainerCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[(String, String),
-      (String, Seq[(Int, String, String, Long)])]]()
+  private[graft] val mergeMemo =
+    new graft.SessionMemo[(String, String), Seq[(Int, String, String, Long)]]()
   private def memoMerges(s: SparkSession, dir: String, kind: String)(
       build: => Seq[(Int, String, String, Long)])
-      : Seq[(Int, String, String, Long)] = trainerCache.synchronized {
-    val perSession = Option(trainerCache.get(s)).getOrElse {
-      val m = scala.collection.mutable.Map
-        .empty[(String, String), (String, Seq[(Int, String, String, Long)])]
-      trainerCache.put(s, m)
-      m
-    }
-    val want = Tables.fingerprint(s, s"$dir/documents.parquet")
-    perSession.get((dir, kind)) match {
-      case Some((have, merges)) if have == want => merges
-      case _ =>
-        val merges = build
-        perSession((dir, kind)) = (want, merges)
-        merges
-    }
-  }
+      : Seq[(Int, String, String, Long)] =
+    mergeMemo(s, (dir, kind),
+      Some(Tables.fingerprint(s, s"$dir/documents.parquet")))(build)
 
   /** The Spark half the two full-charset trainer queries share: the
     * bounded unit histogram (one distributed aggregation over the folded

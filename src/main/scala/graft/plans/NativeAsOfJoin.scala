@@ -171,7 +171,10 @@ case class AsOfJoinExec(
 }
 
 /** Public wrapper: as-of join via the native operator. Right side is
-  * re-aliased first so self-joins can't collide attribute ids.
+  * re-aliased first so self-joins can't collide attribute ids. The
+  * session must run [[graft.functions.GraftExtensions]] (as
+  * [[graft.GraftSession]] builds it), which plans the node and pushes
+  * filters through it; the caller's session state is never modified.
   */
 object NativeAsOfJoin {
 
@@ -187,12 +190,8 @@ object NativeAsOfJoin {
       throw new IllegalArgumentException(
         s"direction must be backward|forward|nearest, got $direction")
     val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsOf))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsOf
+    require(spark.sessionState.planner.strategies.contains(AsOfJoinStrategy),
+      "NativeAsOfJoin needs a session built with graft.functions.GraftExtensions")
     // fresh exprIds on the right side (safe under self-join)
     val rSel = ((keys :+ rightTs) ++ rightValues ++ rightTieBreak).distinct
     val rAliased = rightDf.select(rSel.map(c => col(c).as(s"__r_$c")): _*)

@@ -26,20 +26,19 @@ import org.apache.spark.sql.functions._
   * corpus runs ~5 text chars per token at ~3-4x parquet compression, so
   * the checkpoint is roughly 2-3x the parquet bytes per layout, two
   * layouts per mode worst case. The cache is therefore SIZE-CONDITIONAL
-  * on the same budget form sharedTf uses
-  * (advisoryPartitionSizeInBytes x shuffle width x 4 — 8 GiB of input
-  * at the local defaults, terabytes on a wide cluster; overridable via
-  * spark.graft.packEncode.maxInputBytes). A corpus over budget gets NO
-  * session-pinned checkpoint: [[offsets]]/[[encoded]] return None and
-  * every consumer recomputes its own offsets exactly as before this
-  * round — the staged-offsets form (writeBatchResumable's `_offsets`
-  * dir) is the 100 TB answer.
+  * on [[graft.SessionMemo.inputBudget]], the budget sharedTf uses
+  * (overridable via spark.graft.packEncode.maxInputBytes). A corpus over
+  * budget gets NO session-pinned checkpoint: [[offsets]]/[[encoded]]
+  * return None and every consumer recomputes its own offsets exactly as
+  * before this round — the staged-offsets form (writeBatchResumable's
+  * `_offsets` dir) is the 100 TB answer.
   *
-  * Keyed on the session object via WeakHashMap and guarded by the
-  * (len, mtime) corpus fingerprint, both per the CorpusOps.sharedTf
-  * convention: a regenerated test corpus must evict, never serve stale
-  * offsets. First consumer pays the build inside its own timed region —
-  * nothing is precomputed outside a query.
+  * Held in a [[graft.SessionMemo]] guarded by the (len, mtime) corpus
+  * fingerprint: a regenerated test corpus must evict, never serve stale
+  * offsets. Stale entries are dropped, not unpersisted: localCheckpoint
+  * blocks are freed by the ContextCleaner once unreferenced. First
+  * consumer pays the build inside its own timed region — nothing is
+  * precomputed outside a query.
   */
 object PackEncode {
 
@@ -55,18 +54,14 @@ object PackEncode {
       s"unknown pack-encode mode: $other")
   }
 
-  private val cache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[(String, String, Option[String]),
-      (String, DataFrame)]]()
+  // (dir, mode, seed) -> offsets relation, per session
+  private[graft] val memo =
+    new graft.SessionMemo[(String, String, Option[String]), DataFrame]()
 
-  private def cacheable(s: SparkSession, dir: String): Boolean = {
-    val conf = s.sessionState.conf
-    val budget = s.conf.getOption("spark.graft.packEncode.maxInputBytes")
-      .map(_.toLong)
-      .getOrElse(conf.getConf(org.apache.spark.sql.internal.SQLConf
-        .ADVISORY_PARTITION_SIZE_IN_BYTES) * conf.numShufflePartitions * 4)
-    graft.Par.tableBytes(s, dir, "documents") <= budget
-  }
+  private def cacheable(s: SparkSession, dir: String): Boolean =
+    graft.Par.tableBytes(s, dir, "documents") <=
+      s.conf.getOption("spark.graft.packEncode.maxInputBytes").map(_.toLong)
+        .getOrElse(graft.SessionMemo.inputBudget(s))
 
   /** The session-shared offsets relation of the base corpus under
     * `mode`: (doc_id, tids, n_tokens, offset), n_tokens > 0, in doc_id
@@ -85,35 +80,21 @@ object PackEncode {
   }
 
   private def cachedOffsets(s: SparkSession, dir: String, mode: String,
-      seed: Option[String]): DataFrame = cache.synchronized {
-    val perSession = Option(cache.get(s)).getOrElse {
-      val m = scala.collection.mutable.Map
-        .empty[(String, String, Option[String]), (String, DataFrame)]
-      cache.put(s, m)
-      m
+      seed: Option[String]): DataFrame =
+    memo(s, (dir, mode, seed),
+        Some(graft.Tables.fingerprint(s, s"$dir/documents.parquet"))) {
+      seed match {
+        case None => PackedShards.withOffsets(
+          graft.Tables.load(s, dir, "documents"), idsCol(mode))
+        case Some(sd) =>
+          // derive the shuffled layout from the PLAIN relation's
+          // tids — no second encode pass; the md5 re-key + chunk
+          // spine runs over the checkpoint's cached blocks
+          PackedShards.shuffledOffsetsFromEncoded(
+            cachedOffsets(s, dir, mode, None)
+              .select(col("doc_id"), col("tids")), sd)
+      }
     }
-    val want = graft.Tables.fingerprint(s, s"$dir/documents.parquet")
-    val key = (dir, mode, seed)
-    perSession.get(key) match {
-      case Some((have, df)) if have == want => df
-      case _ =>
-        // stale entries are dropped, not unpersisted: localCheckpoint
-        // blocks are freed by the ContextCleaner once unreferenced
-        val df = seed match {
-          case None => PackedShards.withOffsets(
-            graft.Tables.load(s, dir, "documents"), idsCol(mode))
-          case Some(sd) =>
-            // derive the shuffled layout from the PLAIN relation's
-            // tids — no second encode pass; the md5 re-key + chunk
-            // spine runs over the checkpoint's cached blocks
-            PackedShards.shuffledOffsetsFromEncoded(
-              cachedOffsets(s, dir, mode, None)
-                .select(col("doc_id"), col("tids")), sd)
-        }
-        perSession(key) = (want, df)
-        df
-    }
-  }
 
   /** Just the encoded ids (doc_id, tids) of every NON-EMPTY document —
     * for consumers that price their own offsets over a corpus subset

@@ -209,12 +209,15 @@ object TextIndexStore {
       .limit(k)
 
   /** Hybrid BM25 + token-set-Jaccard retrieval fused by reciprocal-rank
-    * (the q_hybrid_rrf semantics) over the STORED index: ONE per-doc
-    * aggregate of the pruned postings scan yields both retrievers' inputs
-    * — bm25, the Jaccard intersection (the doc's posting count over the
-    * query terms) and n_terms (carried on each posting) — so the whole
-    * query touches |query buckets|/64 of the postings and the corpus
-    * never.
+    * (the q_hybrid_rrf semantics) over the STORED index: one per-doc
+    * aggregate is DECLARED for both retrievers' inputs — bm25, the Jaccard
+    * intersection (the doc's posting count over the query terms) and
+    * n_terms (carried on each posting) — so the query touches
+    * |query buckets|/64 of the postings and the corpus never. Column
+    * pruning splits that aggregate per retriever (a bm25 branch and a
+    * count/max(n_terms) branch), so it EXECUTES as two pruned postings
+    * scans, each with its own partial aggregate and shuffle, not one
+    * reused shuffle.
     */
   def hybridRrf(spark: SparkSession, indexDir: String, qterms: Seq[String],
       k: Int = 10): DataFrame = {

@@ -30,14 +30,10 @@ object NewsLakeJob {
 
 object LakeJobs {
 
-  def session(): SparkSession = SparkSession.builder()
-    .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-    .appName("graft-lake-job")
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  def session(): SparkSession =
+    graft.GraftSession.builder(graft.GraftSession.cpus("4"), sys.env.get("SPARK_MASTER"))
+      .appName("graft-lake-job")
+      .getOrCreate()
 
   /** Topic config from the CLI source arg — the config-only transport
     * switch (parity with the reference's broker stage,

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (guide: one SparkSession per suite). */
+/** One shared local session per suite (guide: one SparkSession per suite),
+  * with the engine's injected functions and strategies.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -12,6 +14,7 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
     .config("spark.ui.enabled", "false")
+    .withExtensions(new graft.functions.GraftExtensions)
     .getOrCreate()
 
   val sf0001 = "/root/testdata/sf0.001"

@@ -111,4 +111,43 @@ class NativeAsOfJoinSpec extends SparkSpec {
     assert(plan.contains("AsOfJoin"), plan)
     assert(plan.contains("hashpartitioning(user_id"), plan)
   }
+
+  test("join leaves the session's experimental methods alone; GraftExtensions plans the exec") {
+    val strategies = spark.experimental.extraStrategies
+    val optimizations = spark.experimental.extraOptimizations
+    val l = Seq((1L, "A", ts("2024-01-01 00:00:10"))).toDF("id", "sym", "ts")
+    val r = Seq((10L, "A", ts("2024-01-01 00:00:05"))).toDF("rid", "sym", "ts")
+    val out = NativeAsOfJoin.join(l, r, Seq("sym"), "ts", "ts", Seq("rid"))
+    assert(out.select("asof_rid").head.getLong(0) == 10L)
+    assert(spark.experimental.extraStrategies == strategies)
+    assert(spark.experimental.extraOptimizations == optimizations)
+    assert(!strategies.contains(AsOfJoinStrategy))
+    assert(!optimizations.contains(PushFilterThroughAsOf))
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val execs = helper.collect(out.queryExecution.executedPlan) { case e: AsOfJoinExec => e }
+    assert(execs.size == 1, out.queryExecution.executedPlan.toString)
+  }
+
+  test("a session without GraftExtensions is refused with a clear error") {
+    // build a plain session on the shared context (ExtensionsSpec's pattern:
+    // swap the default session out, never stop() the shared context)
+    val prev = org.apache.spark.sql.SparkSession.getDefaultSession
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    val plain = org.apache.spark.sql.SparkSession.builder().getOrCreate()
+    try {
+      assert(!(plain eq spark))
+      // a context whose conf names the extension installs it in every session
+      assume(!plain.sessionState.planner.strategies.contains(AsOfJoinStrategy))
+      val l = plain.range(1).selectExpr("id", "'A' AS sym", "current_timestamp() AS ts")
+      val e = intercept[IllegalArgumentException] {
+        NativeAsOfJoin.join(l, l, Seq("sym"), "ts", "ts", Seq("id"))
+      }
+      assert(e.getMessage.contains("GraftExtensions"))
+    } finally {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      org.apache.spark.sql.SparkSession.clearDefaultSession()
+      prev.foreach(org.apache.spark.sql.SparkSession.setDefaultSession)
+    }
+  }
 }

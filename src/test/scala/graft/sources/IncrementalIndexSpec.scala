@@ -92,7 +92,7 @@ class IncrementalIndexSpec extends SparkSpec {
     val batch = TextIndexStore.bm25(spark, full, qterms)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(compacted == batch)
-    // hybrid RRF exercises docstats too — the whole store layout is live
+    // hybrid RRF reads n_terms and the _STATS sidecar too — the whole store layout is live
     val rrfStore = TextIndexStore.hybridRrf(spark, s"$dir/store", qterms)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val rrfBatch = TextIndexStore.hybridRrf(spark, full, qterms)
