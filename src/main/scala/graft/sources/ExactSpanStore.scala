@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * Freshness + concurrency follow the store contract: `_FINGERPRINT`
   * records source (len, mtime) + minLen; `ensure` rebuilds on
   * mismatch; builds stage into a temp tree and swap in atomically
-  * (StoreSwap), so a concurrent reader sees a complete old index or a
+  * (StoreLifecycle), so a concurrent reader sees a complete old index or a
   * complete new one.
   *
   * Reference telemetry scope (MantissaMr/fineventstream README.md:1-40)
@@ -49,9 +49,9 @@ object ExactSpanStore {
 
   private val FormatVersion = 1
 
-  /** `<root>/graft_span_index_L<minLen>/<sfDir>` (StoreSwap.defaultDir). */
+  /** `<root>/graft_span_index_L<minLen>/<sfDir>` (StoreLifecycle.defaultDir). */
   def defaultIndexDir(spark: SparkSession, sfDir: String, minLen: Int): String =
-    StoreSwap.defaultDir(spark, s"graft_span_index_L$minLen", sfDir)
+    StoreLifecycle.defaultDir(spark, s"graft_span_index_L$minLen", sfDir)
 
   private def fingerprintOf(spark: SparkSession, sfDir: String,
       minLen: Int): String = {
@@ -87,20 +87,16 @@ object ExactSpanStore {
     val wins = bucketedWindows(graft.Tables.load(spark, sfDir, "documents"), minLen)
       .transform(graft.Par.byKey(col("bucket")))
       .sortWithinPartitions(col("h"), col("doc_id"), col("pos"))
-    val f = StoreSwap.fs(spark, indexDir)
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = StoreSwap.stagingPath(indexDir)
-    wins.write.partitionBy("bucket").parquet(s"$tmp/wins")
-    StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir, minLen))
-    StoreSwap.swapIn(f, tmp, root)
+    StoreLifecycle.build(spark, indexDir, fingerprintOf(spark, sfDir, minLen))(
+      tmp => wins.write.partitionBy("bucket").parquet(s"$tmp/wins"))
   }
 
-  /** Build iff missing or stale (StoreSwap.ensure); returns the index dir. */
+  /** Build iff missing or stale (StoreLifecycle.ensure); returns the index dir. */
   def ensure(spark: SparkSession, sfDir: String, minLen: Int,
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0)
       .getOrElse(defaultIndexDir(spark, sfDir, minLen))
-    StoreSwap.ensure(spark, indexDir, fingerprintOf(spark, sfDir, minLen))(
+    StoreLifecycle.ensure(spark, indexDir, fingerprintOf(spark, sfDir, minLen))(
       build(spark, sfDir, indexDir, minLen))
   }
 

@@ -38,15 +38,13 @@ object IncrementalExactSpanStore {
     */
   def appendBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       indexDir: String, minLen: Int, bytes: Boolean = false): Unit = {
-    ExactSpanStore.bucketedWindows(batch, minLen, bytes)
-      .withColumn("__batch_id", lit(batchId))
-      .transform(graft.Par.byKey(col("bucket")))
-      .sortWithinPartitions(col("h"), col("doc_id"), col("pos"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket", "__batch_id")
-      .parquet(s"$indexDir/wins")
-    ()
+    StoreLifecycle.appendLayer(spark, indexDir)(() =>
+      StoreLifecycle.replacePartitions(
+        ExactSpanStore.bucketedWindows(batch, minLen, bytes)
+          .withColumn("__batch_id", lit(batchId))
+          .transform(graft.Par.byKey(col("bucket")))
+          .sortWithinPartitions(col("h"), col("doc_id"), col("pos")),
+        s"$indexDir/wins", "bucket", "__batch_id"))
   }
 
   /** Exact spans over the union of all appended layers — identical
@@ -61,55 +59,25 @@ object IncrementalExactSpanStore {
       docs, minLen, crossDocOnly, bytes)
 
   /** Run the maintainer as a streaming job: every micro-batch of
-    * (doc_id, text) appends its own layer — foreachBatch + checkpoint
-    * makes a replayed batch rewrite its own partitions (convergent),
-    * the [[IncrementalSignatureStore.start]] wiring.
+    * (doc_id, text) appends its own layer — the checkpointed wiring
+    * makes a replayed batch rewrite its own partitions (convergent).
     */
   def start(docs: DataFrame, indexDir: String, checkpoint: String,
       minLen: Int,
       bytes: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(batch.sparkSession, batch, id, indexDir, minLen, bytes)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(docs, checkpoint) { (batch, id) =>
+      appendBatch(batch.sparkSession, batch, id, indexDir, minLen, bytes)
+    }
 
-  /** Reserved layer id for compacted rows — negative, where no replayed
-    * streaming batch can dynamic-overwrite it.
+  /** Fold committed batch layers into `__batch_id = -1`, keeping the
+    * newest layer as-is ([[StoreLifecycle.foldLayers]]: replay-safe, and
+    * it MUST run with the maintaining query stopped). Probe-visible rows
+    * are unchanged: compaction changes bytes-read, never spans.
     */
-  val CompactedLayer: Long = -1L
-
-  /** Fold COMMITTED batch layers into `__batch_id = -1`, keeping the
-    * newest layer as-is — bounds the LSM read tail while staying
-    * replay-safe (a crash replays at most the LAST micro-batch, whose
-    * layer is deliberately left unfolded). Probe-visible rows are
-    * unchanged: compaction changes bytes-read, never spans. MUST run
-    * with the maintaining query STOPPED — the
-    * [[IncrementalSignatureStore.compact]] contract, same reasoning.
-    */
-  def compact(spark: SparkSession, indexDir: String): Unit = {
-    val f = StoreSwap.fs(spark, indexDir)
-    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
-    if (!f.exists(new org.apache.hadoop.fs.Path(s"$indexDir/wins"))) return
-    // hive partition column reads back with an inferred numeric type —
-    // normalize to long before comparing/folding
-    val all = spark.read.parquet(s"$indexDir/wins")
-      .withColumn("__batch_id", col("__batch_id").cast("long"))
-    val maxRow = all.agg(max(col("__batch_id"))).head
-    if (maxRow.isNullAt(0)) return
-    val maxBatch = maxRow.getLong(0)
-    val folded = all
-      .withColumn("__batch_id",
-        when(col("__batch_id") < maxBatch, lit(CompactedLayer))
-          .otherwise(col("__batch_id")))
-      .select("doc_id", "pos", "h", "bucket", "__batch_id")
-      .transform(graft.Par.byKey(col("bucket")))
-      .sortWithinPartitions(col("h"), col("doc_id"), col("pos"))
-    val tmp = indexDir + ".compact-" + java.util.UUID.randomUUID().toString.take(8)
-    folded.write.partitionBy("bucket", "__batch_id").parquet(s"$tmp/wins")
-    StoreSwap.swapIn(f, new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(indexDir))
-  }
+  def compact(spark: SparkSession, indexDir: String): Unit =
+    StoreLifecycle.foldLayers(spark, indexDir, "__batch_id")(
+      StoreLifecycle.Layered("wins", Seq("bucket", "__batch_id"),
+        _.select("doc_id", "pos", "h", "bucket", "__batch_id")
+          .transform(graft.Par.byKey(col("bucket")))
+          .sortWithinPartitions(col("h"), col("doc_id"), col("pos"))))
 }

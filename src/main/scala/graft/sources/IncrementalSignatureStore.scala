@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * The probe path is the shared [[SignatureStore.matchAgainst]] core —
   * bucket partition pruning on the probes' bucket ids works unchanged
   * because `bucket` remains the leading hive partition level. Read cost
-  * grows with batch COUNT (the LSM trade); `compact` folds all batch
-  * partitions into one and is match-set-neutral (spec-pinned).
+  * grows with batch COUNT (the LSM trade); `compact` folds committed
+  * layers into one and is match-set-neutral (spec-pinned).
   */
 object IncrementalSignatureStore {
 
@@ -40,18 +40,14 @@ object IncrementalSignatureStore {
       .transform(graft.Par.byKey(col("bucket")))
       .sortWithinPartitions(col("band"), col("bh"))
     // two independent writes over the one persisted batch relation, to
-    // disjoint paths — overlapped (Par.inParallel)
-    graft.Par.inParallel(
-      () => buckets.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "__batch_id")
-        .parquet(s"$indexDir/buckets"),
-      () => arrays.withColumn("__batch_id", lit(batchId))
-        .repartition(1).sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(s"$indexDir/arrays"))
+    // disjoint paths — overlapped
+    StoreLifecycle.appendLayer(spark, indexDir)(
+      () => StoreLifecycle.replacePartitions(buckets, s"$indexDir/buckets",
+        "bucket", "__batch_id"),
+      () => StoreLifecycle.replacePartitions(
+        arrays.withColumn("__batch_id", lit(batchId))
+          .repartition(1).sortWithinPartitions(col("doc_id")),
+        s"$indexDir/arrays", "__batch_id"))
     arrays.unpersist()
     ()
   }
@@ -72,87 +68,29 @@ object IncrementalSignatureStore {
         .select("doc_id", "n_sh", "hs"))
 
   /** Run the maintainer as a streaming job: every micro-batch of
-    * (doc_id, text) appends its own store layer — the foreachBatch +
-    * checkpoint pairing makes a replayed batch rewrite its own
-    * partitions (convergent), the same wiring as
-    * [[IncrementalTextIndex.start]].
+    * (doc_id, text) appends its own store layer — the checkpointed
+    * wiring makes a replayed batch rewrite its own partitions
+    * (convergent).
     */
   def start(docs: DataFrame, indexDir: String, checkpoint: String,
       bands: Int, rows: Int): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(batch.sparkSession, batch, id, indexDir, bands, rows)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(docs, checkpoint) { (batch, id) =>
+      appendBatch(batch.sparkSession, batch, id, indexDir, bands, rows)
+    }
 
-  /** Reserved layer id for compacted rows. NEGATIVE by design: streaming
-    * batch ids start at 0, so a folded layer must live where no replayed
-    * batch can dynamic-overwrite it.
+  /** Fold committed batch layers into `__batch_id = -1`, keeping the
+    * newest batch layer as-is ([[StoreLifecycle.foldLayers]]: replay-safe,
+    * and it MUST run with the maintaining query stopped). Bounds the LSM
+    * read tail; the probe-visible row set is unchanged, so compaction
+    * changes bytes-read, never matches.
     */
-  val CompactedLayer: Long = -1L
-
-  /** Fold COMMITTED batch layers into the reserved `__batch_id = -1`
-    * layer, keeping the newest batch layer as-is — bounds the LSM read
-    * tail while staying replay-safe: after a crash, Structured Streaming
-    * re-runs at most the LAST (possibly uncommitted) micro-batch, whose
-    * layer is deliberately left unfolded, so the replay overwrites its
-    * own partitions and converges; earlier batches are durable by the
-    * time a later one ran and folding them cannot race a replay. (The
-    * standing contract, shared with IncrementalTextIndex: batch ids are
-    * monotone for the life of the store — deleting the streaming
-    * checkpoint while keeping the store is out of contract.) The
-    * probe-visible row set is unchanged, so compaction changes
-    * bytes-read, never matches.
-    *
-    * Swap discipline: StoreSwap.swapIn — staged tree, live root moved
-    * ASIDE (not deleted), stage renamed in, old tree dropped last; a
-    * failed rename restores the original, so the only copy of a store
-    * that cannot be rebuilt from a corpus file is never lost. (A reader
-    * racing the two renames can still observe a missing root for one FS
-    * op — same exposure as the batch stores' swap — but no failure mode
-    * leaves the store permanently gone.)
-    *
-    * MUST run with the maintaining streaming query STOPPED (unlike
-    * IncrementalTextIndex.compactTo, which folds into a SEPARATE batch
-    * store dir and never touches the appending tree, this compaction
-    * rewrites the live root in place): an appendBatch landing
-    * between the two renames would write into the moved-aside tree or
-    * recreate the root — making the rename-in fail and silently dropping
-    * that batch's layer. Quiesce (query.stop()), compact, restart; the
-    * checkpoint replays the in-flight batch into the compacted store and
-    * converges.
-    */
-  def compact(spark: SparkSession, indexDir: String): Unit = {
-    val f = StoreSwap.fs(spark, indexDir)
-    // sweep .old-*/.compact-* orphans from crashed/raced swaps (leak fix);
-    // the caller has quiesced (contract above), so no staged sibling is live
-    StoreSwap.sweepOrphans(f, new org.apache.hadoop.fs.Path(indexDir))
-    // empty or never-appended store: nothing to fold
-    if (!f.exists(new org.apache.hadoop.fs.Path(s"$indexDir/arrays"))) return
-    // the hive partition column reads back with an INFERRED numeric type
-    // (int for small ids) — normalize to long before comparing/folding
-    val allArrays = spark.read.parquet(s"$indexDir/arrays")
-      .withColumn("__batch_id", col("__batch_id").cast("long"))
-    val maxRow = allArrays.agg(max(col("__batch_id"))).head
-    if (maxRow.isNullAt(0)) return // zero rows appended so far
-    val maxBatch = maxRow.getLong(0)
-    val fold = (c: org.apache.spark.sql.Column) =>
-      when(c.cast("long") < maxBatch, lit(CompactedLayer)).otherwise(c.cast("long"))
-    val buckets = spark.read.parquet(s"$indexDir/buckets")
-      .withColumn("__batch_id", fold(col("__batch_id")))
-      .select("band", "bh", "doc_id", "bucket", "__batch_id")
-      .transform(graft.Par.byKey(col("bucket")))
-      .sortWithinPartitions(col("band"), col("bh"))
-    val arrays = allArrays
-      .withColumn("__batch_id", fold(col("__batch_id")))
-      .select("doc_id", "n_sh", "hs", "__batch_id")
-      .repartition(1).sortWithinPartitions(col("doc_id"))
-    val tmp = indexDir + ".compact-" + java.util.UUID.randomUUID().toString.take(8)
-    buckets.write.partitionBy("bucket", "__batch_id").parquet(s"$tmp/buckets")
-    arrays.write.partitionBy("__batch_id").parquet(s"$tmp/arrays")
-    StoreSwap.swapIn(f, new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(indexDir))
-  }
+  def compact(spark: SparkSession, indexDir: String): Unit =
+    StoreLifecycle.foldLayers(spark, indexDir, "__batch_id")(
+      StoreLifecycle.Layered("arrays", Seq("__batch_id"),
+        _.select("doc_id", "n_sh", "hs", "__batch_id")
+          .repartition(1).sortWithinPartitions(col("doc_id"))),
+      StoreLifecycle.Layered("buckets", Seq("bucket", "__batch_id"),
+        _.select("band", "bh", "doc_id", "bucket", "__batch_id")
+          .transform(graft.Par.byKey(col("bucket")))
+          .sortWithinPartitions(col("band"), col("bh"))))
 }

@@ -75,25 +75,16 @@ object IncrementalTextIndex {
         sum(col("dl")).as("sum_dl"))
       .withColumn("__batch_id", lit(batchId))
 
-    // Per-writer option, not a session-conf set/restore: concurrent
-    // writers on one SparkSession could interleave the restore and run a
-    // write in static mode, deleting every untouched index partition.
     // The three writes are independent jobs over the one persisted tf,
-    // to three disjoint paths — overlapped (Par.inParallel) so the
-    // batch commit costs ~one write's wall-clock, not three.
-    graft.Par.inParallel(
-      () => postings.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "__batch_id")
-        .parquet(s"$indexDir/postings"),
-      () => termdelta.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "__batch_id")
-        .parquet(s"$indexDir/termdelta"),
-      () => corpusstats.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id")
-        .parquet(s"$indexDir/corpusstats"))
+    // to three disjoint paths — overlapped, so the batch commit costs
+    // ~one write's wall-clock, not three.
+    StoreLifecycle.appendLayer(spark, indexDir)(
+      () => StoreLifecycle.replacePartitions(postings, s"$indexDir/postings",
+        "bucket", "__batch_id"),
+      () => StoreLifecycle.replacePartitions(termdelta, s"$indexDir/termdelta",
+        "bucket", "__batch_id"),
+      () => StoreLifecycle.replacePartitions(corpusstats, s"$indexDir/corpusstats",
+        "__batch_id"))
     tf.unpersist()
     ()
   }
@@ -153,7 +144,7 @@ object IncrementalTextIndex {
     * avgdl is the same one double division — pinned by
     * IncrementalIndexSpec.
     *
-    * Same stage-and-atomic-swap as TextIndexStore.build, so readers of
+    * Same staged build and swap as TextIndexStore.build, so readers of
     * `storeDir` never see a half-compacted tree. The fingerprint marks
     * the store as stream-built: `TextIndexStore.ensure` would treat it
     * as stale against a corpus file, which is correct — a stream-built
@@ -175,12 +166,9 @@ object IncrementalTextIndex {
       .select("term", "doc_id", "tf", "dl", "n_terms", "df", "bucket")
       .transform(graft.Par.byKey(col("bucket")))
       .sortWithinPartitions(col("term"), col("doc_id"))
-    val f = StoreSwap.fs(spark, storeDir)
-    val tmp = StoreSwap.stagingPath(storeDir)
-    merged.write.partitionBy("bucket").parquet(s"$tmp/postings")
-    TextIndexStore.writeStats(f, tmp, stats.head())
-    StoreSwap.writeFingerprint(f, tmp, s"stream-compacted|$indexDir")
-    StoreSwap.swapIn(f, tmp, new org.apache.hadoop.fs.Path(storeDir))
+    StoreLifecycle.build(spark, storeDir, s"stream-compacted|$indexDir")(
+      tmp => merged.write.partitionBy("bucket").parquet(s"$tmp/postings"),
+      tmp => TextIndexStore.writeStats(spark, tmp, stats.head()))
   }
 
   /** Wire a (doc_id, text) document stream into continuous index
@@ -189,11 +177,7 @@ object IncrementalTextIndex {
     */
   def start(docs: DataFrame, indexDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(batch.sparkSession, batch, id, indexDir)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(docs, checkpoint) { (batch, id) =>
+      appendBatch(batch.sparkSession, batch, id, indexDir)
+    }
 }

@@ -82,27 +82,21 @@ object IncrementalVectorIndex {
       .withColumn("__batch_id", lit(batchId))
       .persist()
     // two independent writes over the one persisted batch relation, to
-    // disjoint paths — overlapped (Par.inParallel)
-    graft.Par.inParallel(
-      () => assigned
-        .select(col("vec_id"), col("embedding"), col("norm"), col("cell"),
-          col("__batch_id"))
-        .transform(graft.Par.byKey(col("cell")))
-        .sortWithinPartitions(col("vec_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "__batch_id")
-        .parquet(s"$indexDir/lists"),
-      () => assigned
-        .select(col("vec_id"),
-          VectorFunctions.pqCodes(col("embedding"), cb).as("codes"), col("cell"),
-          col("__batch_id"))
-        .transform(graft.Par.byKey(col("cell")))
-        .sortWithinPartitions(col("vec_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "__batch_id")
-        .parquet(s"$indexDir/codes"))
+    // disjoint paths — overlapped
+    StoreLifecycle.appendLayer(spark, indexDir)(
+      () => StoreLifecycle.replacePartitions(assigned
+          .select(col("vec_id"), col("embedding"), col("norm"), col("cell"),
+            col("__batch_id"))
+          .transform(graft.Par.byKey(col("cell")))
+          .sortWithinPartitions(col("vec_id")),
+        s"$indexDir/lists", "cell", "__batch_id"),
+      () => StoreLifecycle.replacePartitions(assigned
+          .select(col("vec_id"),
+            VectorFunctions.pqCodes(col("embedding"), cb).as("codes"), col("cell"),
+            col("__batch_id"))
+          .transform(graft.Par.byKey(col("cell")))
+          .sortWithinPartitions(col("vec_id")),
+        s"$indexDir/codes", "cell", "__batch_id"))
     assigned.unpersist()
     ()
   }
@@ -143,7 +137,7 @@ object IncrementalVectorIndex {
     * layout (no batch dimension), copying the frozen centroids/codebook —
     * after which `VectorIndexStore.ivfTopK`/`ivfPqTopK` serve the
     * stream-built index verbatim (spec-pinned identical). Same
-    * stage-and-atomic-swap as the other stores. The fingerprint marks
+    * staged build and swap as the other stores. The fingerprint marks
     * the store stream-built: `ensure` against a corpus file would
     * correctly treat it as a different vintage.
     */
@@ -158,15 +152,11 @@ object IncrementalVectorIndex {
       .sortWithinPartitions(col("vec_id"))
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val cb = spark.read.parquet(s"$indexDir/codebook")
-    val f = StoreSwap.fs(spark, storeDir)
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val tmp = StoreSwap.stagingPath(storeDir)
-    lists.write.partitionBy("cell").parquet(s"$tmp/lists")
-    codes.write.partitionBy("cell").parquet(s"$tmp/codes")
-    cents.coalesce(1).write.parquet(s"$tmp/centroids")
-    cb.coalesce(1).write.parquet(s"$tmp/codebook")
-    StoreSwap.writeFingerprint(f, tmp, s"stream-compacted|$indexDir")
-    StoreSwap.swapIn(f, tmp, root)
+    StoreLifecycle.build(spark, storeDir, s"stream-compacted|$indexDir")(
+      tmp => lists.write.partitionBy("cell").parquet(s"$tmp/lists"),
+      tmp => codes.write.partitionBy("cell").parquet(s"$tmp/codes"),
+      tmp => cents.coalesce(1).write.parquet(s"$tmp/centroids"),
+      tmp => cb.coalesce(1).write.parquet(s"$tmp/codebook"))
   }
 
   /** Wire a (vec_id, embedding) stream into continuous index
@@ -176,13 +166,9 @@ object IncrementalVectorIndex {
     */
   def start(embeddings: DataFrame, indexDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // batch ids from the stream start at 0, which baseBuild used for
-        // the base corpus — offset so appends never collide with it
-        appendBatch(batch.sparkSession, batch, id + 1L, indexDir)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(embeddings, checkpoint) { (batch, id) =>
+      // batch ids from the stream start at 0, which baseBuild used for
+      // the base corpus — offset so appends never collide with it
+      appendBatch(batch.sparkSession, batch, id + 1L, indexDir)
+    }
 }

@@ -444,12 +444,11 @@ object PackedShards {
       // the overlap sequences that belong to the neighbor ranges
       val slice = offs.filter(col("offset") + col("n_tokens") > lo &&
         col("offset") < hi)
-      packedSharded(slice, budget, seqsPerShard)
-        .filter(col("shard") >= r * rangeShards &&
-          col("shard") < (r + 1) * rangeShards)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard").parquet(outDir)
+      StoreLifecycle.replacePartitions(
+        packedSharded(slice, budget, seqsPerShard)
+          .filter(col("shard") >= r * rangeShards &&
+            col("shard") < (r + 1) * rangeShards),
+        outDir, "shard")
       onRangeWritten(r)
       touch(s"$outDir/_ranges/r$r.done")
     }

@@ -39,10 +39,10 @@ object SignatureStore {
 
   val Buckets = 64
 
-  /** `<root>/graft_sig_index_<bands>x<rows>/<sfDir>` (StoreSwap.defaultDir). */
+  /** `<root>/graft_sig_index_<bands>x<rows>/<sfDir>` (StoreLifecycle.defaultDir). */
   def defaultIndexDir(spark: SparkSession, sfDir: String,
       bands: Int, rows: Int): String =
-    StoreSwap.defaultDir(spark, s"graft_sig_index_${bands}x$rows", sfDir)
+    StoreLifecycle.defaultDir(spark, s"graft_sig_index_${bands}x$rows", sfDir)
 
   private val FormatVersion = 1
 
@@ -77,47 +77,37 @@ object SignatureStore {
             .as("bb"))
         .select(col("doc_id"), col("bb.band"), col("bb.bh"))
 
-  /** Build (or rebuild): one shingling pass over the corpus, staged into
-    * a temp dir and swapped in via StoreSwap.swapIn (move-aside →
-    * rename-in → restore-on-failure — the shared store contract: no
-    * failure mode loses the live tree; a reader racing the two renames
-    * may see a missing root for one FS op, absorbed by ensure's
-    * re-verify).
+  /** Build (or rebuild): one shingling pass over the corpus, staged and
+    * swapped in by [[StoreLifecycle.build]].
     */
   def build(spark: SparkSession, sfDir: String, indexDir: String,
       bands: Int, rows: Int): Unit = {
     val arrays = sortedArrays(graft.Tables.load(spark, sfDir, "documents"))
       .persist()
-    val f = StoreSwap.fs(spark, indexDir)
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = StoreSwap.stagingPath(indexDir)
     // rows == 0 (exact regime): the probe path never reads buckets —
     // every pair is a candidate — so writing the universal-bucket table
     // would be a pure wasted corpus shuffle + parquet write
-    // the (optional) bucket table and the arrays table are independent
-    // writes over the one persisted relation — overlapped (Par.inParallel)
-    val writeBuckets: Option[() => Unit] =
-      if (rows > 0) Some(() => banded(arrays, bands, rows)
+    val writeBuckets: Option[String => Unit] =
+      if (rows > 0) Some(tmp => banded(arrays, bands, rows)
         .withColumn("bucket", pmod(col("bh"), lit(Buckets.toLong)))
         .transform(graft.Par.byKey(col("bucket")))
         .sortWithinPartitions(col("band"), col("bh"))
         .write.partitionBy("bucket").parquet(s"$tmp/buckets"))
       else None
-    val writeArrays: () => Unit =
-      () => arrays.repartition(1).sortWithinPartitions(col("doc_id"))
+    val writeArrays: String => Unit =
+      tmp => arrays.repartition(1).sortWithinPartitions(col("doc_id"))
         .write.parquet(s"$tmp/arrays")
-    graft.Par.inParallel(writeBuckets.toSeq :+ writeArrays: _*)
-    arrays.unpersist()
-    StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir, bands, rows))
-    StoreSwap.swapIn(f, tmp, root)
+    try StoreLifecycle.build(spark, indexDir, fingerprintOf(spark, sfDir, bands, rows))(
+      writeBuckets.toSeq :+ writeArrays: _*)
+    finally arrays.unpersist()
   }
 
-  /** Build iff missing or stale (StoreSwap.ensure); returns the index dir. */
+  /** Build iff missing or stale (StoreLifecycle.ensure); returns the index dir. */
   def ensure(spark: SparkSession, sfDir: String, bands: Int, rows: Int,
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0)
       .getOrElse(defaultIndexDir(spark, sfDir, bands, rows))
-    StoreSwap.ensure(spark, indexDir, fingerprintOf(spark, sfDir, bands, rows))(
+    StoreLifecycle.ensure(spark, indexDir, fingerprintOf(spark, sfDir, bands, rows))(
       build(spark, sfDir, indexDir, bands, rows))
   }
 

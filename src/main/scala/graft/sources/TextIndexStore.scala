@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -53,9 +53,9 @@ object TextIndexStore {
 
   val Buckets = 64
 
-  /** `<root>/graft_text_index/<sfDir>` (StoreSwap.defaultDir). */
+  /** `<root>/graft_text_index/<sfDir>` (StoreLifecycle.defaultDir). */
   def defaultIndexDir(spark: SparkSession, sfDir: String): String =
-    StoreSwap.defaultDir(spark, "graft_text_index", sfDir)
+    StoreLifecycle.defaultDir(spark, "graft_text_index", sfDir)
 
   /** Bumped when the index LAYOUT changes (v2 added docstats; v3 moved
     * n_terms onto the postings and the stats into the `_STATS` sidecar):
@@ -76,17 +76,17 @@ object TextIndexStore {
     * read-back avgdl is bit-identical to the aggregate's; an empty
     * corpus (null avgdl, and no postings to score) stores NaN.
     */
-  private[sources] def writeStats(f: FileSystem, tmp: Path,
+  private[sources] def writeStats(spark: SparkSession, tmp: String,
       stats: org.apache.spark.sql.Row): Unit = {
     val avgdl = if (stats.isNullAt(1)) Double.NaN else stats.getDouble(1)
-    StoreSwap.writeText(f, new Path(tmp, StatsFile),
+    StoreLifecycle.writeText(StoreLifecycle.fs(spark, tmp), new Path(tmp, StatsFile),
       s"n_docs=${stats.getLong(0)}\navgdl=${java.lang.Double.toString(avgdl)}\n")
   }
 
   /** The index's (n_docs, avgdl), read from the sidecar on the driver. */
   private[sources] def readStats(spark: SparkSession, indexDir: String): (Long, Double) = {
     val file = new Path(s"$indexDir/$StatsFile")
-    val kv = StoreSwap.readText(StoreSwap.fs(spark, indexDir), file)
+    val kv = StoreLifecycle.readText(StoreLifecycle.fs(spark, indexDir), file)
       .getOrElse(throw new java.io.FileNotFoundException(file.toString))
       .linesIterator.map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
     (kv("n_docs").toLong, java.lang.Double.parseDouble(kv("avgdl")))
@@ -137,34 +137,21 @@ object TextIndexStore {
       .transform(graft.Par.byKey(col("bucket")))
       .sortWithinPartitions(col("term"), col("doc_id"))
 
-    // Stage into a private temp dir, then swap into place with a single
-    // FS rename: a concurrent reader (bench + check.py overlap is a
-    // documented condition on this box) either sees the complete old
-    // index or the complete new one, never a half-built tree. The
-    // in-JVM `ensure` lock can't give that guarantee across processes.
-    val f = StoreSwap.fs(spark, indexDir)
-    val tmp = StoreSwap.stagingPath(indexDir)
-    // the postings write and the 1-row stats aggregate are independent
-    // jobs over the shared tf relation — overlapped (Par.inParallel)
-    var statsRow: org.apache.spark.sql.Row = null
-    graft.Par.inParallel(
-      () => postings.write.partitionBy("bucket").parquet(s"$tmp/postings"),
-      () => statsRow = stats.head())
-    // no unpersist: tf is the session-shared relation (see above)
-    writeStats(f, tmp, statsRow)
-    // _FINGERPRINT is written LAST: a tree without it always reads stale
-    StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir))
-    // A lost swap race means a concurrent builder of the same corpus won —
-    // its tree is equivalent (same deterministic build); StoreSwap restores
-    // or defers and ensure's post-build re-verify adjudicates.
-    StoreSwap.swapIn(f, tmp, new Path(indexDir))
+    // Staged and swapped in by the lifecycle, so a concurrent reader sees
+    // the complete old index or the complete new one. The postings write
+    // and the 1-row stats aggregate are independent jobs over the shared
+    // tf relation — overlapped; no unpersist: tf is the session-shared
+    // relation (see above).
+    StoreLifecycle.build(spark, indexDir, fingerprintOf(spark, sfDir))(
+      tmp => postings.write.partitionBy("bucket").parquet(s"$tmp/postings"),
+      tmp => writeStats(spark, tmp, stats.head()))
   }
 
-  /** Build iff missing or stale (StoreSwap.ensure); returns the index dir. */
+  /** Build iff missing or stale (StoreLifecycle.ensure); returns the index dir. */
   def ensure(spark: SparkSession, sfDir: String,
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0).getOrElse(defaultIndexDir(spark, sfDir))
-    StoreSwap.ensure(spark, indexDir, fingerprintOf(spark, sfDir))(
+    StoreLifecycle.ensure(spark, indexDir, fingerprintOf(spark, sfDir))(
       build(spark, sfDir, indexDir))
   }
 

@@ -68,9 +68,9 @@ object VectorIndexStore {
     */
   private val FormatVersion = 1
 
-  /** `<root>/graft_vector_index/<sfDir>` (StoreSwap.defaultDir). */
+  /** `<root>/graft_vector_index/<sfDir>` (StoreLifecycle.defaultDir). */
   def defaultIndexDir(spark: SparkSession, sfDir: String): String =
-    StoreSwap.defaultDir(spark, "graft_vector_index", sfDir)
+    StoreLifecycle.defaultDir(spark, "graft_vector_index", sfDir)
 
   private def fingerprintOf(spark: SparkSession, sfDir: String): String = {
     val p = s"$sfDir/embeddings.parquet"
@@ -109,28 +109,21 @@ object VectorIndexStore {
       sub.zipWithIndex.map { case (cv, cid) => (s, cid, cv) }
     }.toDF("sub", "cid", "cv")
 
-    // stage + atomic swap (the TextIndexStore convention); _FINGERPRINT
-    // written LAST so a tree without it always reads stale
-    val f = StoreSwap.fs(spark, indexDir)
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = StoreSwap.stagingPath(indexDir)
-    // four independent writes (one persisted relation, disjoint staging
-    // paths) — overlapped (Par.inParallel)
-    graft.Par.inParallel(
-      () => lists.write.partitionBy("cell").parquet(s"$tmp/lists"),
-      () => codes.write.partitionBy("cell").parquet(s"$tmp/codes"),
-      () => centDf.coalesce(1).write.parquet(s"$tmp/centroids"),
-      () => cbDf.coalesce(1).write.parquet(s"$tmp/codebook"))
-    assigned.unpersist()
-    StoreSwap.writeFingerprint(f, tmp, fingerprintOf(spark, sfDir))
-    StoreSwap.swapIn(f, tmp, root)
+    // four independent writes (one persisted relation, disjoint stage
+    // paths) — overlapped by the lifecycle, marker written last
+    try StoreLifecycle.build(spark, indexDir, fingerprintOf(spark, sfDir))(
+      tmp => lists.write.partitionBy("cell").parquet(s"$tmp/lists"),
+      tmp => codes.write.partitionBy("cell").parquet(s"$tmp/codes"),
+      tmp => centDf.coalesce(1).write.parquet(s"$tmp/centroids"),
+      tmp => cbDf.coalesce(1).write.parquet(s"$tmp/codebook"))
+    finally assigned.unpersist()
   }
 
-  /** Build iff missing or stale (StoreSwap.ensure); returns the index dir. */
+  /** Build iff missing or stale (StoreLifecycle.ensure); returns the index dir. */
   def ensure(spark: SparkSession, sfDir: String,
       indexDir0: String = null): String = synchronized {
     val indexDir = Option(indexDir0).getOrElse(defaultIndexDir(spark, sfDir))
-    StoreSwap.ensure(spark, indexDir, fingerprintOf(spark, sfDir))(
+    StoreLifecycle.ensure(spark, indexDir, fingerprintOf(spark, sfDir))(
       build(spark, sfDir, indexDir))
   }
 

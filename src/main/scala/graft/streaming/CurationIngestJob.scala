@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.LongType
+import graft.sources.StoreLifecycle
 
 /** End-to-end streaming corpus ingest — the composition the individual
   * streaming pieces exist FOR, as one runnable job: incoming documents
@@ -85,13 +86,8 @@ object CurationIngestJob {
       outDir: String, checkpointDir: String, minTokens: Long = 3L,
       budget: Long = graft.sources.PackedShards.DefaultBudget)
       : StreamingQuery =
-    curate(docs, minTokens).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (batch: Dataset[CuratedDoc], id: Long) =>
-          StreamingPackedShards.packBatch(batch.sparkSession, batch.toDF(),
-            id, storeDir, outDir, budget)
-          ()
-      }
-      .start()
+    StoreLifecycle.maintain(curate(docs, minTokens).toDF(), checkpointDir) {
+      (batch, id) => StreamingPackedShards.packBatch(batch.sparkSession, batch,
+        id, storeDir, outDir, budget)
+    }
 }

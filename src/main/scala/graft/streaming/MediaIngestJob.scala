@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.StoreLifecycle
 
 /** COMPOSED media ingest — the media twin of CurationIngestJob: one job
   * that takes a mixed-modality media stream (media_id, kind, bytes)
@@ -62,10 +63,9 @@ object MediaIngestJob {
       .join(keepers, Seq("content_md5", "media_id"), "left_semi")
       .localCheckpoint()
     hashed.unpersist()
-    kept.select(col("content_md5"), lit(batchId).as("__batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(storeDir)
+    StoreLifecycle.replacePartitions(
+      kept.select(col("content_md5"), lit(batchId).as("__batch_id")),
+      storeDir, "__batch_id")
     kept.select(col("media_id"), col("kind"), col("bytes"))
   }
 
@@ -104,9 +104,7 @@ object MediaIngestJob {
       .select(col("media_id"), col("kind"), col("bytes"))
       .localCheckpoint() // admitted set is final: cut the 4-stage lineage
     val admitted = b4.withColumn("__batch_id", lit(batchId))
-    admitted.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kind", "__batch_id").parquet(s"$baseDir/out")
+    StoreLifecycle.replacePartitions(admitted, s"$baseDir/out", "kind", "__batch_id")
     StreamingFrameDedup.dedupBatch(spark, b4, batchId,
       s"$baseDir/store_frames", s"$baseDir/frames")
     admitted
@@ -114,11 +112,7 @@ object MediaIngestJob {
 
   def start(media: DataFrame, baseDir: String, checkpoint: String,
       maxHamming: Int = 7): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestBatch(batch.sparkSession, batch, id, baseDir, maxHamming)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(media, checkpoint) { (batch, id) =>
+      ingestBatch(batch.sparkSession, batch, id, baseDir, maxHamming)
+    }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import graft.model.{NewsArticle, Schemas, StockQuote}
+import graft.sources.StoreLifecycle
 
 /** The reference's two dataflows (SURVEY.md §3.1/§3.2) as Structured
   * Streaming transformations. Each stage is a DataFrame -> DataFrame
@@ -232,11 +233,9 @@ object Pipelines {
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // per-write option, NOT session conf: mutating the shared conf
-        // would silently make every later overwrite in the session dynamic
-        batch.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCol).parquet(path)
+        // per-writer dynamic overwrite, NOT session conf: mutating the
+        // shared conf would make every later overwrite in the session dynamic
+        StoreLifecycle.replacePartitions(batch, path, partitionCol)
       }
 
   /** foreachBatch sink that MERGES into touched partitions instead of
@@ -286,10 +285,7 @@ object Pipelines {
             .withColumn("__rn", row_number().over(w))
             .filter(col("__rn") === 1)
             .drop("__is_new", "__rn")
-          // per-write option, NOT session conf (same reason as above)
-          merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partitionCol).parquet(path)
+          StoreLifecycle.replacePartitions(merged, path, partitionCol)
         }
       }
 
@@ -338,12 +334,10 @@ object Pipelines {
           decoded.filter(col("c").isNull || col("t").isNull)
             .select(col("value"))
             .write.mode("overwrite").text(s"$dlPath/batch_id=$batchId")
-          withHivePartitions(quotes(decoded.drop("value")), "event_ts")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("year", "month", "day", "hour", "batch_id")
-            .parquet(lakePath)
+          StoreLifecycle.replacePartitions(
+            withHivePartitions(quotes(decoded.drop("value")), "event_ts")
+              .withColumn("batch_id", lit(batchId)),
+            lakePath, "year", "month", "day", "hour", "batch_id")
         } finally decoded.unpersist()
       }
 
@@ -377,12 +371,10 @@ object Pipelines {
           decoded.filter(col("symbol").isNull)
             .select(col("value"))
             .write.mode("overwrite").text(s"$dlPath/batch_id=$batchId")
-          withHivePartitions(newsArticles(decoded.drop("value")).toDF(), "published_ts")
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("year", "month", "day", "hour", "batch_id")
-            .parquet(lakePath)
+          StoreLifecycle.replacePartitions(
+            withHivePartitions(newsArticles(decoded.drop("value")).toDF(), "published_ts")
+              .withColumn("batch_id", lit(batchId)),
+            lakePath, "year", "month", "day", "hour", "batch_id")
         } finally decoded.unpersist()
       }
 }

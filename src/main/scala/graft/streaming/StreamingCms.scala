@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.StoreLifecycle
 
 /** Streaming maintenance of a Count-Min frequency sketch — the
   * incremental form where "incremental == batch" holds BIT-FOR-BIT, not
@@ -29,23 +30,18 @@ object StreamingCms {
     */
   def sketchBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       keyCol: String, storeDir: String): Unit = {
-    batch.agg(graft.functions.CmsFunctions
-        .cmsAgg(spark, col(keyCol)).as("sk"))
-      .select(col("sk"), lit(batchId).as("__batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(storeDir)
+    StoreLifecycle.replacePartitions(
+      batch.agg(graft.functions.CmsFunctions.cmsAgg(spark, col(keyCol)).as("sk"))
+        .select(col("sk"), lit(batchId).as("__batch_id")),
+      storeDir, "__batch_id")
   }
 
   /** Wire a streaming source through the per-batch sketch maintainer. */
   def start(ds: DataFrame, keyCol: String, storeDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    ds.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sketchBatch(batch.sparkSession, batch, id, keyCol, storeDir)
-      }
-      .start()
+    StoreLifecycle.maintain(ds, checkpoint) { (batch, id) =>
+      sketchBatch(batch.sparkSession, batch, id, keyCol, storeDir)
+    }
 
   /** The sketch of everything ingested so far: fold all layers. */
   def mergedImage(spark: SparkSession, storeDir: String): Array[Byte] =

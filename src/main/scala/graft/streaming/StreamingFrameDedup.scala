@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.StoreLifecycle
 
 /** Streaming FRAME-level video dedup — the video member of the
   * ingest-time dedup family, closing the three-modality grid
@@ -72,24 +73,17 @@ object StreamingFrameDedup {
       .select(col("media_id"), col("fi"), col("fkey"), col("frame_md5"))
       .localCheckpoint()
     f.unpersist()
-    kept.select(col("frame_md5"), col("fkey"), lit(batchId).as("__batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(storeDir)
+    StoreLifecycle.replacePartitions(
+      kept.select(col("frame_md5"), col("fkey"), lit(batchId).as("__batch_id")),
+      storeDir, "__batch_id")
     val out = kept.withColumn("__batch_id", lit(batchId))
-    out.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(outDir)
+    StoreLifecycle.replacePartitions(out, outDir, "__batch_id")
     out
   }
 
   def start(media: DataFrame, storeDir: String, outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dedupBatch(batch.sparkSession, batch, id, storeDir, outDir)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(media, checkpoint) { (batch, id) =>
+      dedupBatch(batch.sparkSession, batch, id, storeDir, outDir)
+    }
 }

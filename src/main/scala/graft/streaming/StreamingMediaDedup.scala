@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.StoreLifecycle
 
 /** Shared banded-store core of the streaming PERCEPTUAL dedup family —
   * one discipline for every 64-bit perceptual fingerprint (image aHash,
@@ -97,11 +98,10 @@ private[streaming] object PerceptualDedupCore {
       .select(col("media_id"), col("phash"))
       .localCheckpoint()
     fp.unpersist()
-    banded(keptIds).select(col("band"), col("key"), col("media_id"),
-        col("phash"), lit(batchId).as("__batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(storeDir)
+    StoreLifecycle.replacePartitions(
+      banded(keptIds).select(col("band"), col("key"), col("media_id"),
+        col("phash"), lit(batchId).as("__batch_id")),
+      storeDir, "__batch_id")
     // admitted payloads to the lake: other kinds pass through; this
     // kind only if its id survived the perceptual pass
     val kept = batch
@@ -109,11 +109,7 @@ private[streaming] object PerceptualDedupCore {
       .unionByName(batch.filter(col("kind") =!= kind))
       .select(col("media_id"), col("kind"), col("bytes"),
         lit(batchId).as("__batch_id"))
-    if (writeOut) {
-      kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id").parquet(outDir)
-    }
+    if (writeOut) StoreLifecycle.replacePartitions(kept, outDir, "__batch_id")
     kept
   }
 
@@ -121,14 +117,10 @@ private[streaming] object PerceptualDedupCore {
       checkpoint: String, maxHamming: Int, kind: String,
       hashed: DataFrame => DataFrame)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dedupBatch(batch.sparkSession, batch, id, storeDir, outDir,
-          maxHamming, kind, hashed)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(media, checkpoint) { (batch, id) =>
+      dedupBatch(batch.sparkSession, batch, id, storeDir, outDir,
+        maxHamming, kind, hashed)
+    }
 }
 
 /** Streaming PERCEPTUAL media dedup — the image member of the family

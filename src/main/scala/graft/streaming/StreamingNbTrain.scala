@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.sources.StoreLifecycle
 
 /** Streaming (incrementally maintained) Naive-Bayes trainer — the
   * learnable-curation member of the incremental-index grid (text index /
@@ -12,8 +13,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * any partition of the corpus — so the maintainer is the layer pattern
   * (StreamingCms's shape, not stateful APIs): each micro-batch writes its
   * own (term, cnt_pos, cnt_neg) aggregate as a `batch_id=<id>` partition
-  * via dynamic partition overwrite, which makes replays IDEMPOTENT (a
-  * re-delivered batch overwrites its own layer, never double-counts).
+  * via a per-writer dynamic partition overwrite (the session conf is
+  * never touched), which makes replays IDEMPOTENT (a re-delivered batch
+  * overwrites its own layer, never double-counts).
   * The model is merge-on-read: sum the layers by term and apply the ONE
   * llr formula (ops.CorpusOps.nbLlr — shared with the batch trainer), so
   * streamed-then-merged == batch-trained bit-for-bit under any slicing —
@@ -35,29 +37,15 @@ object StreamingNbTrain {
     * property is directly testable: calling this twice with the same
     * `batchId` must leave the store unchanged.
     */
-  def writeBatch(batch: DataFrame, batchId: Long, store: String): Unit = {
-    val s = batch.sparkSession
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      graft.ops.CorpusOps.nbClassCounts(batch)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("batch_id")
-        .parquet(s"$store/counts")
-    } finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def writeBatch(batch: DataFrame, batchId: Long, store: String): Unit =
+    StoreLifecycle.appendLayer(batch.sparkSession, store)(() =>
+      StoreLifecycle.replacePartitions(
+        graft.ops.CorpusOps.nbClassCounts(batch).withColumn("batch_id", lit(batchId)),
+        s"$store/counts", "batch_id"))
 
   /** Start the maintainer over a streaming (text, source) document feed. */
   def start(docs: DataFrame, store: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        writeBatch(batch, id, store)
-      }
-      .start()
+    StoreLifecycle.maintain(docs, checkpoint)((batch, id) => writeBatch(batch, id, store))
 
   /** Merge-on-read model: layers sum by term, then the shared llr
     * formula. Bit-equal to batch training on the union of the batches.
@@ -74,28 +62,20 @@ object StreamingNbTrain {
           sum(col("cnt_neg")).as("cnt_neg")))
   }
 
-  /** Compact the layer store: rewrite the summed counts as ONE layer
-    * (batch_id = -1, the compaction epoch) and drop the per-batch
-    * layers — same merge-on-read result, O(vocab) files instead of
-    * O(batches). The swap is staged-then-renamed (sources.StoreSwap) so
-    * a concurrent reader never sees a half-store.
+  /** Compact the layer store: the committed layers' summed counts become
+    * ONE layer (batch_id = -1) and the newest layer is kept as it is
+    * ([[StoreLifecycle.foldLayers]]) — same merge-on-read result,
+    * O(vocab) files instead of O(batches). Keeping the newest layer is
+    * what makes the fold replay-safe: a batch that crashed after its
+    * layer write is replayed after the fold and overwrites only its own
+    * layer, instead of being counted once inside -1 and again in its
+    * replayed layer. MUST run with the maintainer stopped.
     */
-  def compact(spark: SparkSession, store: String): Unit = {
-    spark.catalog.refreshByPath(s"$store/counts")
-    val summed = spark.read.parquet(s"$store/counts")
-      .groupBy(col("term"))
-      .agg(sum(col("cnt_pos")).as("cnt_pos"),
-        sum(col("cnt_neg")).as("cnt_neg"))
-      .withColumn("batch_id", lit(-1L))
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$store/.compact-counts")
-    summed.write.mode("overwrite").partitionBy("batch_id")
-      .parquet(tmp.toString)
-    graft.sources.StoreSwap.swapIn(fs, tmp,
-      new org.apache.hadoop.fs.Path(s"$store/counts"))
-    spark.catalog.refreshByPath(s"$store/counts")
-  }
+  def compact(spark: SparkSession, store: String): Unit =
+    StoreLifecycle.foldLayers(spark, store, "batch_id")(
+      StoreLifecycle.Layered("counts", Seq("batch_id"),
+        _.groupBy(col("term"), col("batch_id"))
+          .agg(sum(col("cnt_pos")).as("cnt_pos"), sum(col("cnt_neg")).as("cnt_neg"))))
 
   /** The merged model in StreamingNbFilter's shipping form (llr nanos). */
   def llrNanos(model: DataFrame): Map[String, Long] =

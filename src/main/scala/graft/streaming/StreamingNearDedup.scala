@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.StoreLifecycle
 
 /** Streaming NEAR-duplicate dedup — the MinHash+LSH sibling of
   * [[StreamingExactDedup]] for a corpus-ingest stream: a document is
@@ -23,7 +24,7 @@ import org.apache.spark.sql.types._
   *  - candidate lookup is one (band, bh) equi-join against the store —
   *    band-bucket collisions bound the join exactly as in the batch path;
   *  - replaying a batch OVERWRITES its own store partition and output
-  *    partition (dynamic partitionOverwriteMode, the idempotent-sink
+  *    partition (StoreLifecycle.replacePartitions, the idempotent-sink
   *    convention of Pipelines.scala) — replays converge instead of
   *    re-admitting or double-storing;
   *  - only (band, bh, doc_id, sig) rows persist: the text never enters
@@ -116,18 +117,13 @@ object StreamingNearDedup {
       .select(col("doc_id"), col("text"), col("sig"))
       .localCheckpoint() // sever lineage before the two writes below
     sig.unpersist()
-    // Per-writer option, not a session-conf set/restore: a concurrent
-    // writer on the same SparkSession could interleave the restore and
-    // run in static mode, wiping the other batches' store partitions.
-    banded(kept).select(col("band"), col("bh"), col("doc_id"), col("sig"),
-        lit(batchId).as("__batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(storeDir)
-    kept.select(col("doc_id"), col("text"), lit(batchId).as("__batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(outDir)
+    StoreLifecycle.replacePartitions(
+      banded(kept).select(col("band"), col("bh"), col("doc_id"), col("sig"),
+        lit(batchId).as("__batch_id")),
+      storeDir, "__batch_id")
+    StoreLifecycle.replacePartitions(
+      kept.select(col("doc_id"), col("text"), lit(batchId).as("__batch_id")),
+      outDir, "__batch_id")
     kept
   }
 
@@ -137,11 +133,7 @@ object StreamingNearDedup {
   def start(docs: DataFrame, storeDir: String, outDir: String,
       checkpoint: String, minSigSim: Double = 0.6)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        dedupBatch(batch.sparkSession, batch, id, storeDir, outDir, minSigSim)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(docs, checkpoint) { (batch, id) =>
+      dedupBatch(batch.sparkSession, batch, id, storeDir, outDir, minSigSim)
+    }
 }

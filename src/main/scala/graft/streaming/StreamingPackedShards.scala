@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.StoreLifecycle
 
 /** Streaming form of the packed-training-shard writer
   * (sources.PackedShards): documents arriving on a stream are packed
@@ -70,21 +71,18 @@ object StreamingPackedShards {
     // boundary sequence's contributing-doc count is not recoverable
     // here — the streaming artifact is (seq, tokens, n_tokens), which is
     // what the parity spec pins against the batch writer
-    all.filter(col("seq") < nComplete)
-      .withColumn("seq", col("seq") + nextSeq)
-      .select(col("seq"), col("tokens"), col("n_tokens"))
-      .withColumn("__batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(outDir)
+    StoreLifecycle.replacePartitions(
+      all.filter(col("seq") < nComplete)
+        .withColumn("seq", col("seq") + nextSeq)
+        .select(col("seq"), col("tokens"), col("n_tokens"))
+        .withColumn("__batch_id", lit(batchId)),
+      outDir, "__batch_id")
     val newTail: Seq[Int] = all.filter(col("seq") === nComplete)
       .select(col("tokens")).collect()
       .headOption.map(_.getSeq[Int](0)).getOrElse(Nil)
-    Seq((nextSeq + nComplete, newTail, batchId))
-      .toDF("next_seq", "tail", "__batch_id")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__batch_id").parquet(storeDir)
+    StoreLifecycle.replacePartitions(
+      Seq((nextSeq + nComplete, newTail, batchId)).toDF("next_seq", "tail", "__batch_id"),
+      storeDir, "__batch_id")
   }
 
   /** Materialize the final partial sequence (if any) — the end-of-corpus
@@ -96,11 +94,10 @@ object StreamingPackedShards {
     import spark.implicits._
     val (nextSeq, tail) = state(spark, storeDir, Long.MaxValue)
     if (tail.nonEmpty) {
-      Seq((nextSeq, tail, tail.size.toLong, Long.MaxValue))
-        .toDF("seq", "tokens", "n_tokens", "__batch_id")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch_id").parquet(outDir)
+      StoreLifecycle.replacePartitions(
+        Seq((nextSeq, tail, tail.size.toLong, Long.MaxValue))
+          .toDF("seq", "tokens", "n_tokens", "__batch_id"),
+        outDir, "__batch_id")
     }
   }
 
@@ -109,11 +106,7 @@ object StreamingPackedShards {
       checkpoint: String,
       budget: Long = graft.sources.PackedShards.DefaultBudget)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        packBatch(batch.sparkSession, batch, id, storeDir, outDir, budget)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(docs, checkpoint) { (batch, id) =>
+      packBatch(batch.sparkSession, batch, id, storeDir, outDir, budget)
+    }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.StoreLifecycle
 
 /** The lake job around [[StreamingTopK]] — closes the "library exists but
   * no job uses it" gap: a runnable recipe that maintains a queryable lake
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * summary key, O(capacity) RocksDB state per key) → foreachBatch sink
   * that upserts each updated group's summary into a group-partitioned
   * parquet dir. The sink follows the repo's idempotent-sink convention
-  * (dynamic partitionOverwriteMode, same as StreamingNearDedup's store
+  * (StoreLifecycle.replacePartitions, same as StreamingNearDedup's store
   * and Pipelines' merging sinks):
   *
   *  - each micro-batch REPLACES the partitions of exactly the groups it
@@ -47,12 +48,7 @@ object StreamingTopKJob {
           Window.partitionBy(col("group"))))
         .filter(col("n_seen") === col("__max_seen"))
         .drop("__max_seen")
-      // Per-writer option, not a session-conf set/restore: two concurrent
-      // foreachBatch writers on one SparkSession could interleave the
-      // restore and run a write in static mode, wiping untouched partitions.
-      latest.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("group").parquet(outDir)
+      StoreLifecycle.replacePartitions(latest, outDir, "group")
     }
   }
 
@@ -63,13 +59,7 @@ object StreamingTopKJob {
   def start(events: Dataset[StreamingTopK.TopKEvent], capacity: Int,
       outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    StreamingTopK(events, capacity)
-      .toDF()
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertSummaries(batch.sparkSession, batch, outDir)
-        ()
-      }
-      .start()
+    StoreLifecycle.maintain(StreamingTopK(events, capacity).toDF(), checkpoint) {
+      (batch, _) => upsertSummaries(batch.sparkSession, batch, outDir)
+    }
 }

@@ -6,11 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-level guard for the two shared session mechanisms: every
-  * session-lifetime cache goes through [[SessionMemo]] and every session is
-  * built through [[GraftSession]], so hand-rolled copies cannot grow back
-  * under `src/main/scala`. Runs from the project root (sbt's forked test
-  * working directory).
+/** Source-level guard for the shared mechanisms: every session-lifetime
+  * cache goes through [[SessionMemo]], every session is built through
+  * [[GraftSession]] and every store swap, marker and partition-replacing
+  * write through `sources.StoreLifecycle`, so hand-rolled copies cannot
+  * grow back under `src/main/scala`. Runs from the project root (sbt's
+  * forked test working directory).
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
@@ -39,5 +40,15 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   test("no library code assigns the session's experimental methods") {
     assert(offenders("""experimental\s*\.\s*extra\w+\s*=""", "").isEmpty)
+  }
+
+  test("store swaps, markers and orphan sweeps live only in StoreLifecycle") {
+    for (call <- Seq("swapIn", "stagingPath", "writeFingerprint", "sweepOrphans"))
+      assert(offenders(s"""\\b$call\\s*\\(""", "StoreLifecycle.scala").isEmpty, call)
+  }
+
+  test("partition-replacing writes go through StoreLifecycle.replacePartitions") {
+    // any string literal naming the mode: the writer option or the session conf
+    assert(offenders("partitionOverwriteMode\"", "StoreLifecycle.scala").isEmpty)
   }
 }

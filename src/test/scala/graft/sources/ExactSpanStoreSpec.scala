@@ -53,7 +53,7 @@ class ExactSpanStoreSpec extends SparkSpec {
     val layers = spark.read.parquet(s"$idx/wins")
       .select(col("__batch_id").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
-    assert(layers == Set(IncrementalExactSpanStore.CompactedLayer, 1L),
+    assert(layers == Set(StoreLifecycle.CompactedLayer, 1L),
       s"expected folded layers, got $layers")
     assert(rows(IncrementalExactSpanStore.spans(spark, idx, docs, 50)) == inQuery)
   }

@@ -51,7 +51,7 @@ class IncrementalSignatureStoreSpec extends SparkSpec {
     val layers = spark.read.parquet(s"$dir/arrays")
       .select(col("__batch_id").cast("long"))
       .distinct().collect().map(_.getLong(0)).toSet
-    assert(layers == Set(IncrementalSignatureStore.CompactedLayer, 2L),
+    assert(layers == Set(StoreLifecycle.CompactedLayer, 2L),
       s"expected folded layer + newest batch, found $layers")
 
     // the reason the newest layer stays unfolded: a crash-replay of the

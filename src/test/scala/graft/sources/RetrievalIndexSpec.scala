@@ -169,7 +169,7 @@ class RetrievalIndexSpec extends SparkSpec {
     TextIndexStore.ensure(spark, sf0001, dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(s"$dir/_FINGERPRINT")
-    def read(p: Path) = StoreSwap.readText(fs, p).get
+    def read(p: Path) = StoreLifecycle.readText(fs, p).get
     val v3 = read(marker)
     assert(v3.startsWith("v3|"), v3)
     // turn the tree into what the v2 build left: docstats/ and stats/
@@ -177,7 +177,7 @@ class RetrievalIndexSpec extends SparkSpec {
     fs.delete(new Path(s"$dir/_STATS"), false)
     spark.range(1).toDF("doc_id").write.parquet(s"$dir/docstats")
     spark.range(1).toDF("n_docs").write.parquet(s"$dir/stats")
-    StoreSwap.writeText(fs, marker, "v2" + v3.stripPrefix("v3"))
+    StoreLifecycle.writeText(fs, marker, "v2" + v3.stripPrefix("v3"))
     TextIndexStore.ensure(spark, sf0001, dir)
     assert(read(marker) == v3)
     assert(fs.exists(new Path(s"$dir/_STATS")))

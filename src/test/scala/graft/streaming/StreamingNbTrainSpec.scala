@@ -64,12 +64,14 @@ class StreamingNbTrainSpec extends SparkSpec {
       .collect().map(_.doc_id).toSet
     assert(kept == keptBatch)
 
-    // compaction: one summed layer, same model, fewer layer partitions
+    // compaction: the committed layers fold into one summed layer and the
+    // newest layer stays (a replay of it after the fold must overwrite
+    // only itself); same model, fewer layer partitions
     StreamingNbTrain.compact(spark, s"$dir/store")
     val layerDirs = new java.io.File(s"$dir/store/counts")
-      .listFiles().filter(_.getName.startsWith("batch_id=")).map(_.getName)
-    assert(layerDirs.toSeq == Seq("batch_id=-1"),
-      s"compaction must leave one layer, got ${layerDirs.mkString(",")}")
+      .listFiles().filter(_.getName.startsWith("batch_id=")).map(_.getName).sorted
+    assert(layerDirs.toSeq == Seq("batch_id=-1", "batch_id=2"),
+      s"compaction must leave the folded and the newest layer, got ${layerDirs.mkString(",")}")
     assert(modelSet(StreamingNbTrain.mergedModel(spark, s"$dir/store")) ==
       modelSet(batchExact), "compaction must not change the model")
   }
