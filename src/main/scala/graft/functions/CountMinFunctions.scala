@@ -101,11 +101,13 @@ abstract class CmsAggLike extends TypedImperativeAggregate[Array[Long]]
   override def eval(b: Array[Long]): Any = CountMin.serialize(b)
 }
 
-/** cms_agg(key[, depth, width]): Count-Min sketch of a long key column. */
+/** cms_agg(key[, depth, width]): Count-Min sketch of a long or int key
+  * column; any other key type fails analysis.
+  */
 case class CmsAgg(child: Expression,
     depth: Int = CountMin.DefaultDepth, width: Int = CountMin.DefaultWidth,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends CmsAggLike {
+    extends CmsAggLike with org.apache.spark.sql.graft.GraftExpectsLongOrInt {
 
   override def update(b: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)

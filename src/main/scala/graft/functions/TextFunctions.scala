@@ -1010,6 +1010,25 @@ object TextFunctions {
     org.apache.spark.sql.graft.GraftSqlShims.column(
       MinHashSignature(org.apache.spark.sql.graft.GraftSqlShims.expression(c), numHashes))
 
+  /** LSH bands of the MinHash signature column named `sig` (bands * rows
+    * slots): one `struct(band, bh)` per band, bh the xxhash64 of the
+    * band's `rows` slots. Explode it to join candidates on (band, bh).
+    */
+  def minhashBands(sig: String, bands: Int, rows: Int): Column =
+    org.apache.spark.sql.functions.expr(
+      s"transform(sequence(0, ${bands - 1}), b -> struct(b AS band, xxhash64(slice($sig, b * $rows + 1, $rows)) AS bh))")
+
+  /** LSH bands of the 64-bit hash column named `h`: one `struct(band,
+    * key)` per band, key the band's 64 / bands bits. Two hashes within
+    * Hamming distance < bands share a key (pigeonhole).
+    */
+  def hammingBands(h: String, bands: Int): Column = {
+    val keyBits = 64 / bands
+    val mask = (1L << keyBits) - 1
+    org.apache.spark.sql.functions.expr(
+      s"transform(sequence(0, ${bands - 1}), b -> struct(b AS band, shiftright($h, b * $keyBits) & $mask AS key))")
+  }
+
   /** Common-element count of two sorted long arrays (allocation-free). */
   def sortedIntersectCount(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.GraftSqlShims.column(

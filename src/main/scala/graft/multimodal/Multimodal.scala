@@ -850,7 +850,7 @@ object Multimodal {
     * clip hash — all three stub-rastered here, the q_media_neardup /
     * q_clip_neardup convention; the real-codec hashers are spec-pinned
     * in MultimodalSpec/MediaIngestJobSpec), with the job's greedy
-    * lower-id within-batch resolution (PerceptualDedupCore.dedupBatch:
+    * lower-id within-batch resolution (streaming.IngestGate.banded:
     * an item dies when a LOWER-id exact-survivor of its kind lies
     * within the Hamming radius — not transitive closure). The fixture
     * plants, per media item: a byte-identical re-upload (+1 — dies at

@@ -326,8 +326,7 @@ object TextDedup {
       val sig = sh.select(col("doc_id"),
         graft.functions.TextFunctions.minhashSignature(col("hs"), numHashes).as("sig"))
       val banded = sig.select(col("doc_id"),
-          explode(expr(
-            s"transform(sequence(0, ${bands - 1}), b -> struct(b AS band, xxhash64(slice(sig, b * $rows + 1, $rows)) AS bh))"))
+          explode(graft.functions.TextFunctions.minhashBands("sig", bands, rows))
             .as("bb"))
         .select(col("doc_id"), col("bb.band"), col("bb.bh"))
       val small = banded.groupBy(col("band"), col("bh"))
@@ -1099,12 +1098,9 @@ object TextDedup {
     require(64 % bands == 0, s"bands must divide 64, got $bands")
     require(maxHamming < bands,
       s"banding is lossless only for maxHamming < bands ($maxHamming >= $bands)")
-    val keyBits = 64 / bands
-    val mask = (1L << keyBits) - 1
     val fp = fp0.persist() // referenced by both sides of the band self-join
     val banded = fp.select(col("id"), col("h"),
-      explode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> struct(b AS band, shiftright(h, b * $keyBits) & $mask AS key))")).as("bb"))
+      explode(graft.functions.TextFunctions.hammingBands("h", bands)).as("bb"))
       .select(col("id"), col("h"), col("bb.band"), col("bb.key"))
     // Same skew guard as MinHash: a band value shared by hundreds of docs
     // carries no signal and would square the join output.

@@ -72,8 +72,7 @@ object SignatureStore {
         .withColumn("sig",
           graft.functions.TextFunctions.minhashSignature(col("hs"), bands * rows))
         .select(col("doc_id"),
-          explode(expr(
-            s"transform(sequence(0, ${bands - 1}), b -> struct(b AS band, xxhash64(slice(sig, b * $rows + 1, $rows)) AS bh))"))
+          explode(graft.functions.TextFunctions.minhashBands("sig", bands, rows))
             .as("bb"))
         .select(col("doc_id"), col("bb.band"), col("bb.bh"))
 

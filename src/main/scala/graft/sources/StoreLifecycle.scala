@@ -1,9 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** The one lifecycle of every structure the engine keeps beside the
   * lake: the four batch-built stores ([[TextIndexStore]],
@@ -26,7 +27,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     writer, never on the session — a session-wide setting would let a
   *     concurrent static-mode overwrite delete partitions it never
   *     touched. A replayed batch rewrites its own partitions with the
-  *     same bytes.
+  *     same bytes, and reads the store's strictly earlier layers only
+  *     ([[priorLayers]]).
   *  3. Maintainer wiring ([[maintain]]): checkpointed `foreachBatch`, so
   *     a batch that died mid-commit is re-run under the same id.
   *  4. Layer fold ([[foldLayers]]): committed layers of an in-place
@@ -132,6 +134,19 @@ object StoreLifecycle {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*)
       .parquet(path)
+
+  /** The rows of the layered store at `dir` written by batches strictly
+    * before `batchId`, read with the writer's `schema` (layer column
+    * `__batch_id` included) so the read infers nothing and starts no
+    * job; an empty frame of that schema while the store does not exist.
+    * A batch judged only against these never matches the rows its own
+    * earlier attempt wrote, so a replay admits what the first attempt did.
+    */
+  def priorLayers(spark: SparkSession, dir: String, batchId: Long,
+      schema: StructType): DataFrame =
+    if (fs(spark, dir).exists(new Path(dir)))
+      spark.read.schema(schema).parquet(dir).filter(col("__batch_id") < batchId)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** One batch's layer writes into the store at `root`, overlapped, after
     * settling a fold that crashed mid-swap — otherwise the append would

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.sources.StoreLifecycle
 
 /** COMPOSED media ingest — the media twin of CurationIngestJob: one job
@@ -12,10 +11,10 @@ import graft.sources.StoreLifecycle
   *
   *   1. byte-EXACT dedup (any kind): md5(bytes) against a fingerprint
   *      store — the cheapest gate drops byte-identical re-uploads first;
-  *   2. modality-perceptual gates, each a pure pass (store written,
-  *      payloads only returned): image aHash, audio envelope hash,
-  *      video clip hash — re-encodes/rescales/re-masters/re-contained
-  *      clips collapse here;
+  *   2. modality-perceptual gates, each a pass that writes its store
+  *      and returns the payloads it admits: image aHash, audio envelope
+  *      hash, video clip hash — re-encodes/rescales/re-masters/
+  *      re-contained clips collapse here;
   *   3. admitted payloads written ONCE, hive-partitioned by
   *      (kind, __batch_id) with dynamic overwrite (replays converge);
   *   4. exact FRAME dedup over the admitted videos (its store + frame
@@ -24,62 +23,22 @@ import graft.sources.StoreLifecycle
   * Reference cite: the reference's pipeline discipline is exactly this
   * shape for quotes/news — validate → dedup → partitioned sink in one
   * job (processor_stock_quotes.py:68-91, producer_company_news.py:133);
-  * this applies it to the media modality family. Every store read
-  * filters `__batch_id < batchId` (the replay-safety discipline), and
-  * only fingerprints — md5 strings, 8-byte hashes, band keys — ever
-  * enter a store or a shuffle; payload bytes move once, scan → lake.
+  * this applies it to the media modality family. Every gate is an
+  * [[IngestGate]] (a batch is judged only against earlier batches'
+  * store layers, so replays converge), and only fingerprints — md5
+  * strings, 8-byte hashes, band keys — ever enter a store or a shuffle;
+  * payload bytes move once, scan → lake.
   * Undecodable payloads drop at their modality's perceptual gate (the
   * family's R2-drop contract: a payload no decoder accepts never enters
   * the lake).
   */
 object MediaIngestJob {
 
-  /** Byte-exact gate: drop any payload whose md5 was ingested by a
-    * strictly earlier batch or by a lower-id batchmate; admit the rest
-    * and record their fingerprints.
-    */
-  private def exactBatch(spark: SparkSession, batch: DataFrame,
-      batchId: Long, storeDir: String): DataFrame = {
-    val hashed = batch
-      .select(col("media_id"), col("kind"), col("bytes"),
-        md5(col("bytes")).as("content_md5"))
-      .persist()
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val storeExists = storePath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(storePath)
-    val store: DataFrame =
-      if (storeExists)
-        spark.read.parquet(storeDir)
-          .filter(col("__batch_id") < batchId)
-          .select(col("content_md5"))
-      else
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("content_md5", StringType))))
-    val fresh = hashed.join(store, Seq("content_md5"), "left_anti")
-    val keepers = fresh.groupBy(col("content_md5"))
-      .agg(min(col("media_id")).as("media_id"))
-    val kept = fresh
-      .join(keepers, Seq("content_md5", "media_id"), "left_semi")
-      .localCheckpoint()
-    hashed.unpersist()
-    StoreLifecycle.replacePartitions(
-      kept.select(col("content_md5"), lit(batchId).as("__batch_id")),
-      storeDir, "__batch_id")
-    kept.select(col("media_id"), col("kind"), col("bytes"))
-  }
-
-  private def imageHasher(images: DataFrame): DataFrame =
-    graft.multimodal.Multimodal.perceptualHashImagesBatched(images)
-      .toDF().select(col("media_id"), col("ahash"))
-
-  private def audioHasher(audio: DataFrame): DataFrame =
-    graft.multimodal.Multimodal.perceptualHashAudioBatched(audio)
-      .toDF().select(col("media_id"), col("ehash"))
-
-  private def clipHasher(videos: DataFrame): DataFrame =
-    graft.multimodal.Multimodal.perceptualHashVideoBatched(videos)
-      .toDF().select(col("media_id"), col("chash"))
+  /** The perceptual passes in chain order: (store, kind, hasher). */
+  private val passes: Seq[(String, String, DataFrame => DataFrame)] = Seq(
+    ("store_image", "image", StreamingMediaDedup.hasher),
+    ("store_audio", "audio", StreamingAudioDedup.hasher),
+    ("store_clip", "video", StreamingClipDedup.hasher))
 
   /** One micro-batch through the whole chain. Layout under `baseDir`:
     * store_exact / store_image / store_audio / store_clip /
@@ -89,25 +48,23 @@ object MediaIngestJob {
     */
   def ingestBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       baseDir: String, maxHamming: Int = 7): DataFrame = {
-    val b1 = exactBatch(spark, batch, batchId, s"$baseDir/store_exact")
-    val b2 = PerceptualDedupCore.dedupBatch(spark, b1, batchId,
-        s"$baseDir/store_image", outDir = s"$baseDir/unused",
-        maxHamming, "image", imageHasher, writeOut = false)
+    // byte-exact gate: the lowest media_id per md5 not stored earlier
+    val exact = IngestGate.exact(
+        batch.select(col("media_id"), col("kind"), col("bytes"),
+          md5(col("bytes")).as("content_md5")),
+        batchId, s"$baseDir/store_exact", "content_md5", "media_id",
+        Seq("content_md5"))
       .select(col("media_id"), col("kind"), col("bytes"))
-    val b3 = PerceptualDedupCore.dedupBatch(spark, b2, batchId,
-        s"$baseDir/store_audio", outDir = s"$baseDir/unused",
-        maxHamming, "audio", audioHasher, writeOut = false)
-      .select(col("media_id"), col("kind"), col("bytes"))
-    val b4 = PerceptualDedupCore.dedupBatch(spark, b3, batchId,
-        s"$baseDir/store_clip", outDir = s"$baseDir/unused",
-        maxHamming, "video", clipHasher, writeOut = false)
-      .select(col("media_id"), col("kind"), col("bytes"))
+    val admitted = passes.foldLeft(exact) { case (b, (store, kind, hasher)) =>
+        PerceptualDedupCore.admit(b, batchId, s"$baseDir/$store", maxHamming,
+          kind, hasher)
+      }
       .localCheckpoint() // admitted set is final: cut the 4-stage lineage
-    val admitted = b4.withColumn("__batch_id", lit(batchId))
-    StoreLifecycle.replacePartitions(admitted, s"$baseDir/out", "kind", "__batch_id")
-    StreamingFrameDedup.dedupBatch(spark, b4, batchId,
+    val out = admitted.withColumn("__batch_id", lit(batchId))
+    StoreLifecycle.replacePartitions(out, s"$baseDir/out", "kind", "__batch_id")
+    StreamingFrameDedup.dedupBatch(spark, admitted, batchId,
       s"$baseDir/store_frames", s"$baseDir/frames")
-    admitted
+    out
   }
 
   def start(media: DataFrame, baseDir: String, checkpoint: String,

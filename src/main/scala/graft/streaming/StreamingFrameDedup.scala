@@ -16,12 +16,12 @@ import graft.sources.StoreLifecycle
   *
   * Unlike the perceptual members this is EXACT identity (the q_frame_dedup
   * semantics: md5 over the hex of the byte slice), so the store needs no
-  * banding: (frame_md5, fkey) rows, hive-partitioned by batch id with
-  * dynamic overwrite so replays converge. Payload bytes are sliced and
-  * hashed partition-locally; only 16-byte fingerprints enter the store
-  * or any shuffle. StreamingFrameDedupSpec pins the stream-maintained
-  * admitted set equal to the batch keeper set (min fkey per distinct
-  * frame) under id-ordered ingest, across any slicing.
+  * banding: an [[IngestGate.exact]] gate over (frame_md5, fkey) rows.
+  * Payload bytes are sliced and hashed partition-locally; only 16-byte
+  * fingerprints enter the store or any shuffle. StreamingFrameDedupSpec
+  * pins the stream-maintained admitted set equal to the batch keeper set
+  * (min fkey per distinct frame) under id-ordered ingest, across any
+  * slicing.
   */
 object StreamingFrameDedup {
 
@@ -43,40 +43,15 @@ object StreamingFrameDedup {
         (col("media_id") * 4 + col("fi")).as("fkey"),
         md5(hex(expr("substring(bytes, st + 1, fl)"))).as("frame_md5"))
 
-  /** Dedup one micro-batch's frames against the store; admitted frame
-    * rows go to `outDir/__batch_id=<id>` and to the store — both
-    * dynamic-overwrite, so replays converge.
+  /** Dedup one micro-batch's frames through [[IngestGate.exact]] (key
+    * frame_md5, keeper the min fkey); admitted frame rows go to
+    * `outDir/__batch_id=<id>`, partition-replacing, so replays converge.
     */
   def dedupBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       storeDir: String, outDir: String): DataFrame = {
-    val f = frames(batch).persist()
-    val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val storeExists = storePath
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(storePath)
-    val store: DataFrame =
-      // strictly-earlier batches only, same reason as PerceptualDedupCore:
-      // a replayed batch must not anti-join against its own prior rows or
-      // the recovery write-out is empty and the batch's frames are lost
-      if (storeExists)
-        spark.read.parquet(storeDir)
-          .filter(col("__batch_id") < batchId)
-          .select(col("frame_md5"))
-      else
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("frame_md5", StringType))))
-    val fresh = f.join(store, Seq("frame_md5"), "left_anti")
-    // within-batch resolution: the batch keeper is the smallest fkey per
-    // fingerprint (exact, order-free — one integer MIN)
-    val keepers = fresh.groupBy(col("frame_md5")).agg(min(col("fkey")).as("fkey"))
-    val kept = fresh.join(keepers, Seq("frame_md5", "fkey"), "left_semi")
-      .select(col("media_id"), col("fi"), col("fkey"), col("frame_md5"))
-      .localCheckpoint()
-    f.unpersist()
-    StoreLifecycle.replacePartitions(
-      kept.select(col("frame_md5"), col("fkey"), lit(batchId).as("__batch_id")),
-      storeDir, "__batch_id")
-    val out = kept.withColumn("__batch_id", lit(batchId))
+    val out = IngestGate.exact(frames(batch), batchId, storeDir, "frame_md5",
+        "fkey", Seq("frame_md5", "fkey"))
+      .withColumn("__batch_id", lit(batchId))
     StoreLifecycle.replacePartitions(out, outDir, "__batch_id")
     out
   }

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.sources.StoreLifecycle
 
 /** Streaming form of the packed-training-shard writer
@@ -29,23 +30,22 @@ object StreamingPackedShards {
 
   private val TailDocId = -1L // sorts before every real doc_id (>= 0)
 
+  /** The ledger layout: packBatch writes it, [[state]] reads it. */
+  private val Ledger = StructType(Seq(StructField("next_seq", LongType, false),
+    StructField("tail", ArrayType(IntegerType, false)),
+    StructField("__batch_id", LongType, false)))
+
   /** (next_seq, tail) after the latest batch strictly before `batchId` —
     * the deterministic predecessor state a (re)play of `batchId` packs
     * from.
     */
   def state(spark: SparkSession, storeDir: String,
       batchId: Long): (Long, Seq[Int]) = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val exists = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    if (!exists) (0L, Nil)
-    else {
-      val rows = spark.read.parquet(storeDir)
-        .filter(col("__batch_id") < batchId)
-        .orderBy(col("__batch_id").desc).limit(1)
-        .select(col("next_seq"), col("tail")).collect()
-      if (rows.isEmpty) (0L, Nil)
-      else (rows(0).getLong(0), rows(0).getSeq[Int](1))
-    }
+    val rows = StoreLifecycle.priorLayers(spark, storeDir, batchId, Ledger)
+      .orderBy(col("__batch_id").desc).limit(1)
+      .select(col("next_seq"), col("tail")).collect()
+    if (rows.isEmpty) (0L, Nil)
+    else (rows(0).getLong(0), rows(0).getSeq[Int](1))
   }
 
   /** Pack one micro-batch of (doc_id, text) rows. Emits complete
@@ -81,7 +81,8 @@ object StreamingPackedShards {
       .select(col("tokens")).collect()
       .headOption.map(_.getSeq[Int](0)).getOrElse(Nil)
     StoreLifecycle.replacePartitions(
-      Seq((nextSeq + nComplete, newTail, batchId)).toDF("next_seq", "tail", "__batch_id"),
+      spark.createDataFrame(java.util.List.of(Row(nextSeq + nComplete, newTail, batchId)),
+        Ledger),
       storeDir, "__batch_id")
   }
 

@@ -49,3 +49,13 @@ trait GraftExpectsBinaryDouble
     Seq(org.apache.spark.sql.types.BinaryType,
       org.apache.spark.sql.types.DoubleType)
 }
+
+/** Validation only, no implicit cast: a long or int input, anything else
+  * fails analysis (a string key must not be cast to a number silently).
+  */
+trait GraftExpectsLongOrInt
+    extends org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] =
+    Seq(org.apache.spark.sql.types.TypeCollection(
+      org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType))
+}

@@ -51,4 +51,18 @@ class SourceHygieneSpec extends AnyFunSuite {
     // any string literal naming the mode: the writer option or the session conf
     assert(offenders("partitionOverwriteMode\"", "StoreLifecycle.scala").isEmpty)
   }
+
+  test("prior-layer reads go through StoreLifecycle.priorLayers") {
+    assert(offenders("""__batch_id"\)\s*<""", "StoreLifecycle.scala").isEmpty)
+  }
+
+  test("LSH band expressions are written only in the banding functions") {
+    // MinHash: xxhash64 over a band's signature slice; Hamming: a shifted
+    // band of the hash masked into a key. Multimodal's precomputed-key
+    // bandings (element_at(k, bb + 1) AS key) are neither.
+    val minhash = """xxhash64\(slice\([^,]+,\s*b\s*\*"""
+    val hamming = """shiftright\([^,]+,\s*b\s*\*[^)]*\)\s*&[^)]*\bAS key"""
+    assert(offenders(minhash, "TextFunctions.scala").isEmpty, "MinHash bands")
+    assert(offenders(hamming, "TextFunctions.scala").isEmpty, "Hamming bands")
+  }
 }

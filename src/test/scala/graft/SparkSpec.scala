@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +25,24 @@ trait SparkSpec extends AnyFunSuite {
   val sf001 = "/root/testdata/sf0.01"
 
   def ts(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
+
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides, so the count is exactly the body's).
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(l)
+  }
 
   /** Run `f` with the RocksDB state-store provider (required by
     * transformWithState), restoring the previous provider afterwards so

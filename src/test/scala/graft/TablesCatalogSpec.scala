@@ -2,12 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -20,24 +17,6 @@ import graft.sources.TextIndexStore
 class TablesCatalogSpec extends SparkSpec {
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
-
-  /** Spark jobs started while `body` runs (listener bus drained on both
-    * sides, so the count is exactly the body's).
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      ListenerBusDrain(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString

@@ -1,11 +1,7 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -105,20 +101,6 @@ class RetrievalIndexSpec extends SparkSpec {
     assert(before == after, "fresh index was rebuilt")
   }
 
-  /** Spark jobs started while `body` runs (listener bus drained on both
-    * sides, so the count is exactly the body's).
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerBusDrain(sc); n.get } finally sc.removeSparkListener(l)
-  }
-
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -145,9 +127,9 @@ class RetrievalIndexSpec extends SparkSpec {
   test("stored BM25 runs at most 2 jobs and hybrid RRF at most 3") {
     noop(TextIndexStore.bm25(spark, idx, qterms))
     noop(TextIndexStore.hybridRrf(spark, idx, qterms))
-    val bm = jobsDuring(noop(TextIndexStore.bm25(spark, idx, qterms)))
+    val bm = jobsDuring(noop(TextIndexStore.bm25(spark, idx, qterms)))._2
     assert(bm <= 2, s"bm25 ran $bm jobs")
-    val rrf = jobsDuring(noop(TextIndexStore.hybridRrf(spark, idx, qterms)))
+    val rrf = jobsDuring(noop(TextIndexStore.hybridRrf(spark, idx, qterms)))._2
     assert(rrf <= 3, s"hybridRrf ran $rrf jobs")
   }
 

@@ -3,8 +3,9 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.streaming.{StreamingCms, StreamingFrameDedup, StreamingNbTrain,
-  StreamingNearDedup, StreamingPackedShards}
+import graft.streaming.{MediaIngestJob, StreamingCms, StreamingFrameDedup,
+  StreamingMediaDedup, StreamingNbTrain, StreamingNearDedup, StreamingPackedShards}
+import graft.streaming.MediaPayloads._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -46,6 +47,20 @@ class StoreCrashMatrixSpec extends SparkSpec {
   private def half(df: DataFrame, key: String, i: Int) = df.filter(col(key) % 2 === i)
   private def media(ids: Range) = ids.map(i =>
       (i.toLong, "video", Array.tabulate[Byte](64)(j => ((i % 3) * 7 + j).toByte)))
+    .toDF("media_id", "kind", "bytes")
+
+  // the perceptual gate admits one image of each batch and drops the
+  // other as a near-duplicate
+  private def images(i: Int) = Seq(
+      (i * 2L, "image", enc(img(64, 48, seed = i), if (i == 0) "png" else "bmp")),
+      (i * 2L + 1, "image", enc(img(64, 48, seed = 5 + i), "png")))
+    .toDF("media_id", "kind", "bytes")
+  // batch 1 repeats batch 0's audio bytes (the exact gate drops them)
+  // next to a fresh image and a clip of reordered frames
+  private def mixed(i: Int) = Seq(
+      (i * 3L, "audio", envWav(8000, 8000f, 12000)),
+      (i * 3L + 1, "image", enc(img(64, 48, seed = 7 + i), "png")),
+      (i * 3L + 2, "video", animatedGif(Seq(0, 1, 2, 3).map(q => quadrantImage(64, 48, (q + i) % 4)))))
     .toDF("media_id", "kind", "bytes")
 
   private def fs = StoreLifecycle.fs(spark, "crashfs:///")
@@ -203,6 +218,12 @@ class StoreCrashMatrixSpec extends SparkSpec {
     batches("StreamingFrameDedup.dedupBatch", "out", Seq("store", "out"),
       (i, d) => StreamingFrameDedup.dedupBatch(spark, media(i * 6 until i * 6 + 6),
         i.toLong, s"$d/store", s"$d/out")),
+    batches("StreamingMediaDedup.dedupBatch", "out", Seq("store", "out"),
+      (i, d) => StreamingMediaDedup.dedupBatch(spark, images(i), i.toLong,
+        s"$d/store", s"$d/out", 7)),
+    // every store and out table of the chain lives under `store`
+    batches("MediaIngestJob.ingestBatch", "out", Seq("store"),
+      (i, d) => MediaIngestJob.ingestBatch(spark, mixed(i), i.toLong, s"$d/store")),
     batches("StreamingPackedShards.packBatch", "store", Seq("store", "out"),
       (i, d) => StreamingPackedShards.packBatch(spark,
         half(docs, "doc_id", i).select("doc_id", "text"), i.toLong,

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -37,5 +38,15 @@ class StreamingCmsSpec extends SparkSpec {
       graft.functions.CountMin.DefaultDepth, graft.functions.CountMin.DefaultWidth)
     val truth = keys.count(_ == 7L)
     assert(est >= truth && est <= truth + 20, s"est $est vs true $truth")
+  }
+
+  test("a string key fails at analysis and runs no job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cms_string").toString
+    val batch = Seq(("a", 1L), ("b", 2L)).toDF("source", "n")
+    val (e, jobs) = jobsDuring(intercept[AnalysisException](
+      StreamingCms.sketchBatch(spark, batch, 0L, "source", s"$dir/store")))
+    assert(e.getMessage.contains("cms_agg"), e.getMessage)
+    assert(jobs == 0, s"$jobs jobs ran")
+    assert(!new java.io.File(s"$dir/store").exists())
   }
 }
