@@ -1029,6 +1029,19 @@ object TextFunctions {
       s"transform(sequence(0, ${bands - 1}), b -> struct(b AS band, shiftright($h, b * $keyBits) & $mask AS key))")
   }
 
+  /** One query term's BM25 score in one document: k1 = 1.2, b = 0.75
+    * and the ratio idf (N - df + 0.5) / (df + 0.5), with no log, so that
+    * every step is one IEEE op and Spark and DuckDB agree bit for bit.
+    * `tf` is the term's count in the document, `dl` the document's
+    * length, `avgdl` the corpus's mean length, `nDocs` its document
+    * count and `df` the term's document frequency.
+    */
+  def bm25Term(tf: Column, dl: Column, avgdl: Column, nDocs: Column, df: Column): Column = {
+    import org.apache.spark.sql.functions.lit
+    tf * 2.2 / (tf + lit(1.2) * (lit(0.25) + lit(0.75) * (dl / avgdl))) *
+      ((nDocs - df + 0.5) / (df + 0.5))
+  }
+
   /** Common-element count of two sorted long arrays (allocation-free). */
   def sortedIntersectCount(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.GraftSqlShims.column(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.functions.TextFunctions
 
 /** Corpus-analytics batch: the term-statistics, deterministic-sampling and
   * calendar operators a training-data pipeline runs corpus-wide, plus the
@@ -792,9 +793,8 @@ object CorpusOps {
         val scored = tfq.join(broadcast(dfq), Seq("term"))
           .join(dl, Seq("doc_id"))
           .crossJoin(broadcast(stats))
-          .withColumn("score",
-            col("tf") * 2.2 / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / col("avgdl"))))
-              * ((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
+          .withColumn("score", TextFunctions.bm25Term(col("tf"), col("dl"),
+            col("avgdl"), col("n_docs"), col("df")))
         scored.groupBy(col("doc_id"))
           .agg(max(when(col("term") === "hash", col("score"))).as("s_hash"),
             max(when(col("term") === "join", col("score"))).as("s_join"),
@@ -990,9 +990,8 @@ object CorpusOps {
         val scored = tfq.join(broadcast(dfq), Seq("term"))
           .join(dl, Seq("doc_id"))
           .crossJoin(broadcast(stats))
-          .withColumn("score",
-            col("tf") * 2.2 / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / col("avgdl"))))
-              * ((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
+          .withColumn("score", TextFunctions.bm25Term(col("tf"), col("dl"),
+            col("avgdl"), col("n_docs"), col("df")))
         val bm = scored.groupBy(col("doc_id"))
           .agg((coalesce(max(when(col("term") === "hash", col("score"))), lit(0.0))
             + coalesce(max(when(col("term") === "join", col("score"))), lit(0.0))
@@ -1563,10 +1562,8 @@ object CorpusOps {
     val scored = tfq.join(broadcast(dfq), Seq("term"))
       .join(dl, Seq("doc_id", "cidx"))
       .crossJoin(broadcast(stats))
-      .withColumn("score",
-        col("tf") * 2.2 / (col("tf") +
-          lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / col("avgdl"))))
-          * ((col("n_chunks") - col("df") + 0.5) / (col("df") + 0.5)))
+      .withColumn("score", TextFunctions.bm25Term(col("tf"), col("dl"),
+        col("avgdl"), col("n_chunks"), col("df")))
     val out = scored.groupBy(col("doc_id"), col("cidx"))
       .agg(max(when(col("term") === "sort", col("score"))).as("s1"),
         max(when(col("term") === "stream", col("score"))).as("s2"),

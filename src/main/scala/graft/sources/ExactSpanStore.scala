@@ -54,11 +54,8 @@ object ExactSpanStore {
     StoreLifecycle.defaultDir(spark, s"graft_span_index_L$minLen", sfDir)
 
   private def fingerprintOf(spark: SparkSession, sfDir: String,
-      minLen: Int): String = {
-    val p = s"$sfDir/documents.parquet"
-    s"v$FormatVersion|L$minLen|${new org.apache.hadoop.fs.Path(p)}|" +
-      graft.Tables.fingerprint(spark, p)
-  }
+      minLen: Int): String =
+    StoreLifecycle.marker(spark, FormatVersion, s"$sfDir/documents.parquet", s"L$minLen")
 
   /** The per-granularity content projection: chars = the text column,
     * bytes = its UTF-8 encoding (the repeatedSpansExactBytes

@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * overwrites its own partitions with the same bytes, so the store
   * CONVERGES under replay; batches never contend. The probe is the
   * shared [[ExactSpanStore.spansFromWindows]] core over the union of
-  * all layers — cross-layer repeats are found because the
+  * all layers, read with the writer's schema so no read infers one —
+  * cross-layer repeats are found because the
   * duplicated-hash set groups over ALL layers, so incremental
   * maintenance changes bytes-read, never spans (ExactSpanStoreSpec
   * pins bit-identity against the batch-built store). Read cost grows
@@ -55,7 +56,8 @@ object IncrementalExactSpanStore {
       minLen: Int, crossDocOnly: Boolean = true,
       bytes: Boolean = false): DataFrame =
     ExactSpanStore.spansFromWindows(
-      spark.read.parquet(s"$indexDir/wins").select("doc_id", "pos", "h"),
+      spark.read.schema("doc_id BIGINT, pos BIGINT, h BIGINT, bucket BIGINT, __batch_id BIGINT")
+        .parquet(s"$indexDir/wins").select("doc_id", "pos", "h"),
       docs, minLen, crossDocOnly, bytes)
 
   /** Run the maintainer as a streaming job: every micro-batch of

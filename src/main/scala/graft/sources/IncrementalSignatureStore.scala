@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * bytes, so the store CONVERGES under replay; batches never contend.
   * The probe path is the shared [[SignatureStore.matchAgainst]] core —
   * bucket partition pruning on the probes' bucket ids works unchanged
-  * because `bucket` remains the leading hive partition level. Read cost
+  * because `bucket` remains the leading hive partition level — over the
+  * layers read with the writer's schema, so no read infers one. Read cost
   * grows with batch COUNT (the LSM trade); `compact` folds committed
   * layers into one and is match-set-neutral (spec-pinned).
   */
@@ -61,11 +62,13 @@ object IncrementalSignatureStore {
       maxBucket: Int = 1000): DataFrame =
     SignatureStore.matchAgainst(spark, probes, minJaccard, bands, rows,
       maxBucket,
-      bucketsFor = bs => spark.read.parquet(s"$indexDir/buckets")
+      bucketsFor = bs => spark.read
+        .schema("band INT, bh BIGINT, doc_id BIGINT, bucket BIGINT, __batch_id BIGINT")
+        .parquet(s"$indexDir/buckets")
         .filter(col("bucket").isin(bs: _*))
         .select("band", "bh", "doc_id", "bucket"),
-      storeArrays = spark.read.parquet(s"$indexDir/arrays")
-        .select("doc_id", "n_sh", "hs"))
+      storeArrays = spark.read.schema("doc_id BIGINT, n_sh INT, hs ARRAY<BIGINT>, __batch_id BIGINT")
+        .parquet(s"$indexDir/arrays").select("doc_id", "n_sh", "hs"))
 
   /** Run the maintainer as a streaming job: every micro-batch of
     * (doc_id, text) appends its own store layer — the checkpointed

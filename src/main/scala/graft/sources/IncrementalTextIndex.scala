@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming-maintained inverted index — the MAINTENANCE half of the
   * stored-index story ([[TextIndexStore]] is the batch-build half): new
@@ -26,16 +25,16 @@ import org.apache.spark.sql.types._
   *  - batches never contend: batch M's writes touch only `__batch_id=M`
   *    partitions.
   *
-  * The read side aggregates the deltas: df(term) = Σ per-batch df over
-  * the PRUNED buckets (the same xxhash64-mod-64 partition pruning as the
-  * batch index, so the aggregation reads |query buckets|/64 of the delta
-  * bytes); (n_docs, avgdl) fold from the 1-row-per-batch corpusstats.
-  * Read cost therefore grows with batch COUNT, not corpus size — the
-  * standard LSM trade, and the reason a periodic compaction (fold old
-  * `__batch_id` partitions into one, same shape as
-  * `streaming/LakeMaintenance`'s small-file compaction) bounds the tail;
-  * scoring arithmetic is identical to TextIndexStore.bm25, so compaction
-  * changes bytes-read, never results.
+  * The read side folds the deltas on the driver: (n_docs, avgdl) from
+  * the 1-row-per-batch corpusstats, the way the stored index reads its
+  * `_STATS` sidecar, and df(term) = Σ per-batch df over the PRUNED
+  * buckets (the batch index's xxhash64-mod-64 partition pruning, so the
+  * fold reads |query buckets|/64 of the delta bytes). Scoring is then
+  * [[TextIndexStore]]'s own core over the layered postings. Every table
+  * is read with the writer's schema, so no read infers one. Read cost
+  * grows with batch COUNT, not corpus size — the standard LSM trade,
+  * and the reason a periodic compaction ([[compactTo]]) bounds the tail;
+  * compaction changes bytes-read, never results.
   *
   * Corpus semantics are append-only: a doc_id re-ingested in a later
   * batch counts twice, exactly as it would in the corpus itself —
@@ -44,7 +43,26 @@ import org.apache.spark.sql.types._
   */
 object IncrementalTextIndex {
 
-  import TextIndexStore.{Buckets, bucketOf}
+  import TextIndexStore.Buckets
+
+  // the writer's schema of each table: a read with it infers nothing
+  private val Schemas = Map(
+    "postings" -> "doc_id BIGINT, term STRING, tf BIGINT, dl BIGINT, bucket BIGINT, __batch_id BIGINT",
+    "termdelta" -> "term STRING, df BIGINT, bucket BIGINT, __batch_id BIGINT",
+    "corpusstats" -> "n_docs BIGINT, sum_dl BIGINT, __batch_id BIGINT")
+
+  private def table(spark: SparkSession, indexDir: String, name: String): DataFrame =
+    spark.read.schema(Schemas(name)).parquet(s"$indexDir/$name")
+
+  /** (n_docs, avgdl) over every batch, summed on the driver from the
+    * one-row-per-batch corpusstats: avgdl is the same one double division
+    * as the batch build's, so the two index forms score bit-identically.
+    */
+  private def corpusStats(spark: SparkSession, indexDir: String): (Long, Double) = {
+    val rows = table(spark, indexDir, "corpusstats").select("n_docs", "sum_dl").collect()
+    val nDocs = rows.map(_.getLong(0)).sum
+    (nDocs, rows.map(_.getLong(1)).sum.toDouble / nDocs)
+  }
 
   /** Index one document batch: three per-batch-partition writes, each
     * derived from `batch` alone. Idempotent per (batchId, batch).
@@ -89,46 +107,21 @@ object IncrementalTextIndex {
     ()
   }
 
-  /** BM25 over the maintained index: pruned postings scan × broadcast of
-    * the folded (pruned) term deltas × broadcast of the folded corpus
-    * stats. Identical arithmetic to TextIndexStore.bm25 — on the same
+  /** BM25 over the maintained index: the stored index's scoring and
+    * ranking core ([[TextIndexStore.scoredPostings]]) over the layered
+    * postings, with the corpus stats and the query terms' df folded on
+    * the driver (at most |qterms| termdelta rows per batch, read from the
+    * query buckets only), so the query broadcasts nothing. On the same
     * corpus the two index forms return bit-identical scores (spec-pinned).
     */
   def bm25(spark: SparkSession, indexDir: String, qterms: Seq[String],
       k: Int = 10): DataFrame = {
-    val qbuckets = qterms.map(bucketOf).distinct.map(_.toLong)
-    // explicit schemas (the writer's own, partition columns typed LONG as
-    // written): guide §6 — each bare read.parquet otherwise pays a
-    // schema-inference job over a footer before the real scan, three
-    // times per query on the merge-on-read path
-    val postings = spark.read.schema(
-        "term STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, " +
-        "bucket BIGINT, __batch_id BIGINT")
-      .parquet(s"$indexDir/postings")
-      .filter(col("bucket").isin(qbuckets: _*) && col("term").isin(qterms: _*))
-    val dfq = spark.read.schema(
-        "term STRING, df BIGINT, bucket BIGINT, __batch_id BIGINT")
-      .parquet(s"$indexDir/termdelta")
-      .filter(col("bucket").isin(qbuckets: _*) && col("term").isin(qterms: _*))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = spark.read.schema(
-        "n_docs BIGINT, sum_dl BIGINT, __batch_id BIGINT")
-      .parquet(s"$indexDir/corpusstats")
-      .agg(sum(col("n_docs")).as("n_docs"),
-        (sum(col("sum_dl")).cast(DoubleType) / sum(col("n_docs"))).as("avgdl"))
-    val scored = postings
-      .join(broadcast(dfq), Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("score",
-        col("tf") * 2.2 / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / col("avgdl"))))
-          * ((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-    val perTerm = qterms.map(tm =>
-      coalesce(max(when(col("term") === tm, col("score"))), lit(0.0)))
-    scored.groupBy(col("doc_id"))
-      .agg(perTerm.reduceLeft(_ + _).as("bm25"))
-      .select(col("doc_id"), col("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id"))
-      .limit(k)
+    val stats = corpusStats(spark, indexDir)
+    val df = TextIndexStore.ofTerms(table(spark, indexDir, "termdelta"), qterms)
+      .select("term", "df").collect()
+      .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+    TextIndexStore.topBm25(TextIndexStore.scoredPostings(table(spark, indexDir, "postings"),
+      qterms, stats, typedLit(df).apply(col("term"))), qterms, k)
   }
 
   /** Compact the merge-on-read deltas into the BATCH index layout
@@ -151,12 +144,10 @@ object IncrementalTextIndex {
     * store has no single source file to be fresh against.
     */
   def compactTo(spark: SparkSession, indexDir: String, storeDir: String): Unit = {
-    val postings = spark.read.parquet(s"$indexDir/postings")
-    val dfAll = spark.read.parquet(s"$indexDir/termdelta")
+    val postings = table(spark, indexDir, "postings")
+    val dfAll = table(spark, indexDir, "termdelta")
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val stats = spark.read.parquet(s"$indexDir/corpusstats")
-      .agg(sum(col("n_docs")).as("n_docs"),
-        (sum(col("sum_dl")).cast(DoubleType) / sum(col("n_docs"))).as("avgdl"))
+    val stats = corpusStats(spark, indexDir)
     // each doc lives in exactly one batch, so its distinct-term count
     // folds without double-count: n_terms = its posting count
     val nTerms = postings.groupBy(col("doc_id")).agg(count(lit(1)).as("n_terms"))
@@ -168,7 +159,7 @@ object IncrementalTextIndex {
       .sortWithinPartitions(col("term"), col("doc_id"))
     StoreLifecycle.build(spark, storeDir, s"stream-compacted|$indexDir")(
       tmp => merged.write.partitionBy("bucket").parquet(s"$tmp/postings"),
-      tmp => TextIndexStore.writeStats(spark, tmp, stats.head()))
+      tmp => TextIndexStore.writeStats(spark, tmp, stats))
   }
 
   /** Wire a (doc_id, text) document stream into continuous index

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
@@ -32,37 +31,40 @@ import graft.functions.VectorFunctions
   * Every append writes ONLY its own `__batch_id` partitions (dynamic
   * partition overwrite, per-writer option), so a crash-replayed batch
   * overwrites itself with the same bytes and the index CONVERGES —
-  * the IncrementalTextIndex discipline. The read side is unchanged
-  * arithmetic over `lists/` with the batch dimension folded in by the
-  * scan (hive partition discovery walks both levels, cell then
-  * __batch_id); read
-  * cost grows with batch count until [[compactTo]] folds the deltas
-  * into the batch [[VectorIndexStore]] layout — whose query path then
-  * serves the stream-built index verbatim.
+  * the IncrementalTextIndex discipline. The read side is the batch
+  * store's own query core over `lists/` with the batch dimension folded
+  * in by the scan (hive partition discovery walks both levels, cell then
+  * __batch_id), every table read with the writer's schema so no read
+  * infers one; read cost grows with batch count until [[compactTo]]
+  * folds the deltas into the batch [[VectorIndexStore]] layout — whose
+  * query path then serves the stream-built index verbatim.
   */
 object IncrementalVectorIndex {
 
-  import VectorIndexStore.{NList, NSub, NCent}
+  // the writer's schema of each table: a read with it infers nothing
+  private val Schemas = Map(
+    "centroids" -> "cell INT, centroid ARRAY<FLOAT>",
+    "codebook" -> "sub INT, cid INT, cv ARRAY<FLOAT>",
+    "lists" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, norm DOUBLE, cell INT, __batch_id BIGINT",
+    "codes" -> "vec_id BIGINT, codes ARRAY<INT>, cell INT, __batch_id BIGINT")
+
+  private def table(spark: SparkSession, indexDir: String, name: String): DataFrame =
+    spark.read.schema(Schemas(name)).parquet(s"$indexDir/$name")
+
+  private def loadCentroids(spark: SparkSession, indexDir: String): Seq[(Int, Seq[Float])] =
+    VectorIndexStore.centroidsOf(table(spark, indexDir, "centroids"))
 
   /** Freeze the vintage: centroids + PQ codebook from the base corpus,
     * then index the base corpus itself as batch 0.
     */
   def baseBuild(spark: SparkSession, base: DataFrame, indexDir: String): Unit = {
-    import spark.implicits._
     val emb = base.filter(col("embedding").isNotNull)
-    val cents = graft.ops.Similarity.refinedCentroids(spark, emb, NList)
-    val cb = graft.ops.Similarity.pqCodebook(emb, NSub, NCent)
-    val centDf = cents.map { case (c, v) => (c, v) }.toDF("cell", "centroid")
-    val cbDf = cb.zipWithIndex.flatMap { case (sub, s) =>
-      sub.zipWithIndex.map { case (cv, cid) => (s, cid, cv) }
-    }.toDF("sub", "cid", "cv")
-    centDf.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/centroids")
-    cbDf.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/codebook")
+    new VectorIndexStore.Vintage(spark, emb).writes.foreach(_(indexDir))
     appendBatch(spark, emb, 0L, indexDir)
   }
 
   private def loadCodebook(spark: SparkSession, indexDir: String): Seq[Seq[Seq[Float]]] = {
-    val rows = spark.read.parquet(s"$indexDir/codebook")
+    val rows = table(spark, indexDir, "codebook")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toIndexedSeq))
     rows.groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_._2).map(_._3).toIndexedSeq)
@@ -74,7 +76,7 @@ object IncrementalVectorIndex {
     */
   def appendBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       indexDir: String): Unit = {
-    val cents = VectorIndexStore.loadCentroids(spark, indexDir)
+    val cents = loadCentroids(spark, indexDir)
     val cb = loadCodebook(spark, indexDir)
     val assigned = graft.ops.Similarity.withNorm(spark,
         batch.filter(col("embedding").isNotNull))
@@ -101,37 +103,17 @@ object IncrementalVectorIndex {
     ()
   }
 
-  /** IVF top-k over the maintained index: identical arithmetic to
-    * [[VectorIndexStore.ivfTopK]] — the batch dimension is folded in by
-    * partition discovery, so on the same vintage + corpus the two index
-    * forms return identical rows (spec-pinned). Cell pruning still
-    * bites: `cell=` is the outer partition level.
+  /** IVF top-k over the maintained index: the batch store's core
+    * ([[VectorIndexStore.ivfTopK]]) over the layered lists — the batch
+    * dimension is folded in by partition discovery, so on the same
+    * vintage + corpus the two index forms return identical rows
+    * (spec-pinned). Cell pruning still bites: `cell=` is the outer
+    * partition level.
     */
   def ivfTopK(spark: SparkSession, indexDir: String, nQueries: Int, k: Int,
-      nprobe: Int = 4): DataFrame = {
-    val cents = VectorIndexStore.loadCentroids(spark, indexDir)
-    val lists = spark.read.parquet(s"$indexDir/lists")
-    val q = lists.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("a_emb"),
-        col("norm").as("a_norm"),
-        explode(VectorFunctions.nearestCells(col("embedding"), cents, nprobe))
-          .as("cell"))
-    val probed = q.select(col("cell")).distinct()
-      .collect().map(_.getInt(0).toLong).sorted
-    val cand = lists.filter(col("cell").isin(probed: _*))
-      .select(col("vec_id").as("n_id"), col("embedding").as("b_emb"),
-        col("norm").as("b_norm"), col("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    broadcast(q).join(cand, Seq("cell"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine",
-        VectorFunctions.floatDot(spark, col("a_emb"), col("b_emb"))
-          / (col("a_norm") * col("b_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"),
-        col("n_id"), col("cosine"))
-  }
+      nprobe: Int = 4): DataFrame =
+    VectorIndexStore.ivfTopKOver(spark, loadCentroids(spark, indexDir),
+      table(spark, indexDir, "lists"), nQueries, k, nprobe)
 
   /** Fold the per-batch partitions into the batch [[VectorIndexStore]]
     * layout (no batch dimension), copying the frozen centroids/codebook —
@@ -142,16 +124,16 @@ object IncrementalVectorIndex {
     * correctly treat it as a different vintage.
     */
   def compactTo(spark: SparkSession, indexDir: String, storeDir: String): Unit = {
-    val lists = spark.read.parquet(s"$indexDir/lists")
+    val lists = table(spark, indexDir, "lists")
       .select(col("vec_id"), col("embedding"), col("norm"), col("cell"))
       .transform(graft.Par.byKey(col("cell")))
       .sortWithinPartitions(col("vec_id"))
-    val codes = spark.read.parquet(s"$indexDir/codes")
+    val codes = table(spark, indexDir, "codes")
       .select(col("vec_id"), col("codes"), col("cell"))
       .transform(graft.Par.byKey(col("cell")))
       .sortWithinPartitions(col("vec_id"))
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    val cb = spark.read.parquet(s"$indexDir/codebook")
+    val cents = table(spark, indexDir, "centroids")
+    val cb = table(spark, indexDir, "codebook")
     StoreLifecycle.build(spark, storeDir, s"stream-compacted|$indexDir")(
       tmp => lists.write.partitionBy("cell").parquet(s"$tmp/lists"),
       tmp => codes.write.partitionBy("cell").parquet(s"$tmp/codes"),

@@ -47,11 +47,9 @@ object SignatureStore {
   private val FormatVersion = 1
 
   private def fingerprintOf(spark: SparkSession, sfDir: String,
-      bands: Int, rows: Int): String = {
-    val p = s"$sfDir/documents.parquet"
-    s"v$FormatVersion|${bands}x$rows|${new org.apache.hadoop.fs.Path(p)}|" +
-      graft.Tables.fingerprint(spark, p)
-  }
+      bands: Int, rows: Int): String =
+    StoreLifecycle.marker(spark, FormatVersion, s"$sfDir/documents.parquet",
+      s"${bands}x$rows")
 
   /** Corpus shingle arrays, sorted for the verify kernel. */
   private[sources] def sortedArrays(docs: DataFrame): DataFrame =

@@ -86,6 +86,16 @@ object StoreLifecycle {
       finally in.close()
     }
 
+  /** The marker of a store built from the table at `source`:
+    * `v<version>|<params>|<source path>|<len|mtime>`, with no params
+    * segment when there are none. A store whose marker differs is stale,
+    * so the format, the layout `version` and the build `params` decide
+    * what a rebuild is.
+    */
+  def marker(spark: SparkSession, version: Int, source: String, params: String*): String =
+    (s"v$version" +: params :+ new Path(source).toString :+
+      graft.Tables.fingerprint(spark, source)).mkString("|")
+
   private def isFresh(f: FileSystem, dir: String, want: String): Boolean =
     readText(f, new Path(dir, Marker)).contains(want)
 

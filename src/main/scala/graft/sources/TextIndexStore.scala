@@ -64,24 +64,20 @@ object TextIndexStore {
     */
   private val FormatVersion = 3
 
-  private def fingerprintOf(spark: SparkSession, sfDir: String): String = {
-    val p = s"$sfDir/documents.parquet"
-    s"v$FormatVersion|${new Path(p)}|${graft.Tables.fingerprint(spark, p)}"
-  }
+  private def fingerprintOf(spark: SparkSession, sfDir: String): String =
+    StoreLifecycle.marker(spark, FormatVersion, s"$sfDir/documents.parquet")
 
   private val StatsFile = "_STATS"
 
-  /** Write the (n_docs, avgdl) sidecar into the staged tree `tmp`, from
-    * the one-row stats aggregate. `Double.toString` round-trips, so the
-    * read-back avgdl is bit-identical to the aggregate's; an empty
-    * corpus (null avgdl, and no postings to score) stores NaN.
+  /** Write the (n_docs, avgdl) sidecar into the staged tree `tmp`.
+    * `Double.toString` round-trips, so the read-back avgdl is
+    * bit-identical to the one written; an empty corpus (no postings to
+    * score) stores NaN.
     */
   private[sources] def writeStats(spark: SparkSession, tmp: String,
-      stats: org.apache.spark.sql.Row): Unit = {
-    val avgdl = if (stats.isNullAt(1)) Double.NaN else stats.getDouble(1)
+      stats: (Long, Double)): Unit =
     StoreLifecycle.writeText(StoreLifecycle.fs(spark, tmp), new Path(tmp, StatsFile),
-      s"n_docs=${stats.getLong(0)}\navgdl=${java.lang.Double.toString(avgdl)}\n")
-  }
+      s"n_docs=${stats._1}\navgdl=${java.lang.Double.toString(stats._2)}\n")
 
   /** The index's (n_docs, avgdl), read from the sidecar on the driver. */
   private[sources] def readStats(spark: SparkSession, indexDir: String): (Long, Double) = {
@@ -144,7 +140,10 @@ object TextIndexStore {
     // relation (see above).
     StoreLifecycle.build(spark, indexDir, fingerprintOf(spark, sfDir))(
       tmp => postings.write.partitionBy("bucket").parquet(s"$tmp/postings"),
-      tmp => writeStats(spark, tmp, stats.head()))
+      tmp => {
+        val st = stats.head()
+        writeStats(spark, tmp, (st.getLong(0), if (st.isNullAt(1)) Double.NaN else st.getDouble(1)))
+      })
   }
 
   /** Build iff missing or stale (StoreLifecycle.ensure); returns the index dir. */
@@ -155,24 +154,30 @@ object TextIndexStore {
       build(spark, sfDir, indexDir))
   }
 
-  /** The query terms' postings — a partition-pruned scan (only the query
-    * terms' buckets) — each with its BM25 term score: k1=1.2, b=0.75,
-    * ratio idf, every step one IEEE op on the same values as `q_bm25`
-    * (bit-identical cross-engine). n_docs and avgdl enter the expression
-    * as literals from the `_STATS` sidecar.
+  /** The query terms' rows of a postings table (stored, or a twin's
+    * layers): bucket is pruned at planning, term by row group.
     */
-  private def scoredPostings(spark: SparkSession, indexDir: String,
-      qterms: Seq[String]): DataFrame = {
-    val (nDocs, avgdl) = readStats(spark, indexDir)
+  private[sources] def ofTerms(postings: DataFrame, qterms: Seq[String]): DataFrame = {
     val qbuckets = qterms.map(bucketOf).distinct.map(_.toLong)
-    graft.Tables.read(spark, s"$indexDir/postings")
-      // bucket is the hive partition column → PartitionFilters, pruned at
-      // planning; term is the sorted data column → row-group pruning
-      .filter(col("bucket").isin(qbuckets: _*) && col("term").isin(qterms: _*))
-      .withColumn("score",
-        col("tf") * 2.2 / (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * (col("dl") / lit(avgdl))))
-          * ((lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5)))
+    postings.filter(col("bucket").isin(qbuckets: _*) && col("term").isin(qterms: _*))
   }
+
+  /** The query terms' postings, each with its BM25 term score (the
+    * `q_bm25` arithmetic): the corpus (n_docs, avgdl) as literals, `df`
+    * the column that gives each posting's term its document frequency.
+    */
+  private[sources] def scoredPostings(postings: DataFrame, qterms: Seq[String],
+      stats: (Long, Double), df: Column): DataFrame =
+    ofTerms(postings, qterms).withColumn("score", graft.functions.TextFunctions.bm25Term(
+      col("tf"), col("dl"), lit(stats._2), lit(stats._1), df))
+
+  /** The stored index's scored postings: the stats from the `_STATS`
+    * sidecar, df from the postings themselves.
+    */
+  private def storedPostings(spark: SparkSession, indexDir: String,
+      qterms: Seq[String]): DataFrame =
+    scoredPostings(graft.Tables.read(spark, s"$indexDir/postings"), qterms,
+      readStats(spark, indexDir), col("df"))
 
   /** Per-doc BM25 as a fixed-order expression sum over pivoted per-term
     * scores (NOT a float SUM aggregate): double addition is not
@@ -183,17 +188,19 @@ object TextIndexStore {
     qterms.map(tm => coalesce(max(when(col("term") === tm, col("score"))), lit(0.0)))
       .reduceLeft(_ + _)
 
+  /** The top `k` documents by BM25 of scored postings. */
+  private[sources] def topBm25(scored: DataFrame, qterms: Seq[String], k: Int): DataFrame =
+    scored.groupBy(col("doc_id")).agg(bm25Sum(qterms).as("bm25"))
+      .orderBy(col("bm25").desc, col("doc_id"))
+      .limit(k)
+
   /** BM25 over the STORED index: one pruned postings scan and one
     * aggregate, zero corpus access and no broadcast. Shares `q_bm25`'s
     * oracle, which proves the stored path faithful to the in-query path.
     */
   def bm25(spark: SparkSession, indexDir: String, qterms: Seq[String],
       k: Int = 10): DataFrame =
-    scoredPostings(spark, indexDir, qterms)
-      .groupBy(col("doc_id"))
-      .agg(bm25Sum(qterms).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id"))
-      .limit(k)
+    topBm25(storedPostings(spark, indexDir, qterms), qterms, k)
 
   /** Hybrid BM25 + token-set-Jaccard retrieval fused by reciprocal-rank
     * (the q_hybrid_rrf semantics) over the STORED index: one per-doc
@@ -209,7 +216,7 @@ object TextIndexStore {
   def hybridRrf(spark: SparkSession, indexDir: String, qterms: Seq[String],
       k: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val perDoc = scoredPostings(spark, indexDir, qterms)
+    val perDoc = storedPostings(spark, indexDir, qterms)
       .groupBy(col("doc_id"))
       .agg(bm25Sum(qterms).as("bm25"), count(lit(1)).as("inter"),
         max(col("n_terms")).as("n_terms"))

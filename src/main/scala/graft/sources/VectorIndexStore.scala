@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -72,9 +72,26 @@ object VectorIndexStore {
   def defaultIndexDir(spark: SparkSession, sfDir: String): String =
     StoreLifecycle.defaultDir(spark, "graft_vector_index", sfDir)
 
-  private def fingerprintOf(spark: SparkSession, sfDir: String): String = {
-    val p = s"$sfDir/embeddings.parquet"
-    s"v$FormatVersion|${new org.apache.hadoop.fs.Path(p)}|${graft.Tables.fingerprint(spark, p)}"
+  private def fingerprintOf(spark: SparkSession, sfDir: String): String =
+    StoreLifecycle.marker(spark, FormatVersion, s"$sfDir/embeddings.parquet")
+
+  /** An index vintage: the refined centroids and PQ codebook of the
+    * non-null embeddings `emb` (the clustering the in-query path runs),
+    * and the writes of its `centroids/` and `codebook/` tables, one file
+    * each, into the directory each write is given.
+    */
+  private[sources] final class Vintage(spark: SparkSession, emb: DataFrame) {
+    val cents = graft.ops.Similarity.refinedCentroids(spark, emb, NList)
+    val cb = graft.ops.Similarity.pqCodebook(emb, NSub, NCent)
+    def writes: Seq[String => Unit] = {
+      import spark.implicits._
+      val centDf = cents.toDF("cell", "centroid")
+      val cbDf = cb.zipWithIndex.flatMap { case (sub, s) =>
+        sub.zipWithIndex.map { case (cv, cid) => (s, cid, cv) }
+      }.toDF("sub", "cid", "cv")
+      Seq(dir => centDf.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"),
+        dir => cbDf.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook"))
+    }
   }
 
   /** Build (or rebuild) the index: one clustering pass (the deterministic
@@ -83,17 +100,15 @@ object VectorIndexStore {
     * query.
     */
   def build(spark: SparkSession, sfDir: String, indexDir: String): Unit = {
-    import spark.implicits._
     val emb = graft.Tables.load(spark, sfDir, "embeddings")
       .filter(col("embedding").isNotNull)
-    val cents = graft.ops.Similarity.refinedCentroids(spark, emb, NList)
-    val cb = graft.ops.Similarity.pqCodebook(emb, NSub, NCent)
+    val v = new Vintage(spark, emb)
 
     // one pass computes the cell assignment; lists carry the vector and
     // its norm (so queries never recompute norms), codes carry only the
     // packed PQ codes — the compressed candidate representation
     val assigned = graft.ops.Similarity.withNorm(spark, emb)
-      .withColumn("cell", VectorFunctions.nearestCells(col("embedding"), cents, 1)(0))
+      .withColumn("cell", VectorFunctions.nearestCells(col("embedding"), v.cents, 1)(0))
       .persist()
     val lists = assigned
       .select(col("vec_id"), col("embedding"), col("norm"), col("cell"))
@@ -101,21 +116,15 @@ object VectorIndexStore {
       .sortWithinPartitions(col("vec_id"))
     val codes = assigned
       .select(col("vec_id"),
-        VectorFunctions.pqCodes(col("embedding"), cb).as("codes"), col("cell"))
+        VectorFunctions.pqCodes(col("embedding"), v.cb).as("codes"), col("cell"))
       .transform(graft.Par.byKey(col("cell")))
       .sortWithinPartitions(col("vec_id"))
-    val centDf = cents.map { case (c, v) => (c, v) }.toDF("cell", "centroid")
-    val cbDf = cb.zipWithIndex.flatMap { case (sub, s) =>
-      sub.zipWithIndex.map { case (cv, cid) => (s, cid, cv) }
-    }.toDF("sub", "cid", "cv")
-
     // four independent writes (one persisted relation, disjoint stage
     // paths) — overlapped by the lifecycle, marker written last
-    try StoreLifecycle.build(spark, indexDir, fingerprintOf(spark, sfDir))(
+    try StoreLifecycle.build(spark, indexDir, fingerprintOf(spark, sfDir))(Seq[String => Unit](
       tmp => lists.write.partitionBy("cell").parquet(s"$tmp/lists"),
-      tmp => codes.write.partitionBy("cell").parquet(s"$tmp/codes"),
-      tmp => centDf.coalesce(1).write.parquet(s"$tmp/centroids"),
-      tmp => cbDf.coalesce(1).write.parquet(s"$tmp/codebook"))
+      tmp => codes.write.partitionBy("cell").parquet(s"$tmp/codes")) ++
+      v.writes: _*)
     finally assigned.unpersist()
   }
 
@@ -131,9 +140,46 @@ object VectorIndexStore {
     * (NearestCells tie-breaks by cell id, so order is cosmetic).
     */
   def loadCentroids(spark: SparkSession, indexDir: String): Seq[(Int, Seq[Float])] =
-    graft.Tables.read(spark, s"$indexDir/centroids")
-      .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toIndexedSeq))
+    centroidsOf(graft.Tables.read(spark, s"$indexDir/centroids"))
+
+  /** A `centroids/` table's (cell, centroid) rows, collect()ed. */
+  private[sources] def centroidsOf(table: DataFrame): Seq[(Int, Seq[Float])] =
+    table.collect().map(r => (r.getInt(0), r.getSeq[Float](1).toIndexedSeq))
       .sortBy(_._1).toIndexedSeq
+
+  /** The `nprobe` `cents` cells nearest each row's `embedding`. */
+  private def probedCells(cents: Seq[(Int, Seq[Float])], nprobe: Int): Column =
+    VectorFunctions.nearestCells(col("embedding"), cents, nprobe)
+
+  /** One probe of the inverted lists, shared by every vector query over
+    * a store or its incremental twin: each `probes` row (vec_id,
+    * embedding, norm) explodes to its `nprobe` nearest cells as
+    * (`probeId`, a_emb, a_norm, cell), and each (probe, candidate) pair
+    * of a shared cell gets its `cosine` (the in-query path's fused
+    * dot-product codegen). ONE bounded job (<= nlist rows back) yields
+    * the probed cells, the literal IN list that makes the
+    * `candidates(cells)` scan prune its `cell` partitions at planning,
+    * and the exploded probe-row count that decides the join: at or under
+    * `broadcastRows` the probe side is broadcast; above, the join is left
+    * un-hinted on `cell` (a fat probe side — ~300 B a row — broadcast to
+    * every executor would pin GBs; AQE picks shuffle-hash, or broadcast
+    * again if runtime stats say the side is small after all).
+    */
+  private def probePairs(spark: SparkSession, cents: Seq[(Int, Seq[Float])],
+      probes: DataFrame, probeId: String, nprobe: Int, broadcastRows: Long)(
+      candidates: Seq[Long] => DataFrame): DataFrame = {
+    val q = probes
+      .select(col("vec_id").as(probeId), col("embedding").as("a_emb"),
+        col("norm").as("a_norm"),
+        explode(probedCells(cents, nprobe)).as("cell"))
+    val cellCounts = q.groupBy(col("cell")).agg(count(lit(1)).as("cn"))
+      .collect().map(r => (r.getInt(0).toLong, r.getLong(1)))
+    val probeSide = if (cellCounts.map(_._2).sum <= broadcastRows) broadcast(q) else q
+    probeSide.join(candidates(cellCounts.map(_._1).sorted), Seq("cell"))
+      .withColumn("cosine",
+        VectorFunctions.floatDot(spark, col("a_emb"), col("b_emb"))
+          / (col("a_norm") * col("b_norm")))
+  }
 
   /** IVF top-k over the STORED index: probe each query's `nprobe` nearest
     * cells, scan ONLY those cells' inverted lists (hive partition pruning
@@ -143,28 +189,23 @@ object VectorIndexStore {
     * index. Bit-identical to `Similarity.ivfTopK` (shared oracle).
     */
   def ivfTopK(spark: SparkSession, indexDir: String, nQueries: Int, k: Int,
-      nprobe: Int = 4): DataFrame = {
-    val cents = loadCentroids(spark, indexDir)
-    val lists = graft.Tables.read(spark, s"$indexDir/lists")
-    val q = lists.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("embedding").as("a_emb"),
-        col("norm").as("a_norm"),
-        explode(VectorFunctions.nearestCells(col("embedding"), cents, nprobe))
-          .as("cell"))
-    // the probed cell SET is computed driver-side (bounded at
-    // nQueries x nprobe values) so the lists scan partition-prunes at
-    // planning — the literal IN list is what makes PartitionFilters bite
-    val probed = q.select(col("cell")).distinct()
-      .collect().map(_.getInt(0).toLong).sorted
-    val cand = lists.filter(col("cell").isin(probed: _*))
-      .select(col("vec_id").as("n_id"), col("embedding").as("b_emb"),
-        col("norm").as("b_norm"), col("cell"))
+      nprobe: Int = 4): DataFrame =
+    ivfTopKOver(spark, loadCentroids(spark, indexDir),
+      graft.Tables.read(spark, s"$indexDir/lists"), nQueries, k, nprobe)
+
+  /** [[ivfTopK]] over the given centroids and inverted lists, however
+    * they are stored (the batch layout or an incremental twin's layers).
+    */
+  private[sources] def ivfTopKOver(spark: SparkSession, cents: Seq[(Int, Seq[Float])],
+      lists: DataFrame, nQueries: Int, k: Int, nprobe: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    broadcast(q).join(cand, Seq("cell"))
+    probePairs(spark, cents, lists.filter(col("vec_id") < nQueries), "q_id", nprobe,
+        broadcastRows = Long.MaxValue) { probed =>
+        lists.filter(col("cell").isin(probed: _*))
+          .select(col("vec_id").as("n_id"), col("embedding").as("b_emb"),
+            col("norm").as("b_norm"), col("cell"))
+      }
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine",
-        VectorFunctions.floatDot(spark, col("a_emb"), col("b_emb"))
-          / (col("a_norm") * col("b_norm")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank").cast("bigint").as("rank"),
@@ -189,48 +230,23 @@ object VectorIndexStore {
     * expansion. Zero-norm vectors are excluded on both legs (cosine
     * against a zero vector is NaN).
     *
-    * Join strategy is SIZE-CONDITIONAL, never forced: the probe side is
-    * eval × nprobe exploded rows each carrying a 64-float embedding
-    * (~300 B/row), so at the 10⁵–10⁶-vector eval suites this row exists
-    * for, a forced broadcast would pin GBs on every executor — the
-    * bottleneck it is supposed to avoid. The same bounded job that
-    * collects the probed-cell IN list also counts the exploded probe
-    * rows; at or under `broadcastEvalRows` the small-suite plan keeps
-    * the explicit broadcast, above it the join is left un-hinted on its
-    * `cell` key (AQE picks shuffle-hash for a genuinely fat suite, or
-    * re-converts to broadcast if runtime stats say the probe side is
-    * small after all). Same results either way — VectorIndexSpec pins
-    * row equality across the seam and the un-hinted fat-regime plan
-    * shape.
+    * The join strategy is size-conditional, never forced
+    * (`broadcastEvalRows`, see [[probePairs]]): the 10⁵–10⁶-vector eval
+    * suites this row exists for are too fat to broadcast. Same results
+    * either way — VectorIndexSpec pins row equality across the seam and
+    * the un-hinted fat-regime plan shape.
     */
   def semanticDecontaminate(spark: SparkSession, indexDir: String,
       minCos: Double, nprobe: Int = 4,
       broadcastEvalRows: Long = 100000L): DataFrame = {
-    val cents = loadCentroids(spark, indexDir)
     val lists = graft.Tables.read(spark, s"$indexDir/lists")
       .filter(col("norm") > 0)
-    val ev = lists.filter(col("vec_id") % 97 === 0)
-      .select(col("vec_id").as("eval_id"), col("embedding").as("a_emb"),
-        col("norm").as("a_norm"),
-        explode(VectorFunctions.nearestCells(col("embedding"), cents, nprobe))
-          .as("cell"))
-    // ONE bounded job (<= nlist rows back) yields both the literal IN
-    // list that makes the candidate scan partition-prune at planning
-    // (the ivfTopK convention) and the exploded probe-row count that
-    // decides the join strategy
-    val cellCounts = ev.groupBy(col("cell")).agg(count(lit(1)).as("cn"))
-      .collect().map(r => (r.getInt(0).toLong, r.getLong(1)))
-    val probed = cellCounts.map(_._1).sorted
-    val evRows = cellCounts.map(_._2).sum
-    val tr = lists.filter(col("vec_id") % 97 =!= 0 &&
-        col("cell").isin(probed: _*))
-      .select(col("vec_id"), col("embedding").as("b_emb"),
-        col("norm").as("b_norm"), col("cell"))
-    val evSide = if (evRows <= broadcastEvalRows) broadcast(ev) else ev
-    evSide.join(tr, Seq("cell"))
-      .withColumn("cosine",
-        VectorFunctions.floatDot(spark, col("a_emb"), col("b_emb"))
-          / (col("a_norm") * col("b_norm")))
+    probePairs(spark, loadCentroids(spark, indexDir), lists.filter(col("vec_id") % 97 === 0),
+        "eval_id", nprobe, broadcastEvalRows) { probed =>
+        lists.filter(col("vec_id") % 97 =!= 0 && col("cell").isin(probed: _*))
+          .select(col("vec_id"), col("embedding").as("b_emb"),
+            col("norm").as("b_norm"), col("cell"))
+      }
       .groupBy(col("vec_id"))
       .agg(max(struct(col("cosine"), (-col("eval_id")).as("neg_eval")))
         .as("best"))
@@ -250,35 +266,20 @@ object VectorIndexStore {
     * ([[graft.ops.Similarity.mineFromScored]]). Declared at the exact
     * regime (nprobe = NList — every pair scored once, coverage
     * provably complete) so the row shares the brute oracle verbatim.
-    * The probe-side broadcast is SIZE-CONDITIONAL (the
-    * semanticDecontaminate seam): one bounded job returns both the
-    * probed-cell IN list and the exploded probe-row count that decides
-    * the join strategy.
+    * The probe-side broadcast is size-conditional (`broadcastSrcRows`,
+    * see [[probePairs]]).
     */
   def bitextMine(spark: SparkSession, indexDir: String, k: Int = 4,
       minMargin: Double = 1.05, nprobe: Int = NList,
       broadcastSrcRows: Long = 100000L): DataFrame = {
-    val cents = loadCentroids(spark, indexDir)
     val lists = graft.Tables.read(spark, s"$indexDir/lists")
       .filter(col("norm") > 0)
-    val src = lists.filter(col("vec_id") % 2 === 0)
-      .select(col("vec_id").as("src_id"), col("embedding").as("a_emb"),
-        col("norm").as("a_norm"),
-        explode(VectorFunctions.nearestCells(col("embedding"), cents, nprobe))
-          .as("cell"))
-    val cellCounts = src.groupBy(col("cell")).agg(count(lit(1)).as("cn"))
-      .collect().map(r => (r.getInt(0).toLong, r.getLong(1)))
-    val probed = cellCounts.map(_._1).sorted
-    val srcRows = cellCounts.map(_._2).sum
-    val tgt = lists.filter(col("vec_id") % 2 =!= 0 &&
-        col("cell").isin(probed: _*))
-      .select(col("vec_id").as("tgt_id"), col("embedding").as("b_emb"),
-        col("norm").as("b_norm"), col("cell"))
-    val srcSide = if (srcRows <= broadcastSrcRows) broadcast(src) else src
-    val scored = srcSide.join(tgt, Seq("cell"))
-      .withColumn("cosine",
-        VectorFunctions.floatDot(spark, col("a_emb"), col("b_emb"))
-          / (col("a_norm") * col("b_norm")))
+    val scored = probePairs(spark, loadCentroids(spark, indexDir),
+        lists.filter(col("vec_id") % 2 === 0), "src_id", nprobe, broadcastSrcRows) { probed =>
+        lists.filter(col("vec_id") % 2 =!= 0 && col("cell").isin(probed: _*))
+          .select(col("vec_id").as("tgt_id"), col("embedding").as("b_emb"),
+            col("norm").as("b_norm"), col("cell"))
+      }
       .select(col("src_id"), col("tgt_id"), col("cosine"))
     graft.ops.Similarity.mineFromScored(scored, k, minMargin)
   }
@@ -297,7 +298,7 @@ object VectorIndexStore {
     val q = lists.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"),
-        VectorFunctions.nearestCells(col("embedding"), cents, nprobe).as("cells"))
+        probedCells(cents, nprobe).as("cells"))
     val cbDf = graft.Tables.read(spark, s"$indexDir/codebook")
     val subDim = 64 / NSub
     val lut = q.select(col("q_id"), col("q_emb")).crossJoin(broadcast(cbDf))

@@ -36,7 +36,7 @@ class SessionMemoSpec extends SparkSpec {
     * move their fingerprints without touching shared fixtures.
     */
   private def corpus(): String = {
-    val dir = Files.createTempDirectory("graft_memo")
+    val dir = Paths.get(graft.sources.Scratch.tempDir("graft_memo"))
     Seq("documents", "embeddings").foreach { t =>
       Files.copy(Paths.get(s"$sf0001/$t.parquet"), dir.resolve(s"$t.parquet"))
     }

@@ -8,15 +8,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level guard for the shared mechanisms: every session-lifetime
   * cache goes through [[SessionMemo]], every session is built through
-  * [[GraftSession]] and every store swap, marker and partition-replacing
-  * write through `sources.StoreLifecycle`, so hand-rolled copies cannot
-  * grow back under `src/main/scala`. Runs from the project root (sbt's
-  * forked test working directory).
+  * [[GraftSession]], every store swap, marker and partition-replacing
+  * write through `sources.StoreLifecycle`, and the BM25 and vector-probe
+  * arithmetic through their one core, so hand-rolled copies cannot grow
+  * back under `src/main/scala`; specs make their temp dirs through
+  * `sources.Scratch`. Runs from the project root (sbt's forked test
+  * working directory).
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
-  private lazy val sources: Seq[(Path, String)] = {
-    val root = Paths.get("src/main/scala")
+  private def scalaFiles(dir: String): Seq[(Path, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"no $root under ${Paths.get("").toAbsolutePath}")
     val files = Files.walk(root)
     try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
@@ -24,8 +26,12 @@ class SourceHygieneSpec extends AnyFunSuite {
     finally files.close()
   }
 
-  private def offenders(pattern: String, allowed: String): Seq[String] =
-    sources.collect {
+  private lazy val sources = scalaFiles("src/main/scala")
+  private lazy val tests = scalaFiles("src/test/scala")
+
+  private def offenders(pattern: String, allowed: String,
+      in: Seq[(Path, String)] = sources): Seq[String] =
+    in.collect {
       case (p, text) if p.getFileName.toString != allowed &&
           pattern.r.findFirstIn(text).isDefined => p.toString
     }
@@ -64,5 +70,21 @@ class SourceHygieneSpec extends AnyFunSuite {
     val hamming = """shiftright\([^,]+,\s*b\s*\*[^)]*\)\s*&[^)]*\bAS key"""
     assert(offenders(minhash, "TextFunctions.scala").isEmpty, "MinHash bands")
     assert(offenders(hamming, "TextFunctions.scala").isEmpty, "Hamming bands")
+  }
+
+  test("the BM25 term score is written only in TextFunctions.bm25Term") {
+    assert(offenders("""lit\(0\.75\)""", "TextFunctions.scala").isEmpty)
+  }
+
+  test("the probed cells of a vector query are chosen in one place") {
+    val probe = java.util.regex.Pattern.quote("""nearestCells(col("embedding"), cents, nprobe)""")
+    val sites = sources.flatMap { case (p, text) =>
+      probe.r.findAllIn(text).map(_ => p.getFileName.toString) }
+    assert(sites == Seq("VectorIndexStore.scala"), sites)
+  }
+
+  test("specs make temp dirs only through Scratch.tempDir") {
+    // Scratch deletes its dirs when the forked test JVM exits
+    assert(offenders("createTempDirectory", "SourceHygieneSpec.scala", tests).isEmpty)
   }
 }

@@ -29,11 +29,27 @@ trait SparkSpec extends AnyFunSuite {
   /** Spark jobs started while `body` runs (listener bus drained on both
     * sides, so the count is exactly the body's).
     */
-  def jobsDuring[T](body: => T): (T, Int) = {
+  def jobsDuring[T](body: => T): (T, Int) = countJobs(_ => true)(body)
+
+  /** Schema-inference jobs started while `body` runs: the jobs a reader
+    * starts while it resolves a relation (the last Spark frame of the
+    * job's call site is a `DataFrameReader` method), apart from Spark's
+    * parallel file listings. AQE's asynchronous query-stage jobs start
+    * from a `SQLExecution` future, so however many of them a plan runs,
+    * none counts.
+    */
+  def inferenceJobsDuring[T](body: => T): (T, Int) = countJobs { e =>
+    e.stageInfos.exists(_.details.linesIterator.take(1).exists(_.contains(".DataFrameReader."))) &&
+      !Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        .exists(_.startsWith("Listing leaf files"))
+  }(body)
+
+  private def countJobs[T](counts: SparkListenerJobStart => Boolean)(body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val n = new AtomicInteger
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (counts(e)) n.incrementAndGet()
     }
     ListenerBusDrain(sc)
     sc.addSparkListener(l)

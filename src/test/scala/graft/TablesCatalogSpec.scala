@@ -19,7 +19,7 @@ class TablesCatalogSpec extends SparkSpec {
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    graft.sources.Scratch.tempDir(prefix)
 
   /** Write `df` as ONE parquet file at `file` (the fixture layout). */
   private def writeFile(df: DataFrame, file: String): Unit = {

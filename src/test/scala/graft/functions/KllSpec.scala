@@ -94,7 +94,7 @@ class KllSpec extends SparkSpec {
   }
 
   test("sketch images survive a store-and-reload round trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kll").toString
+    val dir = graft.sources.Scratch.tempDir("graft_kll")
     // store daily sketches (the rollup table a warehouse would keep)...
     events.groupBy(date_trunc("day", col("ts")).as("day"))
       .agg(KllFunctions.kllAgg(spark, col("value")).as("sk"))

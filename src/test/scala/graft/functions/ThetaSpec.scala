@@ -57,7 +57,7 @@ class ThetaSpec extends SparkSpec {
   }
 
   test("sketch images survive a store-and-reload round trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_theta").toString
+    val dir = graft.sources.Scratch.tempDir("graft_theta")
     events.groupBy(col("event_type"))
       .agg(ThetaFunctions.thetaAgg(spark, col("user_id")).as("sk"))
       .write.mode("overwrite").parquet(dir)

@@ -16,7 +16,7 @@ import graft.sources.Sources
 class DynamicPruningSpec extends SparkSpec {
 
   test("lake join on the partition column plans a dynamicpruning PartitionFilter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = graft.sources.Scratch.tempDir("graft_dpp")
     val e = Tables.load(spark, sf0001, "events")
     Sources.writeHivePartitioned(e, "ts", s"$dir/lake")
     val lake = spark.read.parquet(s"$dir/lake")

@@ -79,7 +79,7 @@ class ExactSpanStoreSpec extends SparkSpec {
   test("streaming job maintains the window-hash store across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("span_stream").toString
+    val dir = Scratch.tempDir("span_stream")
     val corpus = docs.as[(Long, String)].collect().toSeq
     val (b1, b2) = corpus.partition(_._1 % 2 == 0)
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]

@@ -23,7 +23,7 @@ class IncrementalIndexSpec extends SparkSpec {
   private val qterms = Seq("hash", "join", "vector")
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_incr_index").toString
+    Scratch.tempDir("graft_incr_index")
 
   /** Split the sf0.001 documents into two halves by doc_id parity. */
   private def halves() = {

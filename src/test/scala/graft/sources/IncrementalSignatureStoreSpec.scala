@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -22,7 +20,7 @@ class IncrementalSignatureStoreSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("two appended batches probe identically to the batch-built store") {
-    val dir = Files.createTempDirectory("sig_incr").toString
+    val dir = Scratch.tempDir("sig_incr")
     IncrementalSignatureStore.appendBatch(spark,
       docs.filter(col("doc_id") % 2 === 0), 1L, dir, bands, rows)
     IncrementalSignatureStore.appendBatch(spark,
@@ -65,7 +63,7 @@ class IncrementalSignatureStoreSpec extends SparkSpec {
   test("streaming job maintains the store across micro-batches") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("sig_stream").toString
+    val dir = Scratch.tempDir("sig_stream")
     val corpus = docs.select("doc_id", "text")
       .as[(Long, String)].collect().toSeq
     val (b1, b2) = corpus.partition(_._1 % 2 == 0)

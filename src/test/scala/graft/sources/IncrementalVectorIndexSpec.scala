@@ -22,7 +22,7 @@ class IncrementalVectorIndexSpec extends SparkSpec {
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_incr_vec").toString
+    Scratch.tempDir("graft_incr_vec")
 
   private lazy val emb = graft.Tables.load(spark, sf0001, "embeddings")
     .filter(col("embedding").isNotNull)

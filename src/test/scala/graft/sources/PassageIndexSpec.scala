@@ -14,7 +14,7 @@ import graft.{SparkSpec, Tables}
   */
 class PassageIndexSpec extends SparkSpec {
   test("two-layer chunked index reproduces q_passage_search's top-10 exactly") {
-    val dir = graft.sources.Scratch.tempDir("graft_passage_idx")
+    val dir = Scratch.tempDir("graft_passage_idx")
     val chunks = Tables.load(spark, sf001, "documents")
       .select(col("doc_id"), posexplode(
         graft.functions.TextFunctions.wordWindows(col("text"), 32, 16)))

@@ -147,7 +147,7 @@ class RetrievalIndexSpec extends SparkSpec {
   }
 
   test("a v2-layout store reads as stale and rebuilds to v3") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_text_v2").toString + "/idx"
+    val dir = Scratch.tempDir("graft_text_v2") + "/idx"
     TextIndexStore.ensure(spark, sf0001, dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(s"$dir/_FINGERPRINT")

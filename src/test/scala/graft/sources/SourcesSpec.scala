@@ -11,7 +11,7 @@ class SourcesSpec extends SparkSpec {
     StructField("event_type", StringType), StructField("value", DoubleType)))
 
   test("JSONL round-trip with corrupt-record drop (R2 semantics)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val dir = Scratch.tempDir("graft_jsonl")
     val e = Tables.load(spark, sf0001, "events")
       .select("event_id", "user_id", "event_type", "value")
     e.write.mode("overwrite").json(s"$dir/clean")
@@ -26,7 +26,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("corrupt lines are dead-lettered verbatim; main read unaffected") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dl").toString
+    val dir = Scratch.tempDir("graft_dl")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/in/mixed.json"),
@@ -47,7 +47,7 @@ class SourcesSpec extends SparkSpec {
 
   test("readTopic file fallback feeds the unchanged decode stages (config-only transport)") {
     import graft.streaming.{LakeJobs, Pipelines}
-    val dir = java.nio.file.Files.createTempDirectory("graft_topic").toString
+    val dir = Scratch.tempDir("graft_topic")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/drop.jsonl"),
       """{"symbol":"AAPL","c":190.5,"d":1.2,"dp":0.6,"h":191.0,"l":188.0,"o":189.0,"pc":189.3,"t":1700000000}
@@ -100,7 +100,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CSV scan with explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = Scratch.tempDir("graft_csv")
     val e = Tables.load(spark, sf0001, "events")
       .select("event_id", "user_id", "event_type", "value")
     e.write.mode("overwrite").option("header", "true").csv(s"$dir/csv")
@@ -112,7 +112,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("batch hive-partitioned lake write (W1 layout) prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lake").toString
+    val dir = Scratch.tempDir("graft_lake")
     val e = Tables.load(spark, sf0001, "events")
     Sources.writeHivePartitioned(e, "ts", s"$dir/lake")
     val lake = spark.read.parquet(s"$dir/lake")
@@ -134,7 +134,7 @@ class SourcesSpec extends SparkSpec {
     // producer_stock_quotes.py:153) so a burst cannot flood the broker;
     // the engine's analog is source-side admission control — a backlog of
     // N files must drain as N bounded micro-batches, not one giant batch
-    val dir = java.nio.file.Files.createTempDirectory("graft_pacing").toString
+    val dir = Scratch.tempDir("graft_pacing")
     (1 to 3).foreach { i =>
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$dir/f$i.jsonl"),
@@ -154,7 +154,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ORC round-trip through the hive-partitioned writer: values, pruning, pushdown") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = Scratch.tempDir("graft_orc")
     val e = Tables.load(spark, sf0001, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("ts"))
@@ -184,7 +184,7 @@ class SourcesSpec extends SparkSpec {
     // skips corrupt records; a lake needs the file-level analog) —
     // ignoreCorruptFiles turns a poisoned partition into missing rows
     // plus a log line instead of failing every reader of the table
-    val dir = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
+    val dir = Scratch.tempDir("graft_corrupt")
     val e = Tables.load(spark, sf0001, "events")
       .select("event_id", "user_id", "event_type", "value")
     e.repartition(4).write.mode("overwrite").parquet(s"$dir/lake")
@@ -218,7 +218,7 @@ class SourcesSpec extends SparkSpec {
   test("schema evolution: mergeSchema unions columns across file generations") {
     // the lake contract at 100 TB: producers add fields over time; readers
     // must see the union schema with nulls for pre-evolution files
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = Scratch.tempDir("graft_evo")
     import spark.implicits._
     Seq((1L, "AAPL", 190.5)).toDF("id", "symbol", "price")
       .write.parquet(s"$dir/lake/gen=1")

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.streaming.{MediaIngestJob, StreamingCms, StreamingFrameDedup,
   StreamingMediaDedup, StreamingNbTrain, StreamingNearDedup, StreamingPackedShards}
@@ -45,8 +43,12 @@ class StoreCrashMatrixSpec extends SparkSpec {
   private def emb = graft.Tables.load(spark, sf0001, "embeddings")
     .filter(col("embedding").isNotNull).select("vec_id", "embedding")
   private def half(df: DataFrame, key: String, i: Int) = df.filter(col(key) % 2 === i)
+  // six videos a batch over three payloads; batch 1 repeats one payload
+  // of batch 0 and brings two fresh ones, so its replay has frames to
+  // admit and ones to drop
   private def media(ids: Range) = ids.map(i =>
-      (i.toLong, "video", Array.tabulate[Byte](64)(j => ((i % 3) * 7 + j).toByte)))
+      (i.toLong, "video",
+        Array.tabulate[Byte](64)(j => ((i % 3 + 2 * (i / 6)) * 7 + j).toByte)))
     .toDF("media_id", "kind", "bytes")
 
   // the perceptual gate admits one image of each batch and drops the
@@ -231,7 +233,7 @@ class StoreCrashMatrixSpec extends SparkSpec {
   )
 
   private def fresh(): String =
-    "crashfs://" + Files.createTempDirectory("graft_crash_matrix").toString
+    "crashfs://" + Scratch.tempDir("graft_crash_matrix")
 
   for (s <- subjects) {
     lazy val unbroken = {

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.streaming.StreamingNbTrain
 import org.apache.hadoop.fs.Path
@@ -29,7 +27,7 @@ class StoreRecoverySpec extends SparkSpec {
   private def slice(i: Int) = docs.filter(col("doc_id") % 3 === i)
 
   private def root(): String =
-    "crashfs://" + Files.createTempDirectory("graft_recovery").toString + "/store"
+    "crashfs://" + Scratch.tempDir("graft_recovery") + "/store"
 
   private def docIds(df: DataFrame): Set[Long] =
     df.select(col("doc_id").cast("long")).distinct().collect().map(_.getLong(0)).toSet

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 import CurationIngestJob.IncomingDoc
@@ -41,7 +39,7 @@ class CurationIngestJobSpec extends SparkSpec {
     .find(t => score(t) <= 0L).get
 
   private def ingest(name: String, slices: Seq[Seq[IncomingDoc]]): Set[(Long, String)] = {
-    val dir = Files.createTempDirectory(s"curation_$name").toString
+    val dir = graft.sources.Scratch.tempDir(s"curation_$name")
     var out: Set[(Long, String)] = Set.empty
     withRocksDBStateStore {
       val in = MemoryStream[IncomingDoc]
@@ -84,7 +82,7 @@ class CurationIngestJobSpec extends SparkSpec {
     // batch shard writer — the q_pipeline_pack shape on this corpus
     val curatedBatch = expected(docs).toSeq.sortBy(_._1)
       .toDF("doc_id", "text")
-    val bdir = Files.createTempDirectory("curation_pack_b").toString
+    val bdir = graft.sources.Scratch.tempDir("curation_pack_b")
     graft.sources.PackedShards.writeBatch(spark, curatedBatch,
       s"$bdir/out", budget = 16L)
     val want = spark.read.parquet(s"$bdir/out")
@@ -94,7 +92,7 @@ class CurationIngestJobSpec extends SparkSpec {
     for ((slicing, tag) <- Seq(
         Seq(docs) -> "one batch",
         Seq(docs.take(4), docs.drop(4)) -> "two batches")) {
-      val dir = Files.createTempDirectory("curation_pack_s").toString
+      val dir = graft.sources.Scratch.tempDir("curation_pack_s")
       withRocksDBStateStore {
         val in = MemoryStream[IncomingDoc]
         val q = CurationIngestJob.startPacked(in.toDS(), s"$dir/store",

@@ -19,7 +19,7 @@ class DimRefreshSpec extends SparkSpec {
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   test("foreachBatch re-read joins each micro-batch against the dim as of that batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dimref").toString
+    val dir = graft.sources.Scratch.tempDir("graft_dimref")
     def writeDim(tag: String): Unit =
       Seq(("AAPL", tag), ("MSFT", tag)).toDF("symbol", "sector")
         .write.mode("overwrite").parquet(s"$dir/dim")

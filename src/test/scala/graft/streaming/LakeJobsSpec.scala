@@ -9,7 +9,7 @@ import graft.SparkSpec
 class LakeJobsSpec extends SparkSpec {
 
   test("news job: drop-dir to deduped hive lake, end to end") {
-    val dir = Files.createTempDirectory("graft_job").toString
+    val dir = graft.sources.Scratch.tempDir("graft_job")
     Files.createDirectories(Paths.get(s"$dir/src"))
     // batch 1 file: ids 5 and 3, plus a corrupt line (R2 drop)
     Files.writeString(Paths.get(s"$dir/src/batch1.jsonl"),

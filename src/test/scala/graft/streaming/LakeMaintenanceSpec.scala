@@ -7,7 +7,7 @@ class LakeMaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
   test("compaction rewrites a small-file lake into target-sized files, data intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = graft.sources.Scratch.tempDir("graft_compact")
     val src = s"$dir/lake"
     val dest = s"$dir/compacted"
     // simulate the reference's per-poll writes: 8 files per partition

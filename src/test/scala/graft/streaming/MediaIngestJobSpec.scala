@@ -110,7 +110,7 @@ class MediaIngestJobSpec extends SparkSpec {
       (8L, "video", animatedGif(Seq(3, 1, 0, 2).map(q =>
         quadrantImage(64, 48, q)))),                         // different material
       (10L, "image", enc(img(64, 48, seed = 9), "png")))     // fresh
-    val dir = java.nio.file.Files.createTempDirectory("graft_mediaingest").toString
+    val dir = graft.sources.Scratch.tempDir("graft_mediaingest")
     MediaIngestJob.ingestBatch(spark,
       batch0.toDF("media_id", "kind", "bytes"), 0L, dir)
     MediaIngestJob.ingestBatch(spark,

@@ -35,7 +35,7 @@ class RollupMaintenanceSpec extends SparkSpec {
   }
 
   test("partials merge to the full recompute; replayed batches are no-ops per day") {
-    val path = java.nio.file.Files.createTempDirectory("graft_rollup").toString + "/t"
+    val path = graft.sources.Scratch.tempDir("graft_rollup") + "/t"
     val b1 = Seq(ev(1, "click", 1.0), ev(1, "view", 2.0), ev(2, "click", 4.0))
     val b2 = Seq(ev(1, "click", 8.0), ev(3, "view", 16.0)) // day 1 updated, day 3 new
 
@@ -54,7 +54,7 @@ class RollupMaintenanceSpec extends SparkSpec {
     // the dangerous half-state: stage committed (_STAGED marker), target
     // day DELETED, replacement not yet moved — the exact window where a
     // plain dynamic overwrite would lose the day's history on retry
-    val path = java.nio.file.Files.createTempDirectory("graft_rollup_c").toString + "/t"
+    val path = graft.sources.Scratch.tempDir("graft_rollup_c") + "/t"
     val b1 = Seq(ev(1, "click", 1.0), ev(2, "view", 2.0))
     RollupMaintenance.applyBatch(spark, path, b1.toDF(), batchId = 0L)
     val b2 = Seq(ev(1, "click", 4.0))
@@ -83,7 +83,7 @@ class RollupMaintenanceSpec extends SparkSpec {
   }
 
   test("streaming wiring maintains the rollup across micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rollup_s").toString
+    val dir = graft.sources.Scratch.tempDir("graft_rollup_s")
     val in = MemoryStream[Ev]
     def run(): Unit = {
       val q = RollupMaintenance.rollupSink(in.toDF(), s"$dir/t", s"$dir/ckpt").start()

@@ -26,7 +26,7 @@ class StateTelemetrySpec extends SparkSpec {
 
   test("exact-dedup state rows == distinct keys; duplicates add zero, across a restart") {
     withRocksDBStateStore {
-      val dir = java.nio.file.Files.createTempDirectory("graft_telem").toString
+      val dir = graft.sources.Scratch.tempDir("graft_telem")
       val in = MemoryStream[String]
       def key(s: String): Long =
         org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
@@ -65,7 +65,7 @@ class StateTelemetrySpec extends SparkSpec {
 
   test("exact-dedup TTL: expired keys leave state and their docs re-admit") {
     withRocksDBStateStore {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ttl").toString
+      val dir = graft.sources.Scratch.tempDir("graft_ttl")
       val in = MemoryStream[String]
       def key(s: String): Long =
         org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(

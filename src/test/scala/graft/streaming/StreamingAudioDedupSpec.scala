@@ -99,7 +99,7 @@ class StreamingAudioDedupSpec extends SparkSpec {
         Seq(corpus) -> "one batch",
         Seq(corpus.take(2), corpus.slice(2, 4), corpus.drop(4)) -> "three batches",
         corpus.grouped(1).toSeq -> "one item per batch")) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_audiodedup").toString
+      val dir = graft.sources.Scratch.tempDir("graft_audiodedup")
       slicing.zipWithIndex.foreach { case (b, i) =>
         StreamingAudioDedup.dedupBatch(spark, b.toDF("media_id", "kind", "bytes"),
           i.toLong, s"$dir/store", s"$dir/out", maxHamming = 7)

@@ -30,7 +30,7 @@ class StreamingBinPackSpec extends SparkSpec {
 
   private def mem(slices: Seq[Seq[(Long, String)]], cap: Long,
       maxOpen: Int): Seq[BinAssignment] = withRocksDBStateStoreSeq {
-    val dir = java.nio.file.Files.createTempDirectory("graft_binpack").toString
+    val dir = graft.sources.Scratch.tempDir("graft_binpack")
     val in = MemoryStream[(Long, String)]
     val q = StreamingBinPack(in.toDF().toDF("doc_id", "text"), cap,
         hexPrefix = 1, maxOpen = maxOpen)
@@ -97,7 +97,7 @@ class StreamingBinPackSpec extends SparkSpec {
 
   test("restart continues from checkpointed bins — same rows as an unbroken run") {
     withRocksDBStateStore {
-      val dir = java.nio.file.Files.createTempDirectory("graft_binpack_r").toString
+      val dir = graft.sources.Scratch.tempDir("graft_binpack_r")
       val in = MemoryStream[(Long, String)]
       def start() = StreamingBinPack(in.toDF().toDF("doc_id", "text"), 8L,
           hexPrefix = 1, maxOpen = 2)

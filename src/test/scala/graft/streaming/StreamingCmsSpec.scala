@@ -16,7 +16,7 @@ class StreamingCmsSpec extends SparkSpec {
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   test("merged streamed layers == one-pass batch sketch, byte for byte") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms_stream").toString
+    val dir = graft.sources.Scratch.tempDir("graft_cms_stream")
     val in = MemoryStream[Long]
     val q = StreamingCms.start(in.toDF().toDF("user_id"), "user_id",
       s"$dir/store", s"$dir/ckpt")
@@ -41,7 +41,7 @@ class StreamingCmsSpec extends SparkSpec {
   }
 
   test("a string key fails at analysis and runs no job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms_string").toString
+    val dir = graft.sources.Scratch.tempDir("graft_cms_string")
     val batch = Seq(("a", 1L), ("b", 2L)).toDF("source", "n")
     val (e, jobs) = jobsDuring(intercept[AnalysisException](
       StreamingCms.sketchBatch(spark, batch, 0L, "source", s"$dir/store")))

@@ -82,7 +82,7 @@ class StreamingDecontaminateSpec extends SparkSpec {
       CurationIngestJob.IncomingDoc(11L, cleanText, "s0"), // survives both
       CurationIngestJob.IncomingDoc(12L, "tiny doc", "s1")) // gate-clean, curate-killed
 
-    val dir = java.nio.file.Files.createTempDirectory("decon_curate").toString
+    val dir = graft.sources.Scratch.tempDir("decon_curate")
     withRocksDBStateStore {
       val in = MemoryStream[CurationIngestJob.IncomingDoc]
       val gated = StreamingDecontaminate(in.toDS(), idx, minOverlap = 2L)

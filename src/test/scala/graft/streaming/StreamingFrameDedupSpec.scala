@@ -43,7 +43,7 @@ class StreamingFrameDedupSpec extends SparkSpec {
         Seq(corpus) -> "one batch",
         Seq(corpus.take(2), corpus.slice(2, 4), corpus.drop(4)) -> "three batches",
         corpus.grouped(1).toSeq -> "one item per batch")) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_framededup").toString
+      val dir = graft.sources.Scratch.tempDir("graft_framededup")
       slicing.zipWithIndex.foreach { case (b, i) =>
         StreamingFrameDedup.dedupBatch(spark, b.toDF("media_id", "kind", "bytes"),
           i.toLong, s"$dir/store", s"$dir/out")
@@ -54,7 +54,7 @@ class StreamingFrameDedupSpec extends SparkSpec {
     }
 
     // replay: re-running a middle batch must rewrite identical content
-    val dir = java.nio.file.Files.createTempDirectory("graft_framededup_r").toString
+    val dir = graft.sources.Scratch.tempDir("graft_framededup_r")
     val batches = Seq(corpus.take(2), corpus.slice(2, 4), corpus.drop(4))
     batches.zipWithIndex.foreach { case (b, i) =>
       StreamingFrameDedup.dedupBatch(spark, b.toDF("media_id", "kind", "bytes"),

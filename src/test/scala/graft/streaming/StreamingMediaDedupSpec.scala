@@ -48,7 +48,7 @@ class StreamingMediaDedupSpec extends SparkSpec {
   }
 
   test("re-encodes and rescales drop across and within batches; distinct content admits") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mediadedup").toString
+    val dir = graft.sources.Scratch.tempDir("graft_mediadedup")
     val in = MemoryStream[(Long, String, Array[Byte])]
     val media = in.toDF().toDF("media_id", "kind", "bytes")
     val q = StreamingMediaDedup.start(media, s"$dir/store", s"$dir/out",
@@ -110,7 +110,7 @@ class StreamingMediaDedupSpec extends SparkSpec {
 
   test("streaming clip dedup: rescaled clip drops at ingest, reordered and fresh admit") {
     val frames = Seq(0, 1, 2, 3).map(q => quadrantImage(64, 48, q))
-    val dir = java.nio.file.Files.createTempDirectory("graft_clipdedup").toString
+    val dir = graft.sources.Scratch.tempDir("graft_clipdedup")
     // batch 0: the original clip
     StreamingClipDedup.dedupBatch(spark,
       Seq((1L, "video", animatedGif(frames)))
@@ -140,7 +140,7 @@ class StreamingMediaDedupSpec extends SparkSpec {
     // read it would collide with its OWN prior rows, admit nothing, and
     // the empty dynamic overwrite would leave the image lost for good.
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft_mediadedup_c").toString
+    val dir = graft.sources.Scratch.tempDir("graft_mediadedup_c")
     def batchDf(rows: (Long, String, Array[Byte])*) =
       rows.toDF("media_id", "kind", "bytes")
     StreamingMediaDedup.dedupBatch(spark,

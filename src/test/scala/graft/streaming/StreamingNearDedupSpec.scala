@@ -18,7 +18,7 @@ class StreamingNearDedupSpec extends SparkSpec {
   private val other = (1 to 40).map(i => s"other$i").mkString(" ")
 
   private def dirs(): (String, String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_neardedup").toString
+    val root = graft.sources.Scratch.tempDir("graft_neardedup")
     (s"$root/store", s"$root/out", s"$root/ckpt")
   }
 

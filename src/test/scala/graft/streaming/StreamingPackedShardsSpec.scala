@@ -47,7 +47,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSeq.sortBy(_._1)
 
   test("batch writer: exact budget, conservation, order, shard assignment") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack").toString
+    val dir = graft.sources.Scratch.tempDir("graft_pack")
     val rel = PackedShards.writeBatch(spark, docs.toDF("doc_id", "text"),
       s"$dir/out", budget = Budget, seqsPerShard = 4)
     val rows = rel.select(col("seq"), col("tokens"), col("n_tokens"),
@@ -126,7 +126,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
   }
 
   test("shuffled pack: layout == epochShuffle's permutation; nothing lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack_shuf").toString
+    val dir = graft.sources.Scratch.tempDir("graft_pack_shuf")
     val rel = PackedShards.writeBatchShuffled(spark, docs.toDF("doc_id", "text"),
       s"$dir/out", seed = "epoch1", budget = Budget, seqsPerShard = 4)
     val rows = rel.select(col("seq"), col("tokens"), col("doc_spans"))
@@ -175,7 +175,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
       0L -> "Table SCAN  data\n",
       1L -> "\tfast query—spark 42%",
       2L -> " café 日本 <tag> 'q' ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack_exact").toString
+    val dir = graft.sources.Scratch.tempDir("graft_pack_exact")
     val rel = PackedShards.writeBatch(spark, docs2.toDF("doc_id", "text"),
       s"$dir/out", budget = 8L, seqsPerShard = 2, exact = true)
     val idStream = rel.select(col("seq"), col("tokens")).collect()
@@ -208,14 +208,14 @@ class StreamingPackedShardsSpec extends SparkSpec {
       spark.read.parquet(path)
         .select(col("shard").cast("long"), col("seq"), col("tokens"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet
-    val refDir = java.nio.file.Files.createTempDirectory("graft_pack_cref").toString
+    val refDir = graft.sources.Scratch.tempDir("graft_pack_cref")
     PackedShards.writeBatch(spark, docs.toDF("doc_id", "text"),
       s"$refDir/out", budget = 8L, seqsPerShard = 1)
     val ref = content(s"$refDir/out")
     // targetRangeTokens=8 at 8 tokens/shard derives 1 shard per range →
     // 5 ranges over the 33-token corpus; 4 submit concurrently (disjoint
     // shard partitions, per-range markers)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack_conc").toString
+    val dir = graft.sources.Scratch.tempDir("graft_pack_conc")
     val written = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     PackedShards.writeBatchResumable(spark, docs.toDF("doc_id", "text"),
       s"$dir/out", budget = 8L, seqsPerShard = 1,
@@ -231,7 +231,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
     assert(content(s"$dir/out") == ref,
       "concurrent resumable artifact differs from the one-shot write")
     // a failed range under concurrency keeps completed markers and resumes
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_pack_conc2").toString
+    val dir2 = graft.sources.Scratch.tempDir("graft_pack_conc2")
     intercept[RuntimeException] {
       PackedShards.writeBatchResumable(spark, docs.toDF("doc_id", "text"),
         s"$dir2/out", budget = 8L, seqsPerShard = 1,
@@ -251,11 +251,11 @@ class StreamingPackedShardsSpec extends SparkSpec {
       spark.read.parquet(path)
         .select(col("shard").cast("long"), col("seq"), col("tokens"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet
-    val refDir = java.nio.file.Files.createTempDirectory("graft_pack_shufref").toString
+    val refDir = graft.sources.Scratch.tempDir("graft_pack_shufref")
     PackedShards.writeBatchShuffled(spark, docs.toDF("doc_id", "text"),
       s"$refDir/out", seed = "epoch1", budget = 8L, seqsPerShard = 1)
     val ref = content(s"$refDir/out")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack_shufres").toString
+    val dir = graft.sources.Scratch.tempDir("graft_pack_shufres")
     intercept[RuntimeException] {
       PackedShards.writeBatchResumable(spark, docs.toDF("doc_id", "text"),
         s"$dir/out", budget = 8L, seqsPerShard = 1, shardsPerRange = 1,
@@ -271,7 +271,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
 
   test("resumable batch pack: killed mid-run, resumes at the next range, byte-identical") {
     // one-shot reference artifact
-    val refDir = java.nio.file.Files.createTempDirectory("graft_pack_ref").toString
+    val refDir = graft.sources.Scratch.tempDir("graft_pack_ref")
     PackedShards.writeBatch(spark, docs.toDF("doc_id", "text"),
       s"$refDir/out", budget = 8L, seqsPerShard = 1)
     def content(path: String): Set[(Long, Long, Seq[Int])] =
@@ -281,7 +281,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
     val ref = content(s"$refDir/out")
     // 33 corpus tokens at budget 8 / 1 seq per shard / 1 shard per range
     // gives 5 ranges, so the kill lands strictly inside the run
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack_res").toString
+    val dir = graft.sources.Scratch.tempDir("graft_pack_res")
     val boom = intercept[RuntimeException] {
       PackedShards.writeBatchResumable(spark, docs.toDF("doc_id", "text"),
         s"$dir/out", budget = 8L, seqsPerShard = 1, shardsPerRange = 1,
@@ -313,7 +313,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
   }
 
   test("streaming: any slicing == batch, including the flushed tail") {
-    val batchOut = java.nio.file.Files.createTempDirectory("graft_pack_b").toString
+    val batchOut = graft.sources.Scratch.tempDir("graft_pack_b")
     PackedShards.writeBatch(spark, docs.toDF("doc_id", "text"),
       s"$batchOut/out", budget = Budget)
     val expected = readSeqs(s"$batchOut/out")
@@ -322,7 +322,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
         Seq(docs) -> "one batch",
         Seq(docs.take(3), docs.slice(3, 6), docs.drop(6)) -> "three batches",
         docs.grouped(1).toSeq -> "one doc per batch")) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_pack_s").toString
+      val dir = graft.sources.Scratch.tempDir("graft_pack_s")
       slicing.zipWithIndex.foreach { case (b, i) =>
         StreamingPackedShards.packBatch(spark, b.toDF("doc_id", "text"),
           i.toLong, s"$dir/store", s"$dir/out", budget = Budget)
@@ -333,7 +333,7 @@ class StreamingPackedShardsSpec extends SparkSpec {
   }
 
   test("streaming: replaying a batch converges (same rows, same ledger)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pack_r").toString
+    val dir = graft.sources.Scratch.tempDir("graft_pack_r")
     val batches = Seq(docs.take(3), docs.slice(3, 6), docs.drop(6))
     batches.zipWithIndex.foreach { case (b, i) =>
       StreamingPackedShards.packBatch(spark, b.toDF("doc_id", "text"),

@@ -274,7 +274,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch idempotent sink: replaying input converges, not duplicates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_febatch").toString
+    val dir = graft.sources.Scratch.tempDir("graft_febatch")
     val base = 1700000000L
     def runOnce(ckpt: String): Unit = {
       val in = MemoryStream[String]
@@ -296,7 +296,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch merging sink: same partition across batches merges, replay converges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
+    val dir = graft.sources.Scratch.tempDir("graft_merge")
     val base = 1700000000L
     // two runs = two separate micro-batch deliveries INTO THE SAME
     // partition value (hour bucket) — exactly what idempotentPartitionSink's
@@ -329,7 +329,7 @@ class StreamingSpec extends SparkSpec {
   test("merging sink preserves existing null-partition rows across batches") {
     // SQL IN never matches null: without the explicit isNull arm, batch 2
     // would dynamic-overwrite __HIVE_DEFAULT_PARTITION__ and delete row 1
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge_null").toString
+    val dir = graft.sources.Scratch.tempDir("graft_merge_null")
     def deliver(ckpt: String, rows: Seq[(Long, Option[String])]): Unit = {
       val in = MemoryStream[(Long, Option[String])]
       in.addData(rows: _*)
@@ -387,7 +387,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dead-letter: corrupt lines side-output, lake unaffected, replay converges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dl").toString
+    val dir = graft.sources.Scratch.tempDir("graft_dl")
     def deliver(ckpt: String): Unit = {
       val in = MemoryStream[String]
       in.addData(
@@ -412,7 +412,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("news dead-letter: decode failures side-output, null id/datetime stay valid, replay converges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndl").toString
+    val dir = graft.sources.Scratch.tempDir("graft_ndl")
     def deliver(ckpt: String): Unit = {
       val in = MemoryStream[String]
       in.addData(
@@ -437,27 +437,25 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.text(s"$dir/dead").count() == 2)
   }
 
-  test("D1 on transformWithState: same watermark semantics, RocksDB state store") {
-    withRocksDBStateStore {
-      val in = MemoryStream[String]
-      val base = 1700000000L
-      val out = HighWatermarkDedupTws(
-        Pipelines.newsArticles(Pipelines.decodeNews(in.toDF().toDF("value"))).as[NewsArticle])
-      val q = out.writeStream.format("memory").queryName("tws_out")
-        .outputMode(OutputMode.Append).start()
-      in.addData(newsJson("AAPL", 5L, base), newsJson("AAPL", 3L, base + 1))
-      q.processAllAvailable()
-      // watermark now 5: 4 is late-below-watermark (dropped), 9 is new
-      in.addData(newsJson("AAPL", 4L, base + 2), newsJson("AAPL", 9L, base + 3),
-        newsJson("AAPL", null, base + 4)) // null id bypasses dedup
-      q.processAllAvailable()
-      val got = spark.table("tws_out").select("news_id").collect()
-        .map(r => if (r.isNullAt(0)) -1L else r.getLong(0)).sorted.toSeq
-      q.stop()
-      // first batch emits 3 and 5 (both above initial 0, sorted order),
-      // second emits 9 and the null-id row (as -1 here)
-      assert(got == Seq(-1L, 3L, 5L, 9L), s"got $got")
-    }
+  test("D1 dedup into a memory sink: watermark semantics over decoded news") {
+    val in = MemoryStream[String]
+    val base = 1700000000L
+    val out = HighWatermarkDedup(
+      Pipelines.newsArticles(Pipelines.decodeNews(in.toDF().toDF("value"))))
+    val q = out.writeStream.format("memory").queryName("hwm_out")
+      .outputMode(OutputMode.Append).start()
+    in.addData(newsJson("AAPL", 5L, base), newsJson("AAPL", 3L, base + 1))
+    q.processAllAvailable()
+    // watermark now 5: 4 is late-below-watermark (dropped), 9 is new
+    in.addData(newsJson("AAPL", 4L, base + 2), newsJson("AAPL", 9L, base + 3),
+      newsJson("AAPL", null, base + 4)) // null id bypasses dedup
+    q.processAllAvailable()
+    val got = spark.table("hwm_out").select("news_id").collect()
+      .map(r => if (r.isNullAt(0)) -1L else r.getLong(0)).sorted.toSeq
+    q.stop()
+    // first batch emits 3 and 5 (both above initial 0, sorted order),
+    // second emits 9 and the null-id row (as -1 here)
+    assert(got == Seq(-1L, 3L, 5L, 9L), s"got $got")
   }
 
   test("D1 state survives query restart from checkpoint (the reference's restart loss, fixed)") {
@@ -466,7 +464,7 @@ class StreamingSpec extends SparkSpec {
     // lives in checkpointed state: stop the query, restart it against the
     // SAME checkpoint, and an id below the pre-restart watermark is still
     // dropped — only possible if state was recovered, not rebuilt.
-    val dir = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val dir = graft.sources.Scratch.tempDir("graft_restart")
     val in = MemoryStream[String]
     val base = 1700000000L
     def start() = HighWatermarkDedup(
@@ -489,43 +487,41 @@ class StreamingSpec extends SparkSpec {
     assert(ids == Seq(7L, 9L), s"got $ids — 3 must be dropped by RECOVERED state")
   }
 
-  test("D1 on transformWithState: monotone-max contract holds across TWO RocksDB restarts") {
+  test("D1 state: monotone-max contract holds across TWO restarts") {
     // Hardens the one operator whose semantics the oracle can never see:
-    // the recovered RocksDB value state must keep enforcing the monotone
+    // the recovered watermark state must keep enforcing the monotone
     // maximum across repeated process lifetimes, with out-of-order ids
     // arriving below the recovered watermark in every epoch (the exact
     // divergence DedupDivergenceSpec shows for dropDuplicates).
-    withRocksDBStateStore {
-      val dir = java.nio.file.Files.createTempDirectory("graft_tws2").toString
-      val in = MemoryStream[String]
-      val base = 1700000000L
-      def start() = HighWatermarkDedupTws(
-        Pipelines.newsArticles(Pipelines.decodeNews(in.toDF().toDF("value"))).as[NewsArticle])
-        .writeStream.format("parquet")
-        .option("path", s"$dir/out")
-        .option("checkpointLocation", s"$dir/ckpt")
-        .outputMode(OutputMode.Append).start()
-      // lifetime 1: {7, 2} both clear the initial watermark -> emit; max 7
-      val q1 = start()
-      in.addData(newsJson("AAPL", 7L, base), newsJson("AAPL", 2L, base + 1))
-      q1.processAllAvailable(); q1.stop()
-      // lifetime 2: 5 is below the RECOVERED watermark 7 (drop); 9 and 11
-      // advance it to 11
-      in.addData(newsJson("AAPL", 5L, base + 10), newsJson("AAPL", 11L, base + 11),
-        newsJson("AAPL", 9L, base + 12))
-      val q2 = start()
-      q2.processAllAvailable(); q2.stop()
-      // lifetime 3: a REPLAYED 11 (at-the-watermark) and a 6 both drop
-      // against the twice-recovered state; only 12 emits
-      in.addData(newsJson("AAPL", 11L, base + 20), newsJson("AAPL", 6L, base + 21),
-        newsJson("AAPL", 12L, base + 22))
-      val q3 = start()
-      q3.processAllAvailable(); q3.stop()
-      val ids = spark.read.parquet(s"$dir/out").select("news_id")
-        .as[Long].collect().sorted.toSeq
-      assert(ids == Seq(2L, 7L, 9L, 11L, 12L),
-        s"got $ids — 5, 6 and the replayed 11 must drop against recovered state")
-    }
+    val dir = graft.sources.Scratch.tempDir("graft_hwm2")
+    val in = MemoryStream[String]
+    val base = 1700000000L
+    def start() = HighWatermarkDedup(
+      Pipelines.newsArticles(Pipelines.decodeNews(in.toDF().toDF("value"))))
+      .writeStream.format("parquet")
+      .option("path", s"$dir/out")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .outputMode(OutputMode.Append).start()
+    // lifetime 1: {7, 2} both clear the initial watermark -> emit; max 7
+    val q1 = start()
+    in.addData(newsJson("AAPL", 7L, base), newsJson("AAPL", 2L, base + 1))
+    q1.processAllAvailable(); q1.stop()
+    // lifetime 2: 5 is below the RECOVERED watermark 7 (drop); 9 and 11
+    // advance it to 11
+    in.addData(newsJson("AAPL", 5L, base + 10), newsJson("AAPL", 11L, base + 11),
+      newsJson("AAPL", 9L, base + 12))
+    val q2 = start()
+    q2.processAllAvailable(); q2.stop()
+    // lifetime 3: a REPLAYED 11 (at-the-watermark) and a 6 both drop
+    // against the twice-recovered state; only 12 emits
+    in.addData(newsJson("AAPL", 11L, base + 20), newsJson("AAPL", 6L, base + 21),
+      newsJson("AAPL", 12L, base + 22))
+    val q3 = start()
+    q3.processAllAvailable(); q3.stop()
+    val ids = spark.read.parquet(s"$dir/out").select("news_id")
+      .as[Long].collect().sorted.toSeq
+    assert(ids == Seq(2L, 7L, 9L, 11L, 12L),
+      s"got $ids — 5, 6 and the replayed 11 must drop against recovered state")
   }
 
   test("streaming decontamination: stream-static broadcast join drops eval-overlapping docs") {
@@ -560,7 +556,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming exact dedup: first occurrence wins across batches AND restarts") {
     withRocksDBStateStore {
-      val dir = java.nio.file.Files.createTempDirectory("graft_sed").toString
+      val dir = graft.sources.Scratch.tempDir("graft_sed")
       val in = MemoryStream[String]
       def key(s: String): Long =
         org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
@@ -586,7 +582,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("W1 sink: hive-partitioned exactly-once file sink") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = graft.sources.Scratch.tempDir("graft_sink")
     val in = MemoryStream[String]
     val q = Pipelines.partitionedWriter(
       Pipelines.quotes(Pipelines.decodeQuotes(in.toDF().toDF("value"))),

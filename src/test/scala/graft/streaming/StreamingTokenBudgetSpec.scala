@@ -13,7 +13,7 @@ class StreamingTokenBudgetSpec extends SparkSpec {
 
   test("per-source totals accumulate across batches and a restart, in subword units") {
     withRocksDBStateStore {
-      val dir = java.nio.file.Files.createTempDirectory("graft_budget").toString
+      val dir = graft.sources.Scratch.tempDir("graft_budget")
       val in = MemoryStream[(String, String)]
       def start() = StreamingTokenBudget(in.toDF().toDF("source", "text"))
         .writeStream.format("parquet")
@@ -53,7 +53,7 @@ class StreamingTokenBudgetSpec extends SparkSpec {
 
   test("budget gate admits while under the cap, stays closed across a restart") {
     withRocksDBStateStore {
-      val dir = java.nio.file.Files.createTempDirectory("graft_gate").toString
+      val dir = graft.sources.Scratch.tempDir("graft_gate")
       val in = MemoryStream[(String, Long, String)]
       // cap 5: "the data table" = 3 tokens, "spark query" = 2, so doc 1
       // (3, total 3) and doc 2 (2, total 5) admit; total is AT cap after
@@ -92,7 +92,7 @@ class StreamingTokenBudgetSpec extends SparkSpec {
       val rows = Seq(("a", "the table"), ("a", "data scan"), ("b", "key value"),
         ("a", "window order"), ("b", "spark"))
       def runSliced(slices: Seq[Seq[(String, String)]]): Map[String, Long] = {
-        val dir = java.nio.file.Files.createTempDirectory("graft_budget_s").toString
+        val dir = graft.sources.Scratch.tempDir("graft_budget_s")
         val in = MemoryStream[(String, String)]
         val q = StreamingTokenBudget(in.toDF().toDF("source", "text"))
           .writeStream.format("parquet")
@@ -120,7 +120,7 @@ class StreamingTokenBudgetSpec extends SparkSpec {
         out.length.toLong
       }
       assert(expectedFull > toks(text), "fixture lost its undercount")
-      val dir = java.nio.file.Files.createTempDirectory("graft_budget_f").toString
+      val dir = graft.sources.Scratch.tempDir("graft_budget_f")
       val in = MemoryStream[(String, String)]
       val q = StreamingTokenBudget(in.toDF().toDF("source", "text"),
           fullCharset = true)

@@ -14,7 +14,7 @@ class StreamingTopKJobSpec extends SparkSpec {
   implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def dirs(): (String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("graft_topkjob").toString
+    val root = graft.sources.Scratch.tempDir("graft_topkjob")
     (s"$root/out", s"$root/ckpt")
   }
 
