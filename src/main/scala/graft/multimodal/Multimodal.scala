@@ -1,6 +1,11 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import java.awt.image.BufferedImage
+import java.io.ByteArrayInputStream
+import java.util.zip.CRC32
+import javax.imageio.ImageIO
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,20 +14,207 @@ import graft.Tables
 /** Multimodal-column plumbing: media as opaque `binary` columns with typed
   * metadata (builder brief "multimodal columns").
   *
-  * The generic `decodeBatched` over the synthetic media table is a
-  * clearly-marked deterministic stub, but the image and audio decode
-  * paths are REAL JDK codecs behind the same batched seam
-  * (`decodeImagesBatched`: javax.imageio; `decodeAudioBatched`:
-  * javax.sound with canonical-PCM transcode) — and everything
-  * Spark-side is real and tested: the schema, the binary column
-  * handling, the batched partition-local decode shape (the JVM
-  * analogue of a vectorized mapInPandas: decoders amortize codec init
-  * per batch, not per row), the partitioning story (media rows
-  * hash-partition by id; bytes never shuffle through a groupBy), and
-  * content-level dedup over the decoded fingerprints
-  * (`mediaContentDedup`).
+  * Every `*Batched` function runs through ONE private seam, `batched`: a
+  * partition's rows go to the codec in groups of `batchSize`; per group
+  * `batchInit` runs once (the observable codec-init amortization —
+  * MultimodalSpec counts it) and so does the caller's per-batch set-up
+  * (a reused CRC32 or PCM buffer), the JVM shape of a vectorized
+  * mapInPandas. A payload the codec cannot decode yields no row: the R2
+  * skip-and-continue contract (the reference skips malformed records
+  * rather than failing the batch —
+  * src/lambda_processor/processor_stock_quotes.py:56-62). Each codec step
+  * is written once beside the seam:
+  *  - `readImage`: `javax.imageio` single-image decode (PNG/JPEG/BMP/GIF);
+  *  - `foreachFrame`: the multi-frame container reader (animated GIF),
+  *    frames handed over one at a time, a truncated tail keeping its
+  *    decoded prefix;
+  *  - `readPcm`: `javax.sound.sampled` open + transcode to canonical
+  *    signed-16-bit little-endian PCM, read in frame-aligned chunks;
+  *  - `pixelCrc`, `aHash`, `scaleBilinear`: the ARGB pixel CRC, the 8x8
+  *    mean hash and the bilinear `Graphics2D` scale.
+  * `decodeBatched`, `resizeBatched` and `frameSampleBatched` run clearly
+  * marked deterministic stubs over the synthetic media table through the
+  * same seam. Spark-side, bytes never shuffle: media rows hash-partition
+  * by id, and only fingerprints reach a groupBy or join
+  * (`mediaContentDedup`, the perceptual near-dup passes).
   */
 object Multimodal {
+
+  /** The batched codec seam: `media` projected to `cols`, each partition
+    * cut into groups of `batchSize` rows; per group `batchInit` runs,
+    * then `perBatch` once, and the row function it returns maps each row
+    * of the group to its outputs (none for an undecodable payload).
+    */
+  private def batched[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      media: DataFrame, batchSize: Int, batchInit: () => Unit, cols: String*)(
+      perBatch: () => Row => IterableOnce[T]): Dataset[T] =
+    media.select(cols.head, cols.tail: _*).mapPartitions { rows =>
+      rows.grouped(batchSize).flatMap { batch =>
+        batchInit()
+        batch.iterator.flatMap(perBatch())
+      }
+    }(Encoders.product[T])
+
+  private val noInit: () => Unit = () => ()
+
+  /** `javax.imageio` decode of one payload. ImageIO.read returns null for
+    * an UNRECOGNIZED format but THROWS for a recognized-but-corrupt one
+    * (truncated PNG) — both are the same bad record, None. NonFatal, not
+    * IOException: JDK readers surface corrupt data as RuntimeExceptions
+    * too (AIOOBE, NegativeArraySizeException).
+    */
+  private def readImage(bytes: Array[Byte]): Option[BufferedImage] =
+    try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
+    catch { case NonFatal(_) => None }
+
+  /** Hands each decoded frame of a multi-frame container to `frame`
+    * (index, image), one at a time, so a clip's frames are never all
+    * held. Bad-record granularity is the FRAME: an unreadable frame
+    * COUNT (getNumImages scans the whole stream, so a truncated container
+    * can fail there) falls back to reading until the first failure, and
+    * a truncated tail keeps its decoded prefix; an unrecognized format
+    * hands over nothing.
+    */
+  private def foreachFrame(bytes: Array[Byte])(frame: (Int, BufferedImage) => Unit): Unit = {
+    // createImageInputStream returns NULL (not an exception) when no
+    // stream SPI accepts the input — treat as undecodable
+    val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+    if (iis != null) try {
+      val readers = ImageIO.getImageReaders(iis)
+      if (readers.hasNext) {
+        val reader = readers.next()
+        try {
+          // seekForwardOnly = false: frame-indexed random access
+          reader.setInput(iis, false, true)
+          val n =
+            try reader.getNumImages(true)
+            catch { case NonFatal(_) => Int.MaxValue }
+          var i = 0
+          var ok = true
+          while (i < n && ok) {
+            val img =
+              try reader.read(i)
+              catch { case NonFatal(_) => null }
+            if (img == null) ok = false // truncated tail: keep prefix
+            else frame(i, img)
+            i += 1
+          }
+        } finally reader.dispose()
+      }
+    } catch { case NonFatal(_) => () } // skip the rest of the row (R2)
+    finally iis.close()
+  }
+
+  /** Opens `bytes` as an audio container and streams it, transcoded to
+    * canonical signed-16-bit little-endian PCM, to `chunk(buf, n)`.
+    * Hashing the STORED frames would fingerprint the encoding, not the
+    * audio (u-law vs PCM of the same content would differ), so the
+    * transcode makes every PCM fingerprint container- AND
+    * encoding-independent. Returns (rate, channels, frames) — frames from
+    * the header, or from the decoded byte count when the container says
+    * NOT_SPECIFIED (-1) — or None for an undecodable payload, a
+    * malformed header or a missing converter.
+    */
+  private def readPcm(bytes: Array[Byte], buf: Array[Byte])(
+      chunk: (Array[Byte], Int) => Unit): Option[(Int, Int, Long)] =
+    try {
+      import javax.sound.sampled.{AudioFormat, AudioSystem}
+      val raw = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
+      try {
+        val src = raw.getFormat
+        val rate = math.round(src.getSampleRate).toInt
+        val ch = src.getChannels
+        if (rate <= 0 || ch <= 0) None // malformed header
+        else {
+          val canon = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED,
+            src.getSampleRate, 16, ch, 2 * ch, src.getSampleRate, false)
+          val ais =
+            if (src.matches(canon)) raw
+            else AudioSystem.getAudioInputStream(canon, raw)
+          // AudioInputStream.read returns 0 (not -1) when the request is
+          // smaller than ONE canonical frame (2*channels bytes), so an
+          // extreme channel count gets a frame-aligned buffer of its own;
+          // a request of at least one frame never returns 0, so the loop
+          // ends only at true end-of-stream
+          val b = if (2 * ch <= buf.length) buf else new Array[Byte](2 * ch * 4)
+          var pcmBytes = 0L
+          var n = ais.read(b)
+          while (n > 0) { chunk(b, n); pcmBytes += n; n = ais.read(b) }
+          val frames =
+            if (ais.getFrameLength >= 0L) ais.getFrameLength
+            else pcmBytes / (2L * ch)
+          Some((rate, ch, frames))
+        }
+      } finally raw.close()
+    } catch { case NonFatal(_) => None }
+
+  /** CRC32 over the row-major ARGB bytes of `img`'s decoded pixels. */
+  private def pixelCrc(crc: CRC32, img: BufferedImage): Long = {
+    crc.reset()
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val p = img.getRGB(x, y)
+        crc.update(p >>> 24)
+        crc.update((p >>> 16) & 0xff)
+        crc.update((p >>> 8) & 0xff)
+        crc.update(p & 0xff)
+        x += 1
+      }
+      y += 1
+    }
+    crc.getValue
+  }
+
+  /** `img` scaled to w x h with bilinear interpolation (java.awt). */
+  private def scaleBilinear(img: BufferedImage, w: Int, h: Int): BufferedImage = {
+    val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val g = out.createGraphics()
+    try {
+      g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+      g.drawImage(img, 0, 0, w, h, null)
+    } finally g.dispose()
+    out
+  }
+
+  /** Row-major luma grid of `img` downscaled to w x h with bilinear
+    * interpolation: gray = (299R + 587G + 114B) / 1000, integer.
+    */
+  private def grayGrid(img: BufferedImage, w: Int, h: Int): Array[Int] = {
+    val small = scaleBilinear(img, w, h)
+    val out = new Array[Int](w * h)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val p = small.getRGB(x, y)
+        out(y * w + x) =
+          (299 * ((p >>> 16) & 0xff) + 587 * ((p >>> 8) & 0xff) + 114 * (p & 0xff)) / 1000
+        x += 1
+      }
+      y += 1
+    }
+    out
+  }
+
+  /** Average hash: 8x8 luma grid, bit i set iff gray_i > mean — compared
+    * as 64*gray_i > sum so the decision is integer-exact.
+    */
+  private def aHash(img: BufferedImage): Long = {
+    val g8 = grayGrid(img, 8, 8)
+    var sum = 0L
+    var i = 0
+    while (i < 64) { sum += g8(i); i += 1 }
+    var ahash = 0L
+    i = 0
+    while (i < 64) {
+      if (64L * g8(i) > sum) ahash |= (1L << i)
+      i += 1
+    }
+    ahash
+  }
 
   /** Typed metadata produced by "decoding" a media payload. */
   final case class MediaMeta(
@@ -58,19 +250,11 @@ object Multimodal {
           .as("kind"),
         col("text").cast(BinaryType).as("bytes"))
 
-  /** Batched partition-local decode: the real plumbing around the stub.
-    * Batches of `batchSize` rows per call keep peak memory bounded while
-    * amortizing per-batch codec setup — the JVM shape of a vectorized UDF.
-    */
-  def decodeBatched(media: DataFrame, batchSize: Int = 64): Dataset[MediaMeta] = {
-    implicit val enc = Encoders.product[MediaMeta]
-    media.select("media_id", "kind", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch decoder/codec initialization would happen HERE, once
-        batch.map(r => decodeStub(r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2)))
-      }
+  /** Batched decode of the synthetic media table through the stub. */
+  def decodeBatched(media: DataFrame, batchSize: Int = 64): Dataset[MediaMeta] =
+    batched[MediaMeta](media, batchSize, noInit, "media_id", "kind", "bytes") { () =>
+      r => Some(decodeStub(r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2)))
     }
-  }
 
   /** Typed metadata from a REAL image decode (see decodeImagesBatched). */
   final case class ImageMeta(
@@ -80,64 +264,22 @@ object Multimodal {
       n_bytes: Long,
       pixel_crc: Long) // CRC32 over row-major ARGB bytes of the DECODED pixels
 
-  /** REAL DECODER behind the same batched seam as decodeBatched:
-    * `javax.imageio` ships with the JDK (zero new dependencies) and
-    * decodes PNG/JPEG/BMP/GIF payloads for real — so the decode path is
-    * public-knowledge working code, not only a stub; decodeStub remains
-    * for the synthetic (non-image) media table. `pixel_crc` fingerprints
-    * the DECODED pixels rather than the container bytes — the content
-    * hash a media-dedup pass wants, since the same pixels re-encoded
-    * (different compression level, stripped metadata) yield different
-    * container bytes but the same pixel CRC.
-    *
-    * `batchInit` runs once per `batchSize` rows — the seam's codec-init
-    * amortization contract, observable (MultimodalSpec pins the call
-    * count with an accumulator). Undecodable payloads are SKIPPED, the
-    * R2 bad-record contract (the reference skips malformed records
-    * rather than failing the batch —
-    * src/lambda_processor/processor_stock_quotes.py:56-62).
+  /** REAL image decode (`readImage`: PNG/JPEG/BMP/GIF). `pixel_crc`
+    * fingerprints the DECODED pixels rather than the container bytes —
+    * the content hash a media-dedup pass wants, since the same pixels
+    * re-encoded (different compression level, stripped metadata) yield
+    * different container bytes but the same pixel CRC.
     */
   def decodeImagesBatched(media: DataFrame, batchSize: Int = 64,
-      batchInit: () => Unit = () => ()): Dataset[ImageMeta] = {
-    implicit val enc = Encoders.product[ImageMeta]
-    media.select("media_id", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batchInit() // per-batch decoder initialization happens HERE, once
-        val crc = new java.util.zip.CRC32() // reused across the batch
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          // ImageIO.read returns null for an UNRECOGNIZED format but
-          // THROWS for a recognized-but-corrupt payload (truncated PNG)
-          // — both are the same bad record; skip either (R2 contract).
-          // NonFatal, not IOException: JDK readers surface corrupt data
-          // as RuntimeExceptions too (AIOOBE, NegativeArraySizeException)
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null) None // not a decodable image: skip, don't fail
-          else {
-            crc.reset()
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                val p = img.getRGB(x, y)
-                crc.update(p >>> 24)
-                crc.update((p >>> 16) & 0xff)
-                crc.update((p >>> 8) & 0xff)
-                crc.update(p & 0xff)
-                x += 1
-              }
-              y += 1
-            }
-            Some(ImageMeta(id, img.getWidth, img.getHeight,
-              bytes.length.toLong, crc.getValue))
-          }
-        }
+      batchInit: () => Unit = () => ()): Dataset[ImageMeta] =
+    batched[ImageMeta](media, batchSize, batchInit, "media_id", "bytes") { () =>
+      val crc = new CRC32()
+      r => {
+        val bytes = r.getAs[Array[Byte]](1)
+        readImage(bytes).map(img => ImageMeta(r.getLong(0), img.getWidth,
+          img.getHeight, bytes.length.toLong, pixelCrc(crc, img)))
       }
     }
-  }
 
   /** Typed metadata from a REAL audio decode (see decodeAudioBatched). */
   final case class AudioMeta(
@@ -149,81 +291,25 @@ object Multimodal {
       duration_ms: Long,
       pcm_crc: Long) // CRC32 over the DECODED PCM byte stream
 
-  /** REAL AUDIO DECODER behind the same batched seam — the audio sibling
-    * of decodeImagesBatched: `javax.sound.sampled` ships with the JDK
-    * (pure-Java WAV/AIFF/AU container parsing, no native codecs needed),
-    * so the audio decode path is working public-knowledge code too.
-    * `pcm_crc` fingerprints the decoded PCM frames, not the container
-    * bytes — the same "content hash survives re-encoding" property the
-    * image pixel_crc gives media dedup. duration_ms is integer-exact
-    * (frames * 1000 / rate in long arithmetic). Undecodable payloads are
-    * SKIPPED (the R2 bad-record contract), and `batchInit` observes the
-    * once-per-batch codec-init amortization exactly like the image seam.
+  /** REAL audio decode (`readPcm`: pure-Java WAV/AIFF/AU parsing, no
+    * native codecs). `pcm_crc` fingerprints the canonical PCM, not the
+    * container bytes — the "content hash survives re-encoding" property
+    * the image pixel_crc gives media dedup. duration_ms is integer-exact
+    * (frames * 1000 / rate in long arithmetic).
     */
   def decodeAudioBatched(media: DataFrame, batchSize: Int = 64,
-      batchInit: () => Unit = () => ()): Dataset[AudioMeta] = {
-    implicit val enc = Encoders.product[AudioMeta]
-    media.select("media_id", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batchInit() // per-batch decoder initialization happens HERE, once
-        val crc = new java.util.zip.CRC32() // reused across the batch
-        val buf = new Array[Byte](8192)
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          try {
-            import javax.sound.sampled.{AudioFormat, AudioSystem}
-            val raw = AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            try {
-              // the stream yields frames in the file's STORED encoding —
-              // hashing those would fingerprint the encoding, not the
-              // audio (u-law vs PCM of the same content would differ).
-              // Transcode to canonical signed-16-bit little-endian PCM
-              // first, so pcm_crc is container- AND encoding-independent.
-              val src = raw.getFormat
-              val rate = math.round(src.getSampleRate).toInt
-              if (rate <= 0 || src.getChannels <= 0) None // malformed header
-              else {
-                val canon = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED,
-                  src.getSampleRate, 16, src.getChannels,
-                  2 * src.getChannels, src.getSampleRate, false)
-                val ais =
-                  if (src.matches(canon)) raw
-                  else AudioSystem.getAudioInputStream(canon, raw)
-                crc.reset()
-                var pcmBytes = 0L
-                // AudioInputStream.read returns 0 (not -1) when the
-                // requested length is smaller than ONE canonical frame
-                // (2*channels bytes) — with the shared 8 KiB buffer an
-                // extreme channel count would silently truncate. Size a
-                // frame-aligned buffer for that row instead; a frame-
-                // multiple request can never return 0, so the n > 0 loop
-                // terminates only at true end-of-stream.
-                val frameSize = 2 * src.getChannels
-                val b = if (frameSize <= buf.length) buf
-                        else new Array[Byte](frameSize * 4)
-                var n = ais.read(b)
-                while (n > 0) { crc.update(b, 0, n); pcmBytes += n; n = ais.read(b) }
-                // some containers report NOT_SPECIFIED (-1) frame length;
-                // derive it from the decoded byte count instead
-                val frames =
-                  if (ais.getFrameLength >= 0L) ais.getFrameLength
-                  else pcmBytes / (2L * src.getChannels)
-                Some(AudioMeta(id, rate, src.getChannels, 16, frames,
-                  frames * 1000L / rate, crc.getValue))
-              }
-            } finally raw.close()
-          } catch {
-            // not a decodable audio container (or no converter to PCM):
-            // skip, don't fail the batch. NonFatal: JDK codecs throw
-            // RuntimeExceptions on corrupt payloads, not just IOException
-            case scala.util.control.NonFatal(_) => None
+      batchInit: () => Unit = () => ()): Dataset[AudioMeta] =
+    batched[AudioMeta](media, batchSize, batchInit, "media_id", "bytes") { () =>
+      val crc = new CRC32()
+      val buf = new Array[Byte](8192)
+      r => {
+        crc.reset()
+        readPcm(r.getAs[Array[Byte]](1), buf)((b, n) => crc.update(b, 0, n))
+          .map { case (rate, ch, frames) =>
+            AudioMeta(r.getLong(0), rate, ch, 16, frames, frames * 1000L / rate, crc.getValue)
           }
-        }
       }
     }
-  }
 
   /** Typed metadata of ONE decoded frame of a multi-frame container
     * (see decodeFramesBatched).
@@ -235,89 +321,26 @@ object Multimodal {
       height: Int,
       pixel_crc: Long)
 
-  /** REAL multi-frame decode — completes the image/audio/video triple:
-    * the JDK's ImageIO GIF reader decodes ANIMATED GIFs frame-by-frame
-    * (`reader.getNumImages` / `reader.read(i)`), so the video seam's
-    * frame-indexed decode is working public code, zero new dependencies
-    * — `frameSampleBatched`'s `decodeStub` remains for the synthetic
-    * (non-GIF) media table, exactly like the image/audio stubs. One
-    * media row explodes to N frame rows of (idx, dims, pixel CRC); the
-    * CRC is over each frame's STORED raster (GIF frames may be partial
-    * rectangles under the disposal model — this is the per-frame
-    * content fingerprint, not a composited playback surface).
-    *
-    * Bad-record granularity is the FRAME (R2 contract, one level finer
-    * than the scalar decoders): a container truncated mid-stream keeps
-    * its decoded prefix frames and drops the rest; an unrecognized
-    * format contributes no rows. `batchInit` amortizes demuxer init
-    * per batch like every other batched codec seam.
+  /** REAL multi-frame decode (`foreachFrame`: the JDK's ImageIO GIF
+    * reader decodes ANIMATED GIFs frame by frame) — one media row
+    * explodes to N frame rows of (idx, dims, pixel CRC). The CRC is over
+    * each frame's STORED raster (GIF frames may be partial rectangles
+    * under the disposal model — this is the per-frame content
+    * fingerprint, not a composited playback surface). A container
+    * truncated mid-stream keeps its decoded prefix frames.
     */
   def decodeFramesBatched(media: DataFrame, batchSize: Int = 64,
-      batchInit: () => Unit = () => ()): Dataset[FrameMeta] = {
-    implicit val enc = Encoders.product[FrameMeta]
-    media.select("media_id", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batchInit() // per-batch demuxer initialization happens HERE, once
-        val crc = new java.util.zip.CRC32() // reused across the batch
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val out = scala.collection.mutable.ArrayBuffer.empty[FrameMeta]
-          // createImageInputStream returns NULL (not an exception) when
-          // no stream SPI accepts the input — treat as undecodable
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          if (iis != null) try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (readers.hasNext) {
-              val reader = readers.next()
-              try {
-                // seekForwardOnly = false: frame-indexed random access
-                reader.setInput(iis, false, true)
-                // an unreadable frame COUNT (getNumImages scans the whole
-                // stream, so a truncated container can fail right here)
-                // must not skip the clip: fall back to reading frames
-                // until the first failure, which keeps the decoded prefix
-                // exactly as the doc promises
-                val n =
-                  try reader.getNumImages(true)
-                  catch { case scala.util.control.NonFatal(_) => Int.MaxValue }
-                var i = 0
-                var ok = true
-                while (i < n && ok) {
-                  val img =
-                    try reader.read(i)
-                    catch { case scala.util.control.NonFatal(_) => null }
-                  if (img == null) ok = false // truncated tail: keep prefix
-                  else {
-                    crc.reset()
-                    var y = 0
-                    while (y < img.getHeight) {
-                      var x = 0
-                      while (x < img.getWidth) {
-                        val p = img.getRGB(x, y)
-                        crc.update(p >>> 24)
-                        crc.update((p >>> 16) & 0xff)
-                        crc.update((p >>> 8) & 0xff)
-                        crc.update(p & 0xff)
-                        x += 1
-                      }
-                      y += 1
-                    }
-                    out += FrameMeta(id, i, img.getWidth, img.getHeight,
-                      crc.getValue)
-                  }
-                  i += 1
-                }
-              } finally reader.dispose()
-            }
-          } catch { case scala.util.control.NonFatal(_) => () } // skip row (R2)
-          finally iis.close()
-          out
+      batchInit: () => Unit = () => ()): Dataset[FrameMeta] =
+    batched[FrameMeta](media, batchSize, batchInit, "media_id", "bytes") { () =>
+      val crc = new CRC32()
+      r => {
+        val out = scala.collection.mutable.ArrayBuffer.empty[FrameMeta]
+        foreachFrame(r.getAs[Array[Byte]](1)) { (i, img) =>
+          out += FrameMeta(r.getLong(0), i, img.getWidth, img.getHeight, pixelCrc(crc, img))
         }
+        out
       }
     }
-  }
 
   /** CONTENT-level media dedup — what the real decoders exist for:
     * `q_media_dedup` catches byte-identical payloads, but the same
@@ -353,44 +376,20 @@ object Multimodal {
       width: Int,
       height: Int)
 
-  /** REAL RESIZE behind the same batched seam — decode (javax.imageio),
-    * scale (java.awt Graphics2D, bilinear), re-encode (PNG: lossless, so
-    * the output round-trips bit-stable within a JVM — spec-pinned) —
-    * making the resize path working JDK code like the decode paths;
-    * `resizeStub` remains for the synthetic non-image media table.
-    * Undecodable payloads are skipped (R2), and per-batch init is the
-    * same amortization contract as the decoders.
+  /** REAL resize — decode (`readImage`), scale (`scaleBilinear`),
+    * re-encode (PNG: lossless, so the output round-trips bit-stable
+    * within a JVM — spec-pinned); `resizeStub` remains for the synthetic
+    * non-image media table.
     */
   def resizeImagesBatched(media: DataFrame, w: Int, h: Int,
       batchSize: Int = 64,
       batchInit: () => Unit = () => ()): Dataset[ResizedImage] = {
     require(w > 0 && h > 0, s"target dims must be positive, got ${w}x$h")
-    implicit val enc = Encoders.product[ResizedImage]
-    media.select("media_id", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batchInit() // per-batch codec initialization happens HERE, once
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null) None // skip, don't fail (R2)
-          else {
-            val out = new java.awt.image.BufferedImage(w, h,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g = out.createGraphics()
-            try {
-              g.setRenderingHint(
-                java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, w, h, null)
-            } finally g.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            Some(ResizedImage(id, bos.toByteArray, w, h))
-          }
-        }
+    batched[ResizedImage](media, batchSize, batchInit, "media_id", "bytes") { () =>
+      r => readImage(r.getAs[Array[Byte]](1)).map { img =>
+        val bos = new java.io.ByteArrayOutputStream()
+        ImageIO.write(scaleBilinear(img, w, h), "png", bos)
+        ResizedImage(r.getLong(0), bos.toByteArray, w, h)
       }
     }
   }
@@ -410,44 +409,33 @@ object Multimodal {
     * columns carried — the transform-shaped plumbing (vs decodeBatched's
     * extract shape).
     */
-  def resizeBatched(media: DataFrame, w: Int, h: Int, batchSize: Int = 64): DataFrame = {
-    implicit val enc = Encoders.product[(Long, String, Array[Byte])]
-    media.select("media_id", "kind", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        // per-batch codec/scaler init would happen HERE, once
-        batch.map(r => (r.getLong(0), r.getString(1),
-          resizeStub(r.getAs[Array[Byte]](2), w, h)))
-      }
+  def resizeBatched(media: DataFrame, w: Int, h: Int, batchSize: Int = 64): DataFrame =
+    batched[(Long, String, Array[Byte])](media, batchSize, noInit,
+        "media_id", "kind", "bytes") { () =>
+      r => Some((r.getLong(0), r.getString(1), resizeStub(r.getAs[Array[Byte]](2), w, h)))
     }.toDF("media_id", "kind", "bytes")
-  }
 
   /** Batched frame sampling over video rows — the explode-shaped plumbing
     * (one media row -> N frame rows). Frame timestamps come from the stub
     * decode's sampling schedule; the "frame" payload is a deterministic
-    * byte slice standing in for a decoded frame. A real deployment swaps
-    * the slice for a demuxer read; per-batch demuxer init amortizes
-    * exactly like the other batched stubs.
+    * byte slice standing in for a decoded frame (`decodeFramesBatched`
+    * is the real demuxer read).
     */
-  def frameSampleBatched(media: DataFrame, batchSize: Int = 64): DataFrame = {
-    implicit val enc = Encoders.product[(Long, Long, Long, Array[Byte])]
-    media.filter(col("kind") === "video")
-      .select("media_id", "kind", "bytes").mapPartitions { rows =>
-        rows.grouped(batchSize).flatMap { batch =>
-          // per-batch demuxer/decoder initialization would happen HERE
-          batch.iterator.flatMap { r =>
-            val id = r.getLong(0)
-            val bytes = r.getAs[Array[Byte]](2)
-            val meta = decodeStub(id, "video", bytes)
-            meta.frames.zipWithIndex.map { case (ts, i) =>
-              val slice = bytes.slice(
-                (i * bytes.length / math.max(1, meta.frames.size)),
-                ((i + 1) * bytes.length / math.max(1, meta.frames.size)))
-              (id, i.toLong, ts, slice)
-            }
-          }
+  def frameSampleBatched(media: DataFrame, batchSize: Int = 64): DataFrame =
+    batched[(Long, Long, Long, Array[Byte])](media.filter(col("kind") === "video"),
+        batchSize, noInit, "media_id", "bytes") { () =>
+      r => {
+        val id = r.getLong(0)
+        val bytes = r.getAs[Array[Byte]](1)
+        val meta = decodeStub(id, "video", bytes)
+        meta.frames.zipWithIndex.map { case (ts, i) =>
+          val slice = bytes.slice(
+            (i * bytes.length / math.max(1, meta.frames.size)),
+            ((i + 1) * bytes.length / math.max(1, meta.frames.size)))
+          (id, i.toLong, ts, slice)
         }
-      }.toDF("media_id", "frame_idx", "frame_ts_ms", "frame_bytes")
-  }
+      }
+    }.toDF("media_id", "frame_idx", "frame_ts_ms", "frame_bytes")
 
   /** 64-bit perceptual hashes of one decoded image (see
     * perceptualHashImagesBatched): ahash = mean hash, dhash = gradient
@@ -455,89 +443,36 @@ object Multimodal {
     */
   final case class PerceptualHash(media_id: Long, ahash: Long, dhash: Long)
 
-  /** Row-major luma grid of `img` downscaled to w x h with bilinear
-    * interpolation: gray = (299R + 587G + 114B) / 1000, integer.
-    */
-  private def grayGrid(img: java.awt.image.BufferedImage, w: Int, h: Int): Array[Int] = {
-    val small = new java.awt.image.BufferedImage(w, h,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val g = small.createGraphics()
-    try {
-      g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-      g.drawImage(img, 0, 0, w, h, null)
-    } finally g.dispose()
-    val out = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val p = small.getRGB(x, y)
-        out(y * w + x) =
-          (299 * ((p >>> 16) & 0xff) + 587 * ((p >>> 8) & 0xff) + 114 * (p & 0xff)) / 1000
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  /** REAL perceptual (near-dup) image hashes behind the same batched
-    * decode seam as decodeImagesBatched — the LAION-style pass that
+  /** REAL perceptual (near-dup) image hashes — the LAION-style pass that
     * catches what content-CRC dedup (`mediaContentDedup`) can't: the same
     * image RESIZED or RECOMPRESSED lossily has different pixels byte-wise
     * but a near-identical 8x8 downscale. Both classic hashes (public
     * knowledge) over the bilinear-downscaled luma grid:
-    *  - ahash (average hash): 8x8 grid, bit i set iff gray_i > mean —
-    *    compared as 64*gray_i > sum so the decision is integer-exact;
+    *  - ahash (`aHash`, average hash over the 8x8 grid);
     *  - dhash (difference hash): 9x8 grid, bit y*8+x set iff
     *    gray[y][x] > gray[y][x+1] (horizontal gradient sign).
-    * Undecodable payloads are skipped (R2); batchInit amortizes per
-    * batch. Bytes never leave the partition — only (id, 2 longs) rows
-    * exist downstream.
+    * Bytes never leave the partition — only (id, 2 longs) rows exist
+    * downstream.
     */
   def perceptualHashImagesBatched(media: DataFrame, batchSize: Int = 64,
-      batchInit: () => Unit = () => ()): Dataset[PerceptualHash] = {
-    implicit val enc = Encoders.product[PerceptualHash]
-    media.select("media_id", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batchInit()
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val img =
-            try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null) None // skip, don't fail (R2)
-          else {
-            val g8 = grayGrid(img, 8, 8)
-            var sum = 0L
-            var i = 0
-            while (i < 64) { sum += g8(i); i += 1 }
-            var ahash = 0L
-            i = 0
-            while (i < 64) {
-              if (64L * g8(i) > sum) ahash |= (1L << i)
-              i += 1
-            }
-            val g9 = grayGrid(img, 9, 8)
-            var dhash = 0L
-            var y = 0
-            while (y < 8) {
-              var x = 0
-              while (x < 8) {
-                if (g9(y * 9 + x) > g9(y * 9 + x + 1))
-                  dhash |= (1L << (y * 8 + x))
-                x += 1
-              }
-              y += 1
-            }
-            Some(PerceptualHash(id, ahash, dhash))
+      batchInit: () => Unit = () => ()): Dataset[PerceptualHash] =
+    batched[PerceptualHash](media, batchSize, batchInit, "media_id", "bytes") { () =>
+      r => readImage(r.getAs[Array[Byte]](1)).map { img =>
+        val g9 = grayGrid(img, 9, 8)
+        var dhash = 0L
+        var y = 0
+        while (y < 8) {
+          var x = 0
+          while (x < 8) {
+            if (g9(y * 9 + x) > g9(y * 9 + x + 1))
+              dhash |= (1L << (y * 8 + x))
+            x += 1
           }
+          y += 1
         }
+        PerceptualHash(r.getLong(0), aHash(img), dhash)
       }
     }
-  }
 
   /** Perceptual image NEAR-dup pairs over the real decoder: ahash per
     * image, then the SAME Hamming-banded LSH machinery the text SimHash
@@ -566,7 +501,7 @@ object Multimodal {
     * triple (images: aHash/dHash over the pixel grid; video: frame-level
     * pixel hashes; audio: THIS). The classic envelope hash (public
     * knowledge, the aHash idea transposed to time): decode to canonical
-    * signed-16-bit PCM exactly as decodeAudioBatched does, collapse
+    * signed-16-bit PCM (`readPcm`, as decodeAudioBatched does), collapse
     * channels to mono mean, split the clip into 64 equal TIME windows,
     * and set bit w iff window w's mean |amplitude| exceeds the whole-clip
     * mean. By construction the hash is invariant to
@@ -583,80 +518,54 @@ object Multimodal {
     * per row (an audio clip, bounded; a pipeline ingesting hour-long
     * masters would window the decode), the envelope accumulates in
     * O(windows) longs, and only (id, 8-byte hash) rows ever reach a
-    * shuffle. Undecodable payloads skip (R2), NonFatal like every codec
-    * seam.
+    * shuffle. n_frames counts the decoded frames; clips under 64 frames
+    * (too short for the envelope) yield no row.
     */
   def perceptualHashAudioBatched(media: DataFrame, batchSize: Int = 64,
-      batchInit: () => Unit = () => ()): Dataset[AudioPerceptualHash] = {
-    implicit val enc = Encoders.product[AudioPerceptualHash]
-    media.select("media_id", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batchInit()
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          try {
-            import javax.sound.sampled.{AudioFormat, AudioSystem}
-            val raw = AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            try {
-              val src = raw.getFormat
-              val rate = math.round(src.getSampleRate).toInt
-              if (rate <= 0 || src.getChannels <= 0) None
-              else {
-                val ch = src.getChannels
-                val canon = new AudioFormat(AudioFormat.Encoding.PCM_SIGNED,
-                  src.getSampleRate, 16, ch, 2 * ch, src.getSampleRate, false)
-                val ais =
-                  if (src.matches(canon)) raw
-                  else AudioSystem.getAudioInputStream(canon, raw)
-                val pcm = new java.io.ByteArrayOutputStream()
-                val b = new Array[Byte](math.max(8192 / (2 * ch), 1) * 2 * ch)
-                var n = ais.read(b)
-                while (n > 0) { pcm.write(b, 0, n); n = ais.read(b) }
-                val a = pcm.toByteArray
-                val frames = a.length / (2 * ch)
-                if (frames < 64) None // too short for a 64-window envelope
-                else {
-                  // mean |amplitude| per window, mono-collapsed
-                  val env = new Array[Long](64)
-                  val cnt = new Array[Long](64)
-                  var f = 0
-                  while (f < frames) {
-                    val w = ((f.toLong * 64) / frames).toInt
-                    var c = 0
-                    var acc = 0L
-                    while (c < ch) {
-                      val off = (f * ch + c) * 2
-                      // little-endian signed 16-bit
-                      val v = ((a(off + 1).toInt << 8) | (a(off) & 0xff)).toShort
-                      acc += math.abs(v.toLong)
-                      c += 1
-                    }
-                    env(w) += acc / ch
-                    cnt(w) += 1
-                    f += 1
-                  }
-                  var i = 0
-                  var totNum = 0L
-                  while (i < 64) { env(i) = env(i) / math.max(cnt(i), 1L); totNum += env(i); i += 1 }
-                  var ehash = 0L
-                  i = 0
-                  while (i < 64) {
-                    if (64L * env(i) > totNum) ehash |= (1L << i)
-                    i += 1
-                  }
-                  Some(AudioPerceptualHash(id, rate, frames, ehash))
+      batchInit: () => Unit = () => ()): Dataset[AudioPerceptualHash] =
+    batched[AudioPerceptualHash](media, batchSize, batchInit, "media_id", "bytes") { () =>
+      val buf = new Array[Byte](8192)
+      r => {
+        val pcm = new java.io.ByteArrayOutputStream()
+        readPcm(r.getAs[Array[Byte]](1), buf)((b, n) => pcm.write(b, 0, n)).flatMap {
+          case (rate, ch, _) =>
+            val a = pcm.toByteArray
+            val frames = a.length / (2 * ch)
+            if (frames < 64) None
+            else {
+              // mean |amplitude| per window, mono-collapsed
+              val env = new Array[Long](64)
+              val cnt = new Array[Long](64)
+              var f = 0
+              while (f < frames) {
+                val w = ((f.toLong * 64) / frames).toInt
+                var c = 0
+                var acc = 0L
+                while (c < ch) {
+                  val off = (f * ch + c) * 2
+                  // little-endian signed 16-bit
+                  val v = ((a(off + 1).toInt << 8) | (a(off) & 0xff)).toShort
+                  acc += math.abs(v.toLong)
+                  c += 1
                 }
+                env(w) += acc / ch
+                cnt(w) += 1
+                f += 1
               }
-            } finally raw.close()
-          } catch {
-            case scala.util.control.NonFatal(_) => None // skip (R2)
-          }
+              var i = 0
+              var totNum = 0L
+              while (i < 64) { env(i) = env(i) / math.max(cnt(i), 1L); totNum += env(i); i += 1 }
+              var ehash = 0L
+              i = 0
+              while (i < 64) {
+                if (64L * env(i) > totNum) ehash |= (1L << i)
+                i += 1
+              }
+              Some(AudioPerceptualHash(r.getLong(0), rate, frames, ehash))
+            }
         }
       }
     }
-  }
 
   /** Audio near-dup pairs within `maxHamming` of the 64-bit envelope
     * hash — same banded machinery as the image path (lossless for
@@ -692,78 +601,32 @@ object Multimodal {
     *    the hash moves far (order-awareness, which a bag-of-frame-hashes
     *    signature cannot give);
     *  - one clip (n_frames = 1) degenerates exactly to its image aHash.
-    * Decode is the ImageIO multi-frame loop of decodeFramesBatched
-    * (GIF-style containers in this environment; a production build swaps
-    * in a real demuxer behind the same seam); truncated tails keep the
-    * decoded prefix, undecodable payloads skip (R2). Only (id, 8-byte
+    * Decode is `foreachFrame`, as in decodeFramesBatched (GIF-style
+    * containers in this environment; a production build swaps in a real
+    * demuxer behind the same seam): a truncated tail keeps the decoded
+    * prefix. Only the per-frame hashes are held, and only (id, 8-byte
     * hash) rows leave the scan partition.
     */
   def perceptualHashVideoBatched(media: DataFrame, batchSize: Int = 64,
-      batchInit: () => Unit = () => ()): Dataset[VideoPerceptualHash] = {
-    implicit val enc = Encoders.product[VideoPerceptualHash]
-    media.select("media_id", "bytes").mapPartitions { rows =>
-      rows.grouped(batchSize).flatMap { batch =>
-        batchInit()
-        batch.iterator.flatMap { r =>
-          val id = r.getLong(0)
-          val bytes = r.getAs[Array[Byte]](1)
-          val hashes = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          if (iis != null) try {
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (readers.hasNext) {
-              val reader = readers.next()
-              try {
-                reader.setInput(iis, false, true)
-                // unreadable frame count → read until first failure so a
-                // truncated container still keeps its decoded prefix (see
-                // decodeFramesBatched — same R2 granularity)
-                val n =
-                  try reader.getNumImages(true)
-                  catch { case scala.util.control.NonFatal(_) => Int.MaxValue }
-                var i = 0
-                var ok = true
-                while (i < n && ok) {
-                  val img =
-                    try reader.read(i)
-                    catch { case scala.util.control.NonFatal(_) => null }
-                  if (img == null) ok = false // truncated tail: keep prefix
-                  else {
-                    val g8 = grayGrid(img, 8, 8)
-                    var sum = 0L
-                    var j = 0
-                    while (j < 64) { sum += g8(j); j += 1 }
-                    var ah = 0L
-                    j = 0
-                    while (j < 64) {
-                      if (64L * g8(j) > sum) ah |= (1L << j)
-                      j += 1
-                    }
-                    hashes += ah
-                  }
-                  i += 1
-                }
-              } finally reader.dispose()
-            }
-          } catch { case scala.util.control.NonFatal(_) => () } // skip row (R2)
-          finally iis.close()
-          val k = hashes.length
-          if (k == 0) None
-          else {
-            var chash = 0L
-            var w = 0
-            while (w < 64) {
-              val f = ((w.toLong * k) / 64).toInt
-              if ((hashes(f) & (1L << w)) != 0) chash |= (1L << w)
-              w += 1
-            }
-            Some(VideoPerceptualHash(id, k, chash))
+      batchInit: () => Unit = () => ()): Dataset[VideoPerceptualHash] =
+    batched[VideoPerceptualHash](media, batchSize, batchInit, "media_id", "bytes") { () =>
+      r => {
+        val hashes = scala.collection.mutable.ArrayBuffer.empty[Long]
+        foreachFrame(r.getAs[Array[Byte]](1))((_, img) => hashes += aHash(img))
+        val k = hashes.length
+        if (k == 0) None
+        else {
+          var chash = 0L
+          var w = 0
+          while (w < 64) {
+            val f = ((w.toLong * k) / 64).toInt
+            if ((hashes(f) & (1L << w)) != 0) chash |= (1L << w)
+            w += 1
           }
+          Some(VideoPerceptualHash(r.getLong(0), k, chash))
         }
       }
     }
-  }
 
   /** Clip-granularity perceptual video NEAR-dup pairs — the video member
     * of the near-dup triple, riding the same 8-band Hamming machinery as
@@ -841,6 +704,27 @@ object Multimodal {
   }
 
   import graft.ops.Q
+
+  /** Near-dup pairs of the stub-raster queries (q_media_neardup,
+    * q_clip_neardup): (vid, k = four 16-bit band keys) rows banded on
+    * their keys, the skew-guarded candidate join, and the Hamming <= 3
+    * verify over the four keys.
+    */
+  private def stubNearDupPairs(keyed: DataFrame): DataFrame = {
+    val banded = keyed.select(col("vid"), col("k"),
+      explode(expr(
+        "transform(sequence(0, 3), bb -> struct(bb AS band, element_at(k, bb + 1) AS key))")).as("bb"))
+      .select(col("vid"), col("k"), col("bb.band"), col("bb.key"))
+    graft.ops.TextDedup.bandedCandidates(banded, "vid", "key", Seq("k"))
+      .withColumn("hamming", expr(
+        """cast(bit_count(element_at(ka, 1) ^ element_at(kb, 1))
+              + bit_count(element_at(ka, 2) ^ element_at(kb, 2))
+              + bit_count(element_at(ka, 3) ^ element_at(kb, 3))
+              + bit_count(element_at(ka, 4) ^ element_at(kb, 4)) as bigint)"""))
+      .filter(col("hamming") <= 3)
+      .select(col("a_id"), col("b_id"), col("hamming"))
+      .orderBy(col("a_id"), col("b_id"))
+  }
 
   /** The COMPOSED media-ingest chain as oracle-able batch arithmetic
     * (q_media_ingest_audit) — the audit twin of streaming.MediaIngestJob
@@ -1213,29 +1097,7 @@ object Multimodal {
             org.apache.spark.sql.graft.GraftSqlShims.column(StubAHashKeys(
               org.apache.spark.sql.graft.GraftSqlShims.expression(col("txt"))))
               .as("k"))
-        val banded = keyed.select(col("vid"), col("k"),
-          explode(expr(
-            "transform(sequence(0, 3), bb -> struct(bb AS band, element_at(k, bb + 1) AS key))")).as("bb"))
-          .select(col("vid"), col("k"), col("bb.band"), col("bb.key"))
-        val small = banded.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") <= graft.ops.TextDedup.MaxBucketSize)
-          .select(col("band"), col("key"))
-        val pruned = banded.join(broadcast(small), Seq("band", "key"))
-        pruned.as("x").join(pruned.as("y"),
-            col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-              col("x.vid") < col("y.vid"))
-          .select(col("x.vid").as("a_id"), col("y.vid").as("b_id"),
-            col("x.k").as("ka"), col("y.k").as("kb"))
-          .distinct()
-          .withColumn("hamming", expr(
-            """cast(bit_count(element_at(ka, 1) ^ element_at(kb, 1))
-                  + bit_count(element_at(ka, 2) ^ element_at(kb, 2))
-                  + bit_count(element_at(ka, 3) ^ element_at(kb, 3))
-                  + bit_count(element_at(ka, 4) ^ element_at(kb, 4)) as bigint)"""))
-          .filter(col("hamming") <= 3)
-          .select(col("a_id"), col("b_id"), col("hamming"))
-          .orderBy(col("a_id"), col("b_id"))
+        stubNearDupPairs(keyed)
       },
       Some("""WITH img AS (
                 SELECT doc_id AS media_id, text, len(text) AS L
@@ -1324,29 +1186,7 @@ object Multimodal {
         val keyed = variants.select(col("vid"),
           array(element_at(frameKeys(0), 1), element_at(frameKeys(1), 2),
             element_at(frameKeys(2), 3), element_at(frameKeys(3), 4)).as("k"))
-        val banded = keyed.select(col("vid"), col("k"),
-          explode(expr(
-            "transform(sequence(0, 3), bb -> struct(bb AS band, element_at(k, bb + 1) AS key))")).as("bb"))
-          .select(col("vid"), col("k"), col("bb.band"), col("bb.key"))
-        val small = banded.groupBy(col("band"), col("key"))
-          .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") <= graft.ops.TextDedup.MaxBucketSize)
-          .select(col("band"), col("key"))
-        val pruned = banded.join(broadcast(small), Seq("band", "key"))
-        pruned.as("x").join(pruned.as("y"),
-            col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-              col("x.vid") < col("y.vid"))
-          .select(col("x.vid").as("a_id"), col("y.vid").as("b_id"),
-            col("x.k").as("ka"), col("y.k").as("kb"))
-          .distinct()
-          .withColumn("hamming", expr(
-            """cast(bit_count(element_at(ka, 1) ^ element_at(kb, 1))
-                  + bit_count(element_at(ka, 2) ^ element_at(kb, 2))
-                  + bit_count(element_at(ka, 3) ^ element_at(kb, 3))
-                  + bit_count(element_at(ka, 4) ^ element_at(kb, 4)) as bigint)"""))
-          .filter(col("hamming") <= 3)
-          .select(col("a_id"), col("b_id"), col("hamming"))
-          .orderBy(col("a_id"), col("b_id"))
+        stubNearDupPairs(keyed)
       },
       Some("""WITH vid0 AS (
                 SELECT doc_id AS media_id, text, len(text) AS L

@@ -251,6 +251,60 @@ object CorpusOps {
     s"""WITH $sourceUniquenessCtes
        SELECT source, n_shingles, n_unique, uniq_frac FROM su ORDER BY 1"""
 
+  /** Shared by q_bm25, q_bm25_stored and q_bm25_incr: every BM25 path
+    * must return the in-query scores bit for bit.
+    */
+  private val bm25OracleSql: String =
+    """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+                   tf AS (SELECT doc_id, term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY 1, 2),
+                   dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
+                   stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
+                   dfq AS (SELECT term, count(*) AS df FROM tf
+                           WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
+                   scored AS (SELECT tf.doc_id, tf.term,
+                                     tf.tf * 2.2::DOUBLE / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * (dl.dl / stats.avgdl)))
+                                       * ((stats.n_docs - dfq.df + 0.5::DOUBLE) / (dfq.df + 0.5::DOUBLE)) AS score
+                              FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), stats)
+              SELECT doc_id,
+                     coalesce(MAX(CASE WHEN term = 'hash' THEN score END), 0.0)
+                     + coalesce(MAX(CASE WHEN term = 'join' THEN score END), 0.0)
+                     + coalesce(MAX(CASE WHEN term = 'vector' THEN score END), 0.0) AS bm25
+              FROM scored GROUP BY doc_id
+              ORDER BY bm25 DESC, doc_id LIMIT 10"""
+
+  /** Shared by q_hybrid_rrf and q_hybrid_rrf_stored. */
+  private val hybridRrfOracleSql: String =
+    """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+                   tf AS (SELECT doc_id, term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY 1, 2),
+                   dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
+                   stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
+                   dfq AS (SELECT term, count(*) AS df FROM tf
+                           WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
+                   scored AS (SELECT tf.doc_id, tf.term,
+                                     tf.tf * 2.2::DOUBLE / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * (dl.dl / stats.avgdl)))
+                                       * ((stats.n_docs - dfq.df + 0.5::DOUBLE) / (dfq.df + 0.5::DOUBLE)) AS score
+                              FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), stats),
+                   bm AS (SELECT doc_id,
+                                 coalesce(MAX(CASE WHEN term = 'hash' THEN score END), 0.0)
+                                 + coalesce(MAX(CASE WHEN term = 'join' THEN score END), 0.0)
+                                 + coalesce(MAX(CASE WHEN term = 'vector' THEN score END), 0.0) AS bm25
+                          FROM scored GROUP BY doc_id),
+                   rb AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r
+                          FROM bm ORDER BY bm25 DESC, doc_id LIMIT 50),
+                   nd AS (SELECT doc_id, COUNT(*) AS n_terms FROM tf GROUP BY 1),
+                   iq AS (SELECT doc_id, COUNT(*) AS inter FROM tf
+                          WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
+                   jac AS (SELECT iq.doc_id,
+                                  CAST(iq.inter AS DOUBLE) / (nd.n_terms + 3 - iq.inter) AS jac
+                           FROM iq JOIN nd USING (doc_id)),
+                   rj AS (SELECT doc_id, row_number() OVER (ORDER BY jac DESC, doc_id) AS r
+                          FROM jac ORDER BY jac DESC, doc_id LIMIT 50)
+              SELECT COALESCE(rb.doc_id, rj.doc_id) AS doc_id,
+                     COALESCE(1000000000 // (60 + rb.r), 0)
+                       + COALESCE(1000000000 // (60 + rj.r), 0) AS rrf
+              FROM rb FULL OUTER JOIN rj ON rb.doc_id = rj.doc_id
+              ORDER BY rrf DESC, doc_id LIMIT 10"""
+
   /** RETRIEVAL-QUALITY METRICS (MRR / recall@k / nDCG@k) — the eval
     * harness for the retrieval stack (q_bm25 / q_hybrid_rrf /
     * q_passage_search build rankings; nothing measured them). Every eval
@@ -806,22 +860,7 @@ object CorpusOps {
           .orderBy(col("bm25").desc, col("doc_id"))
           .limit(10)
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-                   tf AS (SELECT doc_id, term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY 1, 2),
-                   dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-                   stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-                   dfq AS (SELECT term, count(*) AS df FROM tf
-                           WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
-                   scored AS (SELECT tf.doc_id, tf.term,
-                                     tf.tf * 2.2::DOUBLE / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * (dl.dl / stats.avgdl)))
-                                       * ((stats.n_docs - dfq.df + 0.5::DOUBLE) / (dfq.df + 0.5::DOUBLE)) AS score
-                              FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), stats)
-              SELECT doc_id,
-                     coalesce(MAX(CASE WHEN term = 'hash' THEN score END), 0.0)
-                     + coalesce(MAX(CASE WHEN term = 'join' THEN score END), 0.0)
-                     + coalesce(MAX(CASE WHEN term = 'vector' THEN score END), 0.0) AS bm25
-              FROM scored GROUP BY doc_id
-              ORDER BY bm25 DESC, doc_id LIMIT 10""")),
+      Some(bm25OracleSql)),
 
     // BM25 over the STORED inverted index (sources.TextIndexStore) — the
     // lake-scale retrieval shape: the index (postings hive-partitioned on
@@ -838,22 +877,7 @@ object CorpusOps {
         val idx = graft.sources.TextIndexStore.ensure(s, dir)
         graft.sources.TextIndexStore.bm25(s, idx, Seq("hash", "join", "vector"))
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-                   tf AS (SELECT doc_id, term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY 1, 2),
-                   dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-                   stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-                   dfq AS (SELECT term, count(*) AS df FROM tf
-                           WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
-                   scored AS (SELECT tf.doc_id, tf.term,
-                                     tf.tf * 2.2::DOUBLE / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * (dl.dl / stats.avgdl)))
-                                       * ((stats.n_docs - dfq.df + 0.5::DOUBLE) / (dfq.df + 0.5::DOUBLE)) AS score
-                              FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), stats)
-              SELECT doc_id,
-                     coalesce(MAX(CASE WHEN term = 'hash' THEN score END), 0.0)
-                     + coalesce(MAX(CASE WHEN term = 'join' THEN score END), 0.0)
-                     + coalesce(MAX(CASE WHEN term = 'vector' THEN score END), 0.0) AS bm25
-              FROM scored GROUP BY doc_id
-              ORDER BY bm25 DESC, doc_id LIMIT 10""")),
+      Some(bm25OracleSql)),
 
     // BM25 over the INCREMENTALLY MAINTAINED text index
     // (sources.IncrementalTextIndex): the corpus arrives as TWO append
@@ -878,22 +902,7 @@ object CorpusOps {
         graft.sources.IncrementalTextIndex.bm25(
           s, idx, Seq("hash", "join", "vector"))
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-                   tf AS (SELECT doc_id, term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY 1, 2),
-                   dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-                   stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-                   dfq AS (SELECT term, count(*) AS df FROM tf
-                           WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
-                   scored AS (SELECT tf.doc_id, tf.term,
-                                     tf.tf * 2.2::DOUBLE / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * (dl.dl / stats.avgdl)))
-                                       * ((stats.n_docs - dfq.df + 0.5::DOUBLE) / (dfq.df + 0.5::DOUBLE)) AS score
-                              FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), stats)
-              SELECT doc_id,
-                     coalesce(MAX(CASE WHEN term = 'hash' THEN score END), 0.0)
-                     + coalesce(MAX(CASE WHEN term = 'join' THEN score END), 0.0)
-                     + coalesce(MAX(CASE WHEN term = 'vector' THEN score END), 0.0) AS bm25
-              FROM scored GROUP BY doc_id
-              ORDER BY bm25 DESC, doc_id LIMIT 10""")),
+      Some(bm25OracleSql)),
 
     // Hybrid retrieval via reciprocal-rank fusion: two retrievers score the
     // same query — BM25 (saturated term weighting, the q_bm25 arithmetic)
@@ -1021,36 +1030,7 @@ object CorpusOps {
           .limit(10)
         out
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-                   tf AS (SELECT doc_id, term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY 1, 2),
-                   dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-                   stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-                   dfq AS (SELECT term, count(*) AS df FROM tf
-                           WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
-                   scored AS (SELECT tf.doc_id, tf.term,
-                                     tf.tf * 2.2::DOUBLE / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * (dl.dl / stats.avgdl)))
-                                       * ((stats.n_docs - dfq.df + 0.5::DOUBLE) / (dfq.df + 0.5::DOUBLE)) AS score
-                              FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), stats),
-                   bm AS (SELECT doc_id,
-                                 coalesce(MAX(CASE WHEN term = 'hash' THEN score END), 0.0)
-                                 + coalesce(MAX(CASE WHEN term = 'join' THEN score END), 0.0)
-                                 + coalesce(MAX(CASE WHEN term = 'vector' THEN score END), 0.0) AS bm25
-                          FROM scored GROUP BY doc_id),
-                   rb AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r
-                          FROM bm ORDER BY bm25 DESC, doc_id LIMIT 50),
-                   nd AS (SELECT doc_id, COUNT(*) AS n_terms FROM tf GROUP BY 1),
-                   iq AS (SELECT doc_id, COUNT(*) AS inter FROM tf
-                          WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
-                   jac AS (SELECT iq.doc_id,
-                                  CAST(iq.inter AS DOUBLE) / (nd.n_terms + 3 - iq.inter) AS jac
-                           FROM iq JOIN nd USING (doc_id)),
-                   rj AS (SELECT doc_id, row_number() OVER (ORDER BY jac DESC, doc_id) AS r
-                          FROM jac ORDER BY jac DESC, doc_id LIMIT 50)
-              SELECT COALESCE(rb.doc_id, rj.doc_id) AS doc_id,
-                     COALESCE(1000000000 // (60 + rb.r), 0)
-                       + COALESCE(1000000000 // (60 + rj.r), 0) AS rrf
-              FROM rb FULL OUTER JOIN rj ON rb.doc_id = rj.doc_id
-              ORDER BY rrf DESC, doc_id LIMIT 10""")),
+      Some(hybridRrfOracleSql)),
 
     // Hybrid RRF over the STORED index (sources.TextIndexStore) — both
     // retrievers are declared over one per-doc aggregate of the
@@ -1064,36 +1044,7 @@ object CorpusOps {
         val idx = graft.sources.TextIndexStore.ensure(s, dir)
         graft.sources.TextIndexStore.hybridRrf(s, idx, Seq("hash", "join", "vector"))
       },
-      Some("""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-                   tf AS (SELECT doc_id, term, count(*) AS tf FROM toks WHERE term <> '' GROUP BY 1, 2),
-                   dl AS (SELECT doc_id, SUM(tf) AS dl FROM tf GROUP BY 1),
-                   stats AS (SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl FROM dl),
-                   dfq AS (SELECT term, count(*) AS df FROM tf
-                           WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
-                   scored AS (SELECT tf.doc_id, tf.term,
-                                     tf.tf * 2.2::DOUBLE / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE * (dl.dl / stats.avgdl)))
-                                       * ((stats.n_docs - dfq.df + 0.5::DOUBLE) / (dfq.df + 0.5::DOUBLE)) AS score
-                              FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id), stats),
-                   bm AS (SELECT doc_id,
-                                 coalesce(MAX(CASE WHEN term = 'hash' THEN score END), 0.0)
-                                 + coalesce(MAX(CASE WHEN term = 'join' THEN score END), 0.0)
-                                 + coalesce(MAX(CASE WHEN term = 'vector' THEN score END), 0.0) AS bm25
-                          FROM scored GROUP BY doc_id),
-                   rb AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS r
-                          FROM bm ORDER BY bm25 DESC, doc_id LIMIT 50),
-                   nd AS (SELECT doc_id, COUNT(*) AS n_terms FROM tf GROUP BY 1),
-                   iq AS (SELECT doc_id, COUNT(*) AS inter FROM tf
-                          WHERE term IN ('hash', 'join', 'vector') GROUP BY 1),
-                   jac AS (SELECT iq.doc_id,
-                                  CAST(iq.inter AS DOUBLE) / (nd.n_terms + 3 - iq.inter) AS jac
-                           FROM iq JOIN nd USING (doc_id)),
-                   rj AS (SELECT doc_id, row_number() OVER (ORDER BY jac DESC, doc_id) AS r
-                          FROM jac ORDER BY jac DESC, doc_id LIMIT 50)
-              SELECT COALESCE(rb.doc_id, rj.doc_id) AS doc_id,
-                     COALESCE(1000000000 // (60 + rb.r), 0)
-                       + COALESCE(1000000000 // (60 + rj.r), 0) AS rrf
-              FROM rb FULL OUTER JOIN rj ON rb.doc_id = rj.doc_id
-              ORDER BY rrf DESC, doc_id LIMIT 10""")),
+      Some(hybridRrfOracleSql)),
 
     // Token co-occurrence lift (ratio PMI, no log — integer numerator and
     // denominator, ONE double division, bit-identical cross-engine):

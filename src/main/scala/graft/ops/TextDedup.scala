@@ -260,6 +260,27 @@ object TextDedup {
     */
   val MaxBucketSize = 64
 
+  /** LSH candidate pairs from banded keys: `banded` rows of (`id`, band,
+    * `key`, carry...) group on (band, `key`); a bucket over `maxBucket`
+    * rows is skipped (the skew guard), the rest broadcast as a
+    * semi-filter, and a self-join on (band, `key`) with x.id < y.id emits
+    * each candidate pair once as `a_id`, `b_id` and, per carried column
+    * c, `<c>a`/`<c>b`. Shuffles carry only the banded rows.
+    */
+  def bandedCandidates(banded: DataFrame, id: String, key: String,
+      carry: Seq[String] = Nil, maxBucket: Int = MaxBucketSize): DataFrame = {
+    val small = banded.groupBy(col("band"), col(key))
+      .agg(count(lit(1)).as("bn")).filter(col("bn") <= maxBucket)
+      .select(col("band"), col(key))
+    val pruned = banded.join(broadcast(small), Seq("band", key))
+    pruned.as("x").join(pruned.as("y"),
+        col("x.band") === col("y.band") && col(s"x.$key") === col(s"y.$key") &&
+          col(s"x.$id") < col(s"y.$id"))
+      .select(Seq(col(s"x.$id").as("a_id"), col(s"y.$id").as("b_id")) ++
+        carry.flatMap(c => Seq(col(s"x.$c").as(s"${c}a"), col(s"y.$c").as(s"${c}b"))): _*)
+      .distinct()
+  }
+
   /** MinHash signatures (numHashes seeded xxhash64 min over shingles) +
     * LSH banding; candidates from band-bucket equi-joins are verified with
     * the exact Jaccard, so precision is 1 and only recall is probabilistic
@@ -329,15 +350,7 @@ object TextDedup {
           explode(graft.functions.TextFunctions.minhashBands("sig", bands, rows))
             .as("bb"))
         .select(col("doc_id"), col("bb.band"), col("bb.bh"))
-      val small = banded.groupBy(col("band"), col("bh"))
-        .agg(count(lit(1)).as("bn")).filter(col("bn") <= maxBucket)
-        .select(col("band"), col("bh"))
-      val pruned = banded.join(broadcast(small), Seq("band", "bh"))
-      val cand = pruned.as("x").join(pruned.as("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-        .distinct()
+      val cand = bandedCandidates(banded, "doc_id", "bh", maxBucket = maxBucket)
       // candidate volume is band-pruned here, so attach-then-filter is
       // cheap — but the array sides must broadcast EXPLICITLY (their
       // size estimate inherits the corpus text column and overshoots)
@@ -1102,18 +1115,7 @@ object TextDedup {
     val banded = fp.select(col("id"), col("h"),
       explode(graft.functions.TextFunctions.hammingBands("h", bands)).as("bb"))
       .select(col("id"), col("h"), col("bb.band"), col("bb.key"))
-    // Same skew guard as MinHash: a band value shared by hundreds of docs
-    // carries no signal and would square the join output.
-    val small = banded.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("bn")).filter(col("bn") <= MaxBucketSize)
-      .select(col("band"), col("key"))
-    val pruned = banded.join(broadcast(small), Seq("band", "key"))
-    val pairs = pruned.as("x").join(pruned.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("a_id"), col("y.id").as("b_id"),
-        col("x.h").as("ha"), col("y.h").as("hb"))
-      .distinct()
+    val pairs = bandedCandidates(banded, "id", "key", Seq("h"))
       .withColumn("hamming", expr("bit_count(ha ^ hb)"))
       .filter(col("hamming") <= maxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
@@ -2450,8 +2452,8 @@ object TextDedup {
             .md5MinhashBandKeys(col("sh"), 8, 2))
           .select(col("base"), col("vidx"), col("vid"), col("hsh"), col("keys"))
           .persist() // band keys AND truth pairs re-read it
-        val cand = lshBandCandidates(
-          sh.select(col("vid"), posexplode(col("keys"))).toDF("vid", "band", "bh"))
+        val cand = bandedCandidates(
+          sh.select(col("vid"), posexplode(col("keys"))).toDF("vid", "band", "bh"), "vid", "bh")
         val out = lshRecallBuckets(lshCalibTruth(sh), cand)
           .orderBy(col("j_bucket"))
           .localCheckpoint()
@@ -2550,9 +2552,9 @@ object TextDedup {
         val truth = lshCalibTruth(sh).persist()
         truth.count() // materialize before the three geometry joins
         val out = geoms.map { case (b, r, kc) =>
-            val cand = lshBandCandidates(
+            val cand = bandedCandidates(
               sh.select(col("vid"), posexplode(col(kc)))
-                .toDF("vid", "band", "bh")).persist()
+                .toDF("vid", "band", "bh"), "vid", "bh").persist()
             val nCand = cand.agg(count(lit(1)).as("n_cand"))
             val res = lshRecallBuckets(truth, cand)
               .crossJoin(broadcast(nCand))
@@ -2701,21 +2703,6 @@ object TextDedup {
       // long-shingle twin for the truth kernel (same sets)
       .withColumn("hsh", array_sort(
         graft.functions.TextFunctions.shingleHashes(col("vtext"))))
-
-  /** Banded candidate pairs from (vid, band, bh) keys, with the bucket
-    * skew guard — the production candidate generator under measurement.
-    */
-  private def lshBandCandidates(bandkeys: DataFrame): DataFrame = {
-    val ok = bandkeys.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("bn")).filter(col("bn") <= MaxBucketSize)
-      .select(col("band"), col("bh"))
-    val pruned = bandkeys.join(broadcast(ok), Seq("band", "bh"))
-    pruned.as("x").join(pruned.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.vid") < col("y.vid"))
-      .select(col("x.vid").as("a_id"), col("y.vid").as("b_id"))
-      .distinct()
-  }
 
   /** Exact-truth pairs (Jaccard >= 0.4) within each variant group, via
     * the allocation-free sorted-long kernel (xxhash64-of-shingle Jaccard

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
@@ -33,12 +33,18 @@ object Pipelines {
     raw.select(from_json(col("value").cast(StringType), Schemas.quoteWire).as("q"))
       .select(col("q.*"))
 
+  /** F1: a decoded quote is valid when it carries a price and a time;
+    * any other line is R2's skip (or, in the dead-letter lake, its side
+    * output).
+    */
+  private val validQuote: Column = col("c").isNotNull && col("t").isNotNull
+
   /** F1 validate + P1 project/rename + T1 epoch->timestamp
     * (ref producer_stock_quotes.py:65-70,83-111).
     */
   def quotes(decoded: DataFrame): DataFrame =
     decoded
-      .filter(col("c").isNotNull && col("t").isNotNull)
+      .filter(validQuote)
       .select(
         col("symbol"),
         current_timestamp().as("fetch_ts"),
@@ -144,12 +150,19 @@ object Pipelines {
     raw.select(from_json(col("value").cast(StringType), Schemas.newsWire).as("a"))
       .select(col("a.*"))
 
+  /** F2: a decoded article is valid when it has a `symbol` — a failed
+    * JSON decode nulls the whole struct; a null `id` or `datetime` stays
+    * VALID (null news_id legitimately bypasses dedup, null published_ts
+    * is the producer's None handling — ref :144-150).
+    */
+  private val validNews: Column = col("symbol").isNotNull
+
   /** F2 type-guard + P2 project + T1 cast -> typed Dataset for the
     * stateful dedup (ref producer_company_news.py:100-164).
     */
   def newsArticles(decoded: DataFrame)(implicit spark: SparkSession): Dataset[NewsArticle] = {
     decoded
-      .filter(col("symbol").isNotNull)
+      .filter(validNews)
       .select(
         col("symbol"),
         col("id").as("news_id"),
@@ -309,70 +322,55 @@ object Pipelines {
     * valid rows land in the hive-partitioned lake — the log-and-continue
     * observability of the reference's processor
     * (processor_stock_quotes.py:56-62) as a side output instead of a log
-    * line. foreachBatch because one streaming query cannot feed two
-    * sinks; REPLAY-CONVERGENT, not blind append: both outputs are keyed
-    * by batch_id (dynamic partition overwrite on the lake, a per-batch
-    * directory overwrite on the dead letters), so re-running a batch
-    * after a failure rewrites exactly its own output instead of
-    * duplicating it — the same idempotence contract as the sibling
-    * partition sinks.
+    * line. REPLAY-CONVERGENT, not blind append: both outputs are keyed
+    * by batch_id, so re-running a batch after a failure rewrites exactly
+    * its own output instead of duplicating it.
     */
   def quotesLakeWithDeadLetter(raw: DataFrame, lakePath: String,
       dlPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    raw.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val decoded = batch
-          .select(col("value").cast(StringType).as("value"),
-            from_json(col("value").cast(StringType), Schemas.quoteWire).as("q"))
-          .select(col("value"), col("q.*"))
-          .persist()
-        try {
-          decoded.filter(col("c").isNull || col("t").isNull)
-            .select(col("value"))
-            .write.mode("overwrite").text(s"$dlPath/batch_id=$batchId")
-          StoreLifecycle.replacePartitions(
-            withHivePartitions(quotes(decoded.drop("value")), "event_ts")
-              .withColumn("batch_id", lit(batchId)),
-            lakePath, "year", "month", "day", "hour", "batch_id")
-        } finally decoded.unpersist()
-      }
+    lakeWithDeadLetter(raw, Schemas.quoteWire, validQuote, "event_ts",
+      lakePath, dlPath, checkpoint, trigger)(quotes)
 
-  /** News-side dead-letter lake write — the same R2 log-and-continue side
-    * output as [[quotesLakeWithDeadLetter]] for the second record type
-    * (the reference logs skips in BOTH processors:
-    * processor_company_news.py:37-45). A line is dead-lettered when its
-    * decoded `symbol` is null — failed JSON decode (whole struct nulls
-    * out) or a record missing the one required key; a null `id` or
-    * `datetime` stays VALID (null news_id legitimately bypasses dedup,
-    * null published_ts is the producer's None handling — ref :144-150).
-    * Replay-convergent like the sibling: both outputs keyed by batch_id,
-    * lake partitions by event time (published_ts; null lands in the
-    * default partition) so redelivery rewrites its own output.
+  /** News-side dead-letter lake write — the same R2 side output for the
+    * second record type (the reference logs skips in BOTH processors:
+    * processor_company_news.py:37-45): a line is dead-lettered when it
+    * fails `validNews`. The lake partitions by published_ts (null lands
+    * in the default partition).
     */
   def newsLakeWithDeadLetter(raw: DataFrame, lakePath: String,
       dlPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
+    lakeWithDeadLetter(raw, Schemas.newsWire, validNews, "published_ts",
+      lakePath, dlPath, checkpoint, trigger)(d => newsArticles(d)(d.sparkSession).toDF())
+
+  /** The dead-letter lake writer of both topics. foreachBatch because one
+    * streaming query cannot feed two sinks: per batch, each raw line is
+    * decoded against `wire` once (persisted); lines failing `valid` are
+    * written verbatim to `dlPath/batch_id=<id>` (a per-batch directory
+    * overwrite), and `typed` of the rest lands in the lake, hive-
+    * partitioned on `tsCol` plus batch_id (dynamic partition overwrite) —
+    * the same idempotence contract as the sibling partition sinks.
+    */
+  private def lakeWithDeadLetter(raw: DataFrame, wire: StructType, valid: Column,
+      tsCol: String, lakePath: String, dlPath: String, checkpoint: String,
+      trigger: Trigger)(typed: DataFrame => DataFrame): DataStreamWriter[Row] =
     raw.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        implicit val spark: SparkSession = batch.sparkSession
         val decoded = batch
           .select(col("value").cast(StringType).as("value"),
-            from_json(col("value").cast(StringType), Schemas.newsWire).as("a"))
-          .select(col("value"), col("a.*"))
+            from_json(col("value").cast(StringType), wire).as("wire"))
+          .select(col("value"), col("wire.*"))
           .persist()
         try {
-          decoded.filter(col("symbol").isNull)
+          decoded.filter(!valid)
             .select(col("value"))
             .write.mode("overwrite").text(s"$dlPath/batch_id=$batchId")
           StoreLifecycle.replacePartitions(
-            withHivePartitions(newsArticles(decoded.drop("value")).toDF(), "published_ts")
+            withHivePartitions(typed(decoded.drop("value")), tsCol)
               .withColumn("batch_id", lit(batchId)),
             lakePath, "year", "month", "day", "hour", "batch_id")
         } finally decoded.unpersist()

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * cache goes through [[SessionMemo]], every session is built through
   * [[GraftSession]], every store swap, marker and partition-replacing
   * write through `sources.StoreLifecycle`, and the BM25 and vector-probe
-  * arithmetic through their one core, so hand-rolled copies cannot grow
+  * arithmetic through their one core, the media codecs through
+  * Multimodal's one batched seam and the LSH candidate join through
+  * `TextDedup.bandedCandidates`, so hand-rolled copies cannot grow
   * back under `src/main/scala`; specs make their temp dirs through
   * `sources.Scratch`. Runs from the project root (sbt's forked test
   * working directory).
@@ -81,6 +83,32 @@ class SourceHygieneSpec extends AnyFunSuite {
     val sites = sources.flatMap { case (p, text) =>
       probe.r.findAllIn(text).map(_ => p.getFileName.toString) }
     assert(sites == Seq("VectorIndexStore.scala"), sites)
+  }
+
+  test("Multimodal's batch loop and each codec step are written once") {
+    val text = sources.collectFirst {
+      case (p, t) if p.getFileName.toString == "Multimodal.scala" => t
+    }.get
+    for ((step, call) <- Seq(
+        "batch loop" -> "mapPartitions",
+        "image read" -> "ImageIO.read(",
+        "frame reader" -> "getImageReaders",
+        // the PCM reader's container open (its transcode is the one other
+        // getAudioInputStream call, in the same function)
+        "PCM reader" -> "getAudioInputStream(new",
+        "pixel CRC" -> "crc.update(p >>> 24)",
+        "aHash" -> "grayGrid(img, 8, 8)",
+        "bilinear scale" -> "VALUE_INTERPOLATION_BILINEAR")) {
+      val n = java.util.regex.Pattern.quote(call).r.findAllIn(text).length
+      assert(n == 1, s"$step: `$call` appears $n times in Multimodal.scala")
+    }
+  }
+
+  test("the LSH skew guard is written only in TextDedup.bandedCandidates") {
+    val guard = java.util.regex.Pattern.quote("\"bn\") <=")
+    val sites = sources.flatMap { case (p, text) =>
+      guard.r.findAllIn(text).map(_ => p.getFileName.toString) }
+    assert(sites == Seq("TextDedup.scala"), sites)
   }
 
   test("specs make temp dirs only through Scratch.tempDir") {

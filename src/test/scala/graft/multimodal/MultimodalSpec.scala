@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
 class MultimodalSpec extends SparkSpec {
@@ -348,6 +350,59 @@ class MultimodalSpec extends SparkSpec {
     Multimodal.decodeFramesBatched(df, batchSize = 4,
       batchInit = () => batches.add(1)).count()
     assert(batches.value == 3L, s"expected 3 batch inits, got ${batches.value}")
+  }
+
+  test("real-codec seams: one batchInit per batch, a junk row skipped") {
+    import spark.implicits._
+    val png = encode(testImage(8, 8, seed = 3), "png")
+    val (wav, _) = testWav(80, 8000f, 1, seed = 3)
+    val gif = animatedGif(Seq(solidImage(4, 4, 0x112233)))
+    type Seam = (DataFrame, Int, () => Unit) => DataFrame
+    val seams: Seq[(String, Array[Byte], Seam)] = Seq(
+      ("decodeImagesBatched", png,
+        (df, n, init) => Multimodal.decodeImagesBatched(df, n, init).toDF()),
+      ("resizeImagesBatched", png,
+        (df, n, init) => Multimodal.resizeImagesBatched(df, 4, 4, n, init).toDF()),
+      ("perceptualHashImagesBatched", png,
+        (df, n, init) => Multimodal.perceptualHashImagesBatched(df, n, init).toDF()),
+      ("decodeAudioBatched", wav,
+        (df, n, init) => Multimodal.decodeAudioBatched(df, n, init).toDF()),
+      ("perceptualHashAudioBatched", wav,
+        (df, n, init) => Multimodal.perceptualHashAudioBatched(df, n, init).toDF()),
+      ("decodeFramesBatched", gif,
+        (df, n, init) => Multimodal.decodeFramesBatched(df, n, init).toDF()),
+      ("perceptualHashVideoBatched", gif,
+        (df, n, init) => Multimodal.perceptualHashVideoBatched(df, n, init).toDF()))
+    for ((name, payload, seam) <- seams) {
+      val df = (1L to 10L)
+        .map(i => (i, if (i == 5L) "junk payload".getBytes("UTF-8") else payload))
+        .toDF("media_id", "bytes").repartition(1)
+      val batches = spark.sparkContext.longAccumulator(s"${name}_batches")
+      val ids = seam(df, 4, () => batches.add(1))
+        .select("media_id").as[Long].collect().toSet
+      // 10 rows / batchSize 4 in one partition = 3 batches — per-batch
+      // amortization, the seam's contract (per-row init would read 10)
+      assert(batches.value == 3L, s"$name: expected 3 batch inits, got ${batches.value}")
+      assert(ids == (1L to 10L).toSet - 5L, s"$name: junk row skipped, others kept; got $ids")
+    }
+  }
+
+  test("truncated GIF: a cut inside the third frame keeps frames 0, 1") {
+    import spark.implicits._
+    val frames = Seq(0xcc2200, 0x0033bb, 0x22aa44).map(solidImage(9, 7, _))
+    val two = animatedGif(frames.take(2))
+    val three = animatedGif(frames)
+    // the sequence writer streams frame by frame: the 3-frame file is the
+    // 2-frame file up to its trailer byte, then frame 2 and a new trailer
+    val frame2At = two.length - 1
+    assert(three.take(frame2At).sameElements(two.take(frame2At)))
+    val cut = three.take(frame2At + (three.length - 1 - frame2At) / 2)
+    val df = Seq((1L, cut)).toDF("media_id", "bytes")
+    val decoded = Multimodal.decodeFramesBatched(df).collect().sortBy(_.frame_idx)
+    assert(decoded.map(_.frame_idx).toSeq == Seq(0, 1), "decoded prefix: frames 0 and 1")
+    assert(decoded(0).pixel_crc == crcOf(frames(0)) && decoded(1).pixel_crc == crcOf(frames(1)))
+    val clip = Multimodal.perceptualHashVideoBatched(df).collect()
+    assert(clip.map(_.n_frames).toSeq == Seq(2), "the clip hash covers the decoded prefix")
   }
 
   /** Rescale via the same bilinear path production uses. */
