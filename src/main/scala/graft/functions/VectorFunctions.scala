@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.{call_function, col}
 import org.apache.spark.sql.types._
 
 /** Double-precision dot product over two array<float> columns, accumulated
@@ -558,6 +558,13 @@ object VectorFunctions {
     register(spark)
     call_function("float_dot", a, b)
   }
+
+  /** Cosine of a scored pair's (a_emb, a_norm) and (b_emb, b_norm): the
+    * float dot over the two precomputed norms, the one cosine every
+    * vector query and store scores with.
+    */
+  def cosine(spark: SparkSession): Column =
+    floatDot(spark, col("a_emb"), col("b_emb")) / (col("a_norm") * col("b_norm"))
 
   /** All LSH bucket codes of an embedding column in one fused pass. */
   def multiPlaneCode(emb: Column, planes: Seq[Seq[Float]], planesPerTable: Int): Column =

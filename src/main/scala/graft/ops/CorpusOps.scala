@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.Tables
-import graft.functions.TextFunctions
+import graft.sources.TextIndexStore
 
 /** Corpus-analytics batch: the term-statistics, deterministic-sampling and
   * calendar operators a training-data pipeline runs corpus-wide, plus the
@@ -31,6 +31,21 @@ object CorpusOps {
   private def tokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
+
+  /** The query terms' rows of a tf relation (`keys`, term, tf) scored
+    * with BM25 against statistics computed in the same plan
+    * ([[TextIndexStore.docStats]], `corpusStats`, `termDf`): the
+    * vocabulary-sized df and the one-row corpus stats broadcast, so the
+    * corpus-sized shuffles are the tf and per-key aggregations only. Each
+    * row carries its key's `n_terms`.
+    */
+  private def bm25Scored(tf: DataFrame, qterms: Seq[String], keys: Seq[String]): DataFrame = {
+    val docs = TextIndexStore.docStats(tf, keys)
+    val tfq = tf.filter(col("term").isin(qterms: _*))
+    TextIndexStore.scored(tfq.join(broadcast(TextIndexStore.termDf(tfq)), Seq("term"))
+        .join(docs, keys).crossJoin(broadcast(TextIndexStore.corpusStats(docs))),
+      col("n_docs"), col("avgdl"), col("df"))
+  }
 
   private[graft] val tfMemo = new graft.SessionMemo[String, DataFrame](_.unpersist())
 
@@ -827,38 +842,20 @@ object CorpusOps {
               FROM events ORDER BY event_id""")),
 
     // BM25 ranked retrieval for a fixed term query. Same statistics
-    // pipeline as q_tfidf (tf persisted: it feeds dl, df AND the scoring
-    // join), but Robertson's saturation formula — with RATIO idf
+    // pipeline as q_tfidf (the shared tf feeds dl, df AND the scoring
+    // join; bm25Scored), but Robertson's saturation formula — with RATIO idf
     // ((N-df+0.5)/(df+0.5), no log) so every arithmetic step is a single
     // IEEE op both engines evaluate identically (libm log is not
     // bit-portable; see the q_tfidf note). The per-document total is a
     // fixed-order expression sum over the pivoted per-term scores, NOT a
     // float SUM() aggregate, because double addition is not associative
     // and aggregate order differs between engines. df/stats broadcast;
-    // the corpus-sized shuffles are the tf and dl aggregations only.
+    // the corpus-sized shuffles are the tf and dl aggregations only. The
+    // scoring, pivot and top-k are TextIndexStore's, the stored paths' own.
     Q("q_bm25",
       (s, dir) => {
-        val tf = sharedTf(s, dir)
-        val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-        val stats = dl.agg(count(lit(1)).as("n_docs"),
-          (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
-        val tfq = tf.filter(col("term").isin("hash", "join", "vector"))
-        val dfq = tfq.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        val scored = tfq.join(broadcast(dfq), Seq("term"))
-          .join(dl, Seq("doc_id"))
-          .crossJoin(broadcast(stats))
-          .withColumn("score", TextFunctions.bm25Term(col("tf"), col("dl"),
-            col("avgdl"), col("n_docs"), col("df")))
-        scored.groupBy(col("doc_id"))
-          .agg(max(when(col("term") === "hash", col("score"))).as("s_hash"),
-            max(when(col("term") === "join", col("score"))).as("s_join"),
-            max(when(col("term") === "vector", col("score"))).as("s_vector"))
-          .withColumn("bm25",
-            coalesce(col("s_hash"), lit(0.0)) + coalesce(col("s_join"), lit(0.0))
-              + coalesce(col("s_vector"), lit(0.0)))
-          .select(col("doc_id"), col("bm25"))
-          .orderBy(col("bm25").desc, col("doc_id"))
-          .limit(10)
+        val qterms = Seq("hash", "join", "vector")
+        TextIndexStore.topBm25(bm25Scored(sharedTf(s, dir), qterms, Seq("doc_id")), qterms, 10)
       },
       Some(bm25OracleSql)),
 
@@ -904,19 +901,6 @@ object CorpusOps {
       },
       Some(bm25OracleSql)),
 
-    // Hybrid retrieval via reciprocal-rank fusion: two retrievers score the
-    // same query — BM25 (saturated term weighting, the q_bm25 arithmetic)
-    // and token-set Jaccard (set overlap, no term weighting) — and their
-    // top-50 RANK lists fuse as rrf = Σ 1e9 div (60 + rank). Fusing ranks,
-    // not scores, is the point of RRF: the two scoring scales never need
-    // calibration, and the arithmetic is pure integer division — bitwise
-    // identical across engines where any score-blend would float-drift.
-    // Scale shape: both retrievers aggregate the SAME persisted tf relation
-    // (one tokenize+count pass over the corpus); candidate lists are df-
-    // bounded (docs containing ≥1 query term), each cut to 50 by
-    // TakeOrderedAndProject before the single-partition rank window ever
-    // sees them, so no global sort touches the corpus; the fusion join is
-    // 50×50 rows.
     // Hard-negative mining (contrastive-training pairs): for each probe
     // document, the top-5 most lexically similar documents that are NOT
     // near-duplicates (token-set jaccard in (0, 0.5)) — the "similar but
@@ -986,59 +970,41 @@ object CorpusOps {
               FROM ranked WHERE rank <= 5
               ORDER BY probe_id, rank""")),
 
+    // Hybrid retrieval via reciprocal-rank fusion: two retrievers score the
+    // same query — BM25 (saturated term weighting, the q_bm25 arithmetic)
+    // and token-set Jaccard (set overlap, no term weighting) — and their
+    // top-50 RANK lists fuse as rrf = Σ 1e9 div (60 + rank). Fusing ranks,
+    // not scores, is the point of RRF: the two scoring scales never need
+    // calibration, and the arithmetic is pure integer division — bitwise
+    // identical across engines where any score-blend would float-drift.
+    // Scale shape: both retrievers aggregate the SAME persisted tf
+    // relation (one tokenize+count pass over the corpus), each in its own
+    // branch: with no exchange under the per-doc aggregate (the cached tf
+    // is one partition at sf0.1) there is no shuffle for the two lists to
+    // reuse, so the stored path's one aggregate for both would run twice
+    // here. Candidate lists are df-bounded (docs containing ≥1 query
+    // term); the fusion is TextIndexStore.topRrf, the stored path's own.
     Q("q_hybrid_rrf",
       (s, dir) => {
         val qterms = Seq("hash", "join", "vector")
         val tf = sharedTf(s, dir)
-        // retriever 1: BM25 over the query terms (k1=1.2, b=0.75, ratio idf)
-        val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-        val stats = dl.agg(count(lit(1)).as("n_docs"),
-          (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
-        val tfq = tf.filter(col("term").isin(qterms: _*))
-        val dfq = tfq.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        val scored = tfq.join(broadcast(dfq), Seq("term"))
-          .join(dl, Seq("doc_id"))
-          .crossJoin(broadcast(stats))
-          .withColumn("score", TextFunctions.bm25Term(col("tf"), col("dl"),
-            col("avgdl"), col("n_docs"), col("df")))
-        val bm = scored.groupBy(col("doc_id"))
-          .agg((coalesce(max(when(col("term") === "hash", col("score"))), lit(0.0))
-            + coalesce(max(when(col("term") === "join", col("score"))), lit(0.0))
-            + coalesce(max(when(col("term") === "vector", col("score"))), lit(0.0))).as("bm25"))
-        // rank windows run AFTER limit(50): TakeOrderedAndProject bounds
-        // the relation to <= 50 rows before the single-partition window
-        // ever sees it — the global sort never touches the corpus
-        val rb = bm.orderBy(col("bm25").desc, col("doc_id")).limit(50)
-          .withColumn("r", row_number().over(
-            Window.orderBy(col("bm25").desc, col("doc_id"))))
-        // retriever 2: Jaccard(query set, doc's distinct-term set); the one
-        // double op is a single IEEE division (bit-identical cross-engine)
-        val nd = tf.groupBy(col("doc_id")).agg(count(lit(1)).as("n_terms"))
-        val iq = tfq.groupBy(col("doc_id")).agg(count(lit(1)).as("inter"))
-        val jac = iq.join(nd, Seq("doc_id"))
-          .withColumn("jac",
-            col("inter").cast(DoubleType) / (col("n_terms") + lit(qterms.size) - col("inter")))
-        val rj = jac.orderBy(col("jac").desc, col("doc_id")).limit(50)
-          .withColumn("r", row_number().over(
-            Window.orderBy(col("jac").desc, col("doc_id"))))
-        // fusion: full outer on the two 50-row lists, integer-div RRF
-        val out = rb.select(col("doc_id"), col("r").as("rb"))
-          .join(rj.select(col("doc_id"), col("r").as("rj")), Seq("doc_id"), "full_outer")
-          .selectExpr("doc_id",
-            "CAST(coalesce(1000000000 div (60 + rb), 0) + coalesce(1000000000 div (60 + rj), 0) AS LONG) AS rrf")
-          .orderBy(col("rrf").desc, col("doc_id"))
-          .limit(10)
-        out
+        val inter = tf.filter(col("term").isin(qterms: _*))
+          .groupBy(col("doc_id")).agg(count(lit(1)).as("inter"))
+        TextIndexStore.topRrf(
+          TextIndexStore.perKeyBm25(bm25Scored(tf, qterms, Seq("doc_id")), qterms),
+          inter.join(TextIndexStore.docStats(tf, Seq("doc_id")), Seq("doc_id"))
+            .withColumn("jac", TextIndexStore.jaccard(qterms.size)),
+          10)
       },
       Some(hybridRrfOracleSql)),
 
     // Hybrid RRF over the STORED index (sources.TextIndexStore) — both
-    // retrievers are declared over one per-doc aggregate of the
-    // partition-pruned postings scan (the Jaccard denominator n_terms
-    // rides on each posting); column pruning splits it per retriever, so
-    // it runs as two pruned postings scans. Zero corpus access (pinned by
-    // RetrievalIndexSpec). Shares q_hybrid_rrf's oracle verbatim — the
-    // oracle proves the stored path returns the identical fused ranking.
+    // retrievers read one per-doc aggregate of the partition-pruned
+    // postings scan (the Jaccard denominator n_terms rides on each
+    // posting), run once through one reused shuffle: two Spark jobs per
+    // call. Zero corpus access (pinned by RetrievalIndexSpec). Shares
+    // q_hybrid_rrf's oracle verbatim — the oracle proves the stored path
+    // returns the identical fused ranking.
     Q("q_hybrid_rrf_stored",
       (s, dir) => {
         val idx = graft.sources.TextIndexStore.ensure(s, dir)
@@ -1504,27 +1470,9 @@ object CorpusOps {
       .groupBy(col("doc_id"), col("cidx"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .persist()
-    val dl = tf.groupBy(col("doc_id"), col("cidx"))
-      .agg(sum(col("tf")).as("dl"))
-    val stats = dl.agg(count(lit(1)).as("n_chunks"),
-      (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
-    val tfq = tf.filter(col("term").isin("sort", "stream", "data"))
-    val dfq = tfq.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val scored = tfq.join(broadcast(dfq), Seq("term"))
-      .join(dl, Seq("doc_id", "cidx"))
-      .crossJoin(broadcast(stats))
-      .withColumn("score", TextFunctions.bm25Term(col("tf"), col("dl"),
-        col("avgdl"), col("n_chunks"), col("df")))
-    val out = scored.groupBy(col("doc_id"), col("cidx"))
-      .agg(max(when(col("term") === "sort", col("score"))).as("s1"),
-        max(when(col("term") === "stream", col("score"))).as("s2"),
-        max(when(col("term") === "data", col("score"))).as("s3"))
-      .withColumn("bm25",
-        coalesce(col("s1"), lit(0.0)) + coalesce(col("s2"), lit(0.0))
-          + coalesce(col("s3"), lit(0.0)))
-      .select(col("doc_id"), col("cidx"), col("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id"), col("cidx"))
-      .limit(10)
+    val qterms = Seq("sort", "stream", "data")
+    val keys = Seq("doc_id", "cidx")
+    val out = TextIndexStore.topBm25(bm25Scored(tf, qterms, keys), qterms, 10, keys)
     (out, tf)
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.Tables
 import graft.functions.VectorFunctions
+import graft.sources.VectorIndexStore
 
 /** Similarity search over the `embeddings` table (ArrayType(FloatType),
   * 64-dim): exact cosine near-dup pairs and brute-force top-k as the
@@ -28,9 +29,6 @@ object Similarity {
     emb.withColumn("norm",
       sqrt(VectorFunctions.floatDot(s, col("embedding"), col("embedding"))))
 
-  private def dot(s: SparkSession) =
-    VectorFunctions.floatDot(s, col("a_emb"), col("b_emb"))
-
   /** Exact all-pairs cosine >= minCos. O(n^2) — the correctness baseline;
     * at scale lshTopK below bounds the candidate set instead.
     */
@@ -39,7 +37,7 @@ object Similarity {
     val a = e.select(col("vec_id").as("a_id"), col("embedding").as("a_emb"), col("norm").as("a_norm"))
     val b = e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"), col("norm").as("b_norm"))
     a.crossJoin(b).filter(col("a_id") < col("b_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(s))
       .filter(col("cosine") >= minCos)
       .select(col("a_id"), col("b_id"), col("cosine"))
   }
@@ -54,12 +52,8 @@ object Similarity {
     val q = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("a_emb"), col("norm").as("a_norm"))
     val c = e.select(col("vec_id").as("n_id"), col("embedding").as("b_emb"), col("norm").as("b_norm"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    broadcast(q).crossJoin(c).filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"), col("cosine"))
+    VectorIndexStore.topK(broadcast(q).crossJoin(c).filter(col("q_id") =!= col("n_id"))
+      .withColumn("cosine", VectorFunctions.cosine(s)), k)
   }
 
   /** SEMANTIC decontamination — the embedding-space complement of the
@@ -97,15 +91,8 @@ object Similarity {
     val tr = e.filter(col("vec_id") % 97 =!= 0)
       .select(col("vec_id"), col("embedding").as("b_emb"),
         col("norm").as("b_norm"))
-    tr.crossJoin(broadcast(ev))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("cosine"), (-col("eval_id")).as("neg_eval")))
-        .as("best"))
-      .filter(col("best.cosine") >= minCos)
-      .select(col("vec_id"), (-col("best.neg_eval")).as("best_eval_id"),
-        col("best.cosine").as("best_cosine"))
-      .orderBy(col("vec_id"))
+    VectorIndexStore.bestEval(
+      tr.crossJoin(broadcast(ev)).withColumn("cosine", VectorFunctions.cosine(s)), minCos)
   }
 
   /** SEMANTIC-DECONTAMINATION PROBE-DEPTH SWEEP — the calibration member
@@ -142,7 +129,7 @@ object Similarity {
     // one (eval × maxP exploded embedding rows) shuffle-side — a forced
     // broadcast here contradicted the fat-eval regime this sweep calibrates
     val cand = ev.join(tr, Seq("cell"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(s))
       .select(col("vec_id"), col("eval_id"),
         (col("pos") + 1).as("first_probe"), col("cosine"))
       .persist() // every probe depth filters this one scored relation
@@ -268,12 +255,7 @@ object Similarity {
       .filter(col("q_id") =!= col("n_id"))
       .select("q_id", "a_emb", "a_norm", "n_id", "b_emb", "b_norm")
       .dropDuplicates("q_id", "n_id")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    cand
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"), col("cosine"))
+    VectorIndexStore.topK(cand.withColumn("cosine", VectorFunctions.cosine(s)), k)
   }
 
   /** Embedding near-dup pairs via LSH buckets — the scale path for
@@ -312,7 +294,7 @@ object Similarity {
         col("norm").as("a_norm"))), Seq("a_id"))
       .join(broadcast(e.select(col("vec_id").as("b_id"), col("embedding").as("b_emb"),
         col("norm").as("b_norm"))), Seq("b_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(s))
       .filter(col("cosine") >= minCos)
       .select(col("a_id"), col("b_id"), col("cosine"))
   }
@@ -414,13 +396,9 @@ object Similarity {
     val queries = nearestCells(s, e.filter(col("vec_id") < nQueries), centroids, nprobe)
       .select(col("vec_id").as("q_id"), col("embedding").as("a_emb"),
         col("norm").as("a_norm"), explode(col("cells")).as("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    broadcast(queries).join(corpus, Seq("cell"))
+    VectorIndexStore.topK(broadcast(queries).join(corpus, Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"), col("cosine"))
+      .withColumn("cosine", VectorFunctions.cosine(s)), k)
   }
 
   /** IVF CALIBRATION SWEEP (the vector sibling of q_lsh_geometry): per
@@ -457,7 +435,7 @@ object Similarity {
     // values on every duplicate route, so min() is a deterministic pick
     val cand = broadcast(queries).join(corpus, Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(s))
       .groupBy(col("q_id"), col("n_id"))
       .agg((min(col("pos")) + 1).as("first_probe"),
         min(col("cosine")).as("cosine"))
@@ -465,11 +443,8 @@ object Similarity {
     val truth = bruteForceTopK(s, emb, nQueries, k)
       .select(col("q_id"), col("n_id")).persist()
     val rows = probes.map { p =>
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("cosine").desc, col("n_id"))
       val sub = cand.filter(col("first_probe") <= p)
-      val topk = sub.withColumn("rank", row_number().over(wp))
-        .filter(col("rank") <= k)
+      val topk = VectorIndexStore.topK(sub, k)
         .select(col("q_id"), col("n_id"), lit(1).as("f"))
       val counts = truth.join(topk, Seq("q_id", "n_id"), "left")
         .agg(count(lit(1)).as("n_true"),
@@ -553,7 +528,7 @@ object Similarity {
     val b = e.select(col("cell"), col("vec_id").as("b_id"),
       col("embedding").as("b_emb"), col("norm").as("b_norm"))
     val dropped = a.join(b, Seq("cell")).filter(col("a_id") < col("b_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(s))
       .filter(col("cosine") >= minCos)
       .select(col("b_id").as("vec_id")).distinct()
     val out = asg.join(dropped, Seq("vec_id"), "left_anti")
@@ -583,7 +558,7 @@ object Similarity {
     val b = e.select(col("cell"), col("vec_id").as("b_id"),
       col("embedding").as("b_emb"), col("norm").as("b_norm"))
     val pairs = a.join(b, Seq("cell")).filter(col("a_id") < col("b_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(s))
       .select(col("b_id"), col("cosine"))
       .persist() // every threshold filters this one scored relation
     pairs.count()
@@ -656,9 +631,10 @@ object Similarity {
     * the corpus — precision of the final k is exact-cosine.
     */
   /** Everything through the ADC approx scores — shared by [[ivfPqTopK]]
-    * and [[ivfPqRerankSweep]]: (e withNorm, q probe relation, approx
-    * (q_id, n_id, approx_dot)). The corpus side carries only
-    * (cell, codes); embeddings re-enter only at the exact re-rank.
+    * and [[ivfPqRerankSweep]]: (the re-rank vectors (n_id, b_emb,
+    * b_norm), q probe relation, approx (q_id, n_id, approx_dot)). The
+    * corpus side carries only (cell, codes); embeddings re-enter only at
+    * the exact re-rank.
     */
   private def pqApproxStage(s: SparkSession, embRaw: DataFrame,
       nQueries: Int, nlist: Int, nprobe: Int, nSub: Int, nCent: Int)
@@ -681,45 +657,19 @@ object Similarity {
     val cbDf = cb.zipWithIndex.flatMap { case (centsSub, sub) =>
       centsSub.zipWithIndex.map { case (v, cid) => (sub, cid, v) }
     }.toDF("sub", "cid", "cv")
-    val lut = q.select(col("q_id"), col("q_emb")).crossJoin(cbDf)
-      .withColumn("pdot",
-        VectorFunctions.floatDot(s,
-          slice(col("q_emb"), col("sub") * subDim + 1, lit(subDim)), col("cv"))
-          .cast(DecimalType(24, 9)))
-      .select(col("q_id"), col("sub"), col("cid"), col("pdot"))
-    val qcells = q.select(col("q_id"), explode(col("cells")).as("cell"))
-    val cand = broadcast(qcells).join(corpus, Seq("cell"))
-      .select(col("q_id"), col("n_id"),
-        posexplode(col("codes")).as(Seq("sub", "cid")))
-    val approx = cand.join(broadcast(lut), Seq("q_id", "sub", "cid"))
-      .groupBy(col("q_id"), col("n_id"))
-      .agg(sum(col("pdot")).as("approx_dot"))
-      .filter(col("q_id") =!= col("n_id"))
-    (e, q, approx)
+    (e.select(col("vec_id").as("n_id"), col("embedding").as("b_emb"), col("norm").as("b_norm")),
+      q, VectorIndexStore.pqApprox(s, q, cbDf, subDim, corpus, col("n_id")))
   }
 
   def ivfPqTopK(s: SparkSession, embRaw: DataFrame, nQueries: Int, k: Int,
       nlist: Int = 16, nprobe: Int = 4, nSub: Int = 8, nCent: Int = 16,
       rerank: Int = 4): DataFrame = {
-    val (e, q, approx) =
+    val (vectors, q, approx) =
       pqApproxStage(s, embRaw, nQueries, nlist, nprobe, nSub, nCent)
-    val wa = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_dot").desc, col("n_id"))
-    val pool = approx.withColumn("arn", row_number().over(wa))
-      .filter(col("arn") <= k * rerank)
-      .select(col("q_id"), col("n_id"))
     // exact re-rank: broadcast the small pool; the corpus streams once
-    val exact = broadcast(pool)
-      .join(e.select(col("vec_id").as("n_id"), col("embedding").as("b_emb"),
-        col("norm").as("b_norm")), Seq("n_id"))
-      .join(broadcast(q.select(col("q_id"), col("q_emb").as("a_emb"),
-        col("q_norm").as("a_norm"))), Seq("q_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"),
-        col("n_id"), col("cosine"))
+    VectorIndexStore.topK(VectorIndexStore.exactRerank(s,
+      VectorIndexStore.pqPool(approx, k * rerank).select(col("q_id"), col("n_id")),
+      q, vectors), k)
   }
 
   /** IVF-PQ RERANK-FACTOR SWEEP — the compressed-index member of the
@@ -735,30 +685,19 @@ object Similarity {
       k: Int, reranks: Seq[Int] = Seq(1, 2, 4), nlist: Int = 16,
       nprobe: Int = 4, nSub: Int = 8, nCent: Int = 16): DataFrame = {
     val maxR = reranks.max
-    val (e, q, approx) =
+    val (vectors, q, approx) =
       pqApproxStage(s, embRaw, nQueries, nlist, nprobe, nSub, nCent)
-    val wa = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_dot").desc, col("n_id"))
-    val poolMax = approx.withColumn("arn", row_number().over(wa))
-      .filter(col("arn") <= k * maxR)
-      .select(col("q_id"), col("n_id"), col("arn"))
-    val ex = broadcast(poolMax)
-      .join(e.select(col("vec_id").as("n_id"), col("embedding").as("b_emb"),
-        col("norm").as("b_norm")), Seq("n_id"))
-      .join(broadcast(q.select(col("q_id"), col("q_emb").as("a_emb"),
-        col("q_norm").as("a_norm"))), Seq("q_id"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+    val ex = VectorIndexStore.exactRerank(s,
+        VectorIndexStore.pqPool(approx, k * maxR).select(col("q_id"), col("n_id"), col("arn")),
+        q, vectors)
       .select(col("q_id"), col("n_id"), col("arn"), col("cosine"))
       .persist() // every rerank factor filters this one scored pool
     val truth = bruteForceTopK(s, embRaw.filter(col("embedding").isNotNull),
         nQueries, k)
       .select(col("q_id"), col("n_id")).persist()
     val rows = reranks.map { r =>
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("cosine").desc, col("n_id"))
       val sub = ex.filter(col("arn") <= k * r)
-      val topk = sub.withColumn("rnk", row_number().over(wp))
-        .filter(col("rnk") <= k)
+      val topk = VectorIndexStore.topK(sub, k)
         .select(col("q_id"), col("n_id"), lit(1).as("f"))
       truth.join(topk, Seq("q_id", "n_id"), "left")
         .agg(count(lit(1)).as("n_true"),
@@ -1154,7 +1093,7 @@ object Similarity {
       .select(col("vec_id").as("tgt_id"), col("embedding").as("b_emb"),
         col("norm").as("b_norm"))
     val scored = src.crossJoin(tgt)
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(s))
       .select(col("src_id"), col("tgt_id"), col("cosine"))
     mineFromScored(scored, k, minMargin)
   }
@@ -1220,7 +1159,7 @@ object Similarity {
       .select(col("vec_id").as("tgt_id"), col("embedding").as("b_emb"),
         col("norm").as("b_norm"), col("cells")(0).as("cell"))
     val scored = src.join(tgt, Seq("cell"))
-      .withColumn("cosine", dot(s) / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(s))
       .select(col("src_id"), col("tgt_id"), col("cosine"))
     mineFromScored(scored, k, minMargin)
   }
@@ -1370,7 +1309,7 @@ object Similarity {
           .select(expr("vec_id div 2").as("pair_id"),
             col("embedding").as("b_emb"), col("norm").as("b_norm"))
         img.join(cap, Seq("pair_id"))
-          .withColumn("clip_score", dot(s) / (col("a_norm") * col("b_norm")))
+          .withColumn("clip_score", VectorFunctions.cosine(s))
           .select(col("pair_id"), col("clip_score"),
             (col("clip_score") >= 0.1).as("keep"))
           .orderBy(col("pair_id"))

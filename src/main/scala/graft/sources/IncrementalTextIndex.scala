@@ -75,13 +75,13 @@ object IncrementalTextIndex {
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .persist()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    val dl = TextIndexStore.docStats(tf, Seq("doc_id")).drop("n_terms")
     val postings = tf.join(dl, Seq("doc_id"))
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(Buckets.toLong)))
       .withColumn("__batch_id", lit(batchId))
       .transform(graft.Par.byKey(col("bucket")))
       .sortWithinPartitions(col("term"), col("doc_id"))
-    val termdelta = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val termdelta = TextIndexStore.termDf(tf)
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(Buckets.toLong)))
       .withColumn("__batch_id", lit(batchId))
       // keyed repartition like the postings write below: without it AQE

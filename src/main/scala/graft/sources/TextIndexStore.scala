@@ -117,15 +117,12 @@ object TextIndexStore {
     val tf = graft.ops.CorpusOps.sharedTf(spark, sfDir)
     // per doc: dl (BM25 length) and n_terms (distinct terms — the Jaccard
     // retriever's denominator), both denormalized onto every posting
-    val perDoc = tf.groupBy(col("doc_id"))
-      .agg(sum(col("tf")).as("dl"), count(lit(1)).as("n_terms"))
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val stats = perDoc.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
+    val perDoc = docStats(tf, Seq("doc_id"))
+    val stats = corpusStats(perDoc)
 
     val postings = tf
       .join(perDoc, Seq("doc_id"))
-      .join(df, Seq("term"))
+      .join(termDf(tf), Seq("term"))
       .select("term", "doc_id", "tf", "dl", "n_terms", "df")
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(Buckets.toLong)))
       // sort within each bucket file by term so parquet row-group min/max
@@ -154,6 +151,25 @@ object TextIndexStore {
       build(spark, sfDir, indexDir))
   }
 
+  /** Per-key document statistics of a tf relation (`keys`, term, tf):
+    * `dl`, the BM25 length, and `n_terms`, the distinct-term count (the
+    * Jaccard retriever's denominator), from one aggregate. `keys` is
+    * `doc_id`, or `doc_id, cidx` for passages.
+    */
+  private[graft] def docStats(tf: DataFrame, keys: Seq[String]): DataFrame =
+    tf.groupBy(keys.map(col): _*).agg(sum(col("tf")).as("dl"), count(lit(1)).as("n_terms"))
+
+  /** The one-row corpus statistics of [[docStats]] rows: n_docs, and
+    * avgdl as one double division of the integer length sum.
+    */
+  private[graft] def corpusStats(docs: DataFrame): DataFrame =
+    docs.agg(count(lit(1)).as("n_docs"),
+      (sum(col("dl")).cast(DoubleType) / count(lit(1))).as("avgdl"))
+
+  /** Document frequency per term of a tf relation. */
+  private[graft] def termDf(tf: DataFrame): DataFrame =
+    tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+
   /** The query terms' rows of a postings table (stored, or a twin's
     * layers): bucket is pruned at planning, term by row group.
     */
@@ -162,14 +178,22 @@ object TextIndexStore {
     postings.filter(col("bucket").isin(qbuckets: _*) && col("term").isin(qterms: _*))
   }
 
-  /** The query terms' postings, each with its BM25 term score (the
-    * `q_bm25` arithmetic): the corpus (n_docs, avgdl) as literals, `df`
-    * the column that gives each posting's term its document frequency.
+  /** Each (tf, dl) row's BM25 term score, the corpus stats and the row's
+    * term df given as Columns: literals on the stored paths, broadcast
+    * columns in the in-query builders.
+    */
+  private[graft] def scored(rows: DataFrame, nDocs: Column, avgdl: Column,
+      df: Column): DataFrame =
+    rows.withColumn("score",
+      graft.functions.TextFunctions.bm25Term(col("tf"), col("dl"), avgdl, nDocs, df))
+
+  /** The query terms' postings, each scored with the corpus (n_docs,
+    * avgdl) as literals; `df` the column that gives each posting's term
+    * its document frequency.
     */
   private[sources] def scoredPostings(postings: DataFrame, qterms: Seq[String],
       stats: (Long, Double), df: Column): DataFrame =
-    ofTerms(postings, qterms).withColumn("score", graft.functions.TextFunctions.bm25Term(
-      col("tf"), col("dl"), lit(stats._2), lit(stats._1), df))
+    scored(ofTerms(postings, qterms), lit(stats._1), lit(stats._2), df)
 
   /** The stored index's scored postings: the stats from the `_STATS`
     * sidecar, df from the postings themselves.
@@ -179,19 +203,25 @@ object TextIndexStore {
     scoredPostings(graft.Tables.read(spark, s"$indexDir/postings"), qterms,
       readStats(spark, indexDir), col("df"))
 
-  /** Per-doc BM25 as a fixed-order expression sum over pivoted per-term
-    * scores (NOT a float SUM aggregate): double addition is not
-    * associative and aggregate order differs between engines — same
-    * convention as q_bm25.
+  /** Per-key BM25 as a fixed-order expression sum over pivoted per-term
+    * scores, in query-term order (NOT a float SUM aggregate): double
+    * addition is not associative and aggregate order differs between
+    * engines.
     */
   private def bm25Sum(qterms: Seq[String]): Column =
     qterms.map(tm => coalesce(max(when(col("term") === tm, col("score"))), lit(0.0)))
       .reduceLeft(_ + _)
 
-  /** The top `k` documents by BM25 of scored postings. */
-  private[sources] def topBm25(scored: DataFrame, qterms: Seq[String], k: Int): DataFrame =
-    scored.groupBy(col("doc_id")).agg(bm25Sum(qterms).as("bm25"))
-      .orderBy(col("bm25").desc, col("doc_id"))
+  /** Per-key BM25 of scored rows. */
+  private[graft] def perKeyBm25(scored: DataFrame, qterms: Seq[String],
+      keys: Seq[String] = Seq("doc_id")): DataFrame =
+    scored.groupBy(keys.map(col): _*).agg(bm25Sum(qterms).as("bm25"))
+
+  /** The top `k` keys by BM25 of scored rows, ties to the lower keys. */
+  private[graft] def topBm25(scored: DataFrame, qterms: Seq[String], k: Int,
+      keys: Seq[String] = Seq("doc_id")): DataFrame =
+    perKeyBm25(scored, qterms, keys)
+      .orderBy(col("bm25").desc +: keys.map(col): _*)
       .limit(k)
 
   /** BM25 over the STORED index: one pruned postings scan and one
@@ -202,41 +232,52 @@ object TextIndexStore {
       k: Int = 10): DataFrame =
     topBm25(storedPostings(spark, indexDir, qterms), qterms, k)
 
-  /** Hybrid BM25 + token-set-Jaccard retrieval fused by reciprocal-rank
+  /** Token-set Jaccard of the query set (`nq` terms) and a doc's
+    * distinct-term set, from the doc's `inter` query terms and its
+    * `n_terms`: one IEEE division, bit-identical across engines.
+    */
+  private[graft] def jaccard(nq: Int): Column =
+    col("inter").cast(DoubleType) / (col("n_terms") + lit(nq) - col("inter"))
+
+  /** Hybrid BM25 + token-set-Jaccard retrieval fused by reciprocal rank
     * (the q_hybrid_rrf semantics) over the STORED index: one per-doc
-    * aggregate is DECLARED for both retrievers' inputs — bm25, the Jaccard
-    * intersection (the doc's posting count over the query terms) and
-    * n_terms (carried on each posting) — so the query touches
-    * |query buckets|/64 of the postings and the corpus never. Column
-    * pruning splits that aggregate per retriever (a bm25 branch and a
-    * count/max(n_terms) branch), so it EXECUTES as two pruned postings
-    * scans, each with its own partial aggregate and shuffle, not one
-    * reused shuffle.
+    * aggregate of the query terms' postings (n_terms rides on each
+    * posting) feeds both rank lists, so the query touches |query
+    * buckets|/64 of the postings and the corpus never.
     */
   def hybridRrf(spark: SparkSession, indexDir: String, qterms: Seq[String],
       k: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val perDoc = storedPostings(spark, indexDir, qterms)
-      .groupBy(col("doc_id"))
+    val perDoc = storedPostings(spark, indexDir, qterms).groupBy(col("doc_id"))
       .agg(bm25Sum(qterms).as("bm25"), count(lit(1)).as("inter"),
         max(col("n_terms")).as("n_terms"))
-    // rank windows run AFTER limit(50): TakeOrderedAndProject bounds the
-    // relation to <= 50 rows before the single-partition window ever
-    // sees it — the global sort never touches the corpus
-    def top50(scored: DataFrame, score: String, rank: String) =
-      scored.orderBy(col(score).desc, col("doc_id")).limit(50)
+      .withColumn("jac", jaccard(qterms.size))
+    topRrf(perDoc, perDoc, k)
+  }
+
+  /** The top `k` docs by reciprocal-rank fusion of two retrievers' per-doc
+    * scores, `bm` (doc_id, bm25) and `jac` (doc_id, jac): each is cut to
+    * its top 50, ties to the lower doc_id, and the two rank lists fuse as
+    * rrf = Σ 1e9 div (60 + rank), integer division, bit-identical across
+    * engines. The rank windows run AFTER limit(50): TakeOrderedAndProject
+    * bounds each list to 50 rows before the single-partition window sees
+    * it. When one relation carries both scores (the stored path's per-doc
+    * aggregate), each list orders by the other retriever's score last:
+    * doc_id is unique, so that key never decides the order, but with it
+    * both lists need the whole aggregate, and the plan runs it once
+    * through one reused shuffle instead of letting column pruning split
+    * it into two scans and two shuffles.
+    */
+  private[graft] def topRrf(bm: DataFrame, jac: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    def top50(rel: DataFrame, score: String, other: String, rank: String) = {
+      val last = if (rel.columns.contains(other)) Seq(col(other).desc) else Nil
+      rel.orderBy(Seq(col(score).desc, col("doc_id")) ++ last: _*).limit(50)
         .select(col("doc_id"), row_number().over(
           Window.orderBy(col(score).desc, col("doc_id"))).as(rank))
-    // retriever 1: BM25; retriever 2: Jaccard(query set, doc's
-    // distinct-term set)
-    val rb = top50(perDoc, "bm25", "rb")
-    val rj = top50(perDoc.withColumn("jac",
-        col("inter").cast(DoubleType) / (col("n_terms") + lit(qterms.size) - col("inter"))),
-      "jac", "rj")
-    // fusion: integer-division RRF on the two 50-row rank lists
-    rb.join(rj, Seq("doc_id"), "full_outer")
-      .selectExpr("doc_id",
-        "CAST(coalesce(1000000000 div (60 + rb), 0) + coalesce(1000000000 div (60 + rj), 0) AS LONG) AS rrf")
+    }
+    def rrf(rank: String) = s"coalesce(1000000000 div (60 + $rank), 0)"
+    top50(bm, "bm25", "jac", "rb").join(top50(jac, "jac", "bm25", "rj"), Seq("doc_id"), "full_outer")
+      .selectExpr("doc_id", s"CAST(${rrf("rb")} + ${rrf("rj")} AS LONG) AS rrf")
       .orderBy(col("rrf").desc, col("doc_id"))
       .limit(k)
   }

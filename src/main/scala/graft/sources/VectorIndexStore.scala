@@ -176,10 +176,32 @@ object VectorIndexStore {
       .collect().map(r => (r.getInt(0).toLong, r.getLong(1)))
     val probeSide = if (cellCounts.map(_._2).sum <= broadcastRows) broadcast(q) else q
     probeSide.join(candidates(cellCounts.map(_._1).sorted), Seq("cell"))
-      .withColumn("cosine",
-        VectorFunctions.floatDot(spark, col("a_emb"), col("b_emb"))
-          / (col("a_norm") * col("b_norm")))
+      .withColumn("cosine", VectorFunctions.cosine(spark))
   }
+
+  /** The `k` best-scored candidates of each query: scored (q_id, n_id,
+    * cosine) rows ranked by cosine, ties to the lower n_id, as (q_id,
+    * rank bigint, n_id, cosine) — the tail of every vector top-k, stored
+    * and in-query.
+    */
+  private[graft] def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank").cast("bigint").as("rank"), col("n_id"), col("cosine"))
+
+  /** Each scored train vector's best eval match at or above `minCos`:
+    * the argmax is an AGGREGATE (`max(struct(cosine, -eval_id))`, ties to
+    * the lower eval id), so partial aggregation shuffles at most one row
+    * per train vector per partition, never the train x eval expansion.
+    */
+  private[graft] def bestEval(scored: DataFrame, minCos: Double): DataFrame =
+    scored.groupBy(col("vec_id"))
+      .agg(max(struct(col("cosine"), (-col("eval_id")).as("neg_eval"))).as("best"))
+      .filter(col("best.cosine") >= minCos)
+      .select(col("vec_id"), (-col("best.neg_eval")).as("best_eval_id"),
+        col("best.cosine").as("best_cosine"))
+      .orderBy(col("vec_id"))
 
   /** IVF top-k over the STORED index: probe each query's `nprobe` nearest
     * cells, scan ONLY those cells' inverted lists (hive partition pruning
@@ -197,20 +219,14 @@ object VectorIndexStore {
     * they are stored (the batch layout or an incremental twin's layers).
     */
   private[sources] def ivfTopKOver(spark: SparkSession, cents: Seq[(Int, Seq[Float])],
-      lists: DataFrame, nQueries: Int, k: Int, nprobe: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    probePairs(spark, cents, lists.filter(col("vec_id") < nQueries), "q_id", nprobe,
+      lists: DataFrame, nQueries: Int, k: Int, nprobe: Int): DataFrame =
+    topK(probePairs(spark, cents, lists.filter(col("vec_id") < nQueries), "q_id", nprobe,
         broadcastRows = Long.MaxValue) { probed =>
         lists.filter(col("cell").isin(probed: _*))
           .select(col("vec_id").as("n_id"), col("embedding").as("b_emb"),
             col("norm").as("b_norm"), col("cell"))
       }
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"),
-        col("n_id"), col("cosine"))
-  }
+      .filter(col("q_id") =!= col("n_id")), k)
 
   /** FAT-EVAL-SET semantic decontamination over the STORED index — the
     * scale form of `ops.Similarity.semanticDecontaminate` (same
@@ -241,19 +257,12 @@ object VectorIndexStore {
       broadcastEvalRows: Long = 100000L): DataFrame = {
     val lists = graft.Tables.read(spark, s"$indexDir/lists")
       .filter(col("norm") > 0)
-    probePairs(spark, loadCentroids(spark, indexDir), lists.filter(col("vec_id") % 97 === 0),
-        "eval_id", nprobe, broadcastEvalRows) { probed =>
+    bestEval(probePairs(spark, loadCentroids(spark, indexDir),
+        lists.filter(col("vec_id") % 97 === 0), "eval_id", nprobe, broadcastEvalRows) { probed =>
         lists.filter(col("vec_id") % 97 =!= 0 && col("cell").isin(probed: _*))
           .select(col("vec_id"), col("embedding").as("b_emb"),
             col("norm").as("b_norm"), col("cell"))
-      }
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("cosine"), (-col("eval_id")).as("neg_eval")))
-        .as("best"))
-      .filter(col("best.cosine") >= minCos)
-      .select(col("vec_id"), (-col("best.neg_eval")).as("best_eval_id"),
-        col("best.cosine").as("best_cosine"))
-      .orderBy(col("vec_id"))
+      }, minCos)
   }
 
   /** Margin-based bitext mining over the STORED index — the
@@ -288,8 +297,9 @@ object VectorIndexStore {
     * cell-pruned `codes` table (≈9 bytes/vector — the compressed shuffle
     * the in-query path documents), ADC-scored against a broadcast lookup
     * table built from the stored codebook, then the top k x rerank pool
-    * exact-reranks against the pruned `lists`. Same arithmetic as
-    * `Similarity.ivfPqTopK` (equality pinned by VectorIndexSpec).
+    * exact-reranks against the pruned `lists`. The same PQ stage as
+    * `Similarity.ivfPqTopK` ([[pqApprox]], [[pqPool]], [[exactRerank]];
+    * equality pinned by VectorIndexSpec).
     */
   def ivfPqTopK(spark: SparkSession, indexDir: String, nQueries: Int, k: Int,
       nprobe: Int = 4, rerank: Int = 4): DataFrame = {
@@ -299,45 +309,59 @@ object VectorIndexStore {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("norm").as("q_norm"),
         probedCells(cents, nprobe).as("cells"))
-    val cbDf = graft.Tables.read(spark, s"$indexDir/codebook")
-    val subDim = 64 / NSub
-    val lut = q.select(col("q_id"), col("q_emb")).crossJoin(broadcast(cbDf))
+    val probed = q.select(explode(col("cells")).as("cell")).distinct()
+      .collect().map(_.getInt(0).toLong).sorted
+    val approx = pqApprox(spark, q, broadcast(graft.Tables.read(spark, s"$indexDir/codebook")),
+      64 / NSub, graft.Tables.read(spark, s"$indexDir/codes").filter(col("cell").isin(probed: _*)),
+      col("vec_id").as("n_id"))
+    val rer = lists.filter(col("cell").isin(probed: _*))
+      .select(col("vec_id").as("n_id"), col("embedding").as("b_emb"),
+        col("norm").as("b_norm"))
+    topK(exactRerank(spark, pqPool(approx, k * rerank).select(col("q_id"), col("n_id")), q, rer), k)
+  }
+
+  /** The ADC stage of an IVF-PQ query, stored or in-query: a lookup table
+    * of dot(query subvector, codebook centroid) per (q_id, sub, cid)
+    * (`codebook` rows (sub, cid, cv), each `subDim` floats), joined
+    * against the exploded codes of every candidate in a probed cell, and
+    * summed per (q_id, n_id) as `approx_dot`. `q` is (q_id, q_emb, cells);
+    * `codes` carries (cell, codes) and the candidate id `nId` names.
+    * Partial dots are decimal-rounded before the sum, so the approximate
+    * ranking is replay-deterministic.
+    */
+  private[graft] def pqApprox(spark: SparkSession, q: DataFrame, codebook: DataFrame,
+      subDim: Int, codes: DataFrame, nId: Column): DataFrame = {
+    val lut = q.select(col("q_id"), col("q_emb")).crossJoin(codebook)
       .withColumn("pdot",
         VectorFunctions.floatDot(spark,
           slice(col("q_emb"), col("sub") * subDim + 1, lit(subDim)), col("cv"))
           .cast(DecimalType(24, 9)))
       .select(col("q_id"), col("sub"), col("cid"), col("pdot"))
-    val qcells = q.select(col("q_id"), explode(col("cells")).as("cell"))
-    val probed = qcells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0).toLong).sorted
-    val codes = graft.Tables.read(spark, s"$indexDir/codes")
-      .filter(col("cell").isin(probed: _*))
-    val cand = broadcast(qcells).join(codes, Seq("cell"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        posexplode(col("codes")).as(Seq("sub", "cid")))
-    val approx = cand.join(broadcast(lut), Seq("q_id", "sub", "cid"))
+    broadcast(q.select(col("q_id"), explode(col("cells")).as("cell"))).join(codes, Seq("cell"))
+      .select(col("q_id"), nId, posexplode(col("codes")).as(Seq("sub", "cid")))
+      .join(broadcast(lut), Seq("q_id", "sub", "cid"))
       .groupBy(col("q_id"), col("n_id"))
       .agg(sum(col("pdot")).as("approx_dot"))
       .filter(col("q_id") =!= col("n_id"))
-    val wa = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_dot").desc, col("n_id"))
-    val pool = approx.withColumn("arn", row_number().over(wa))
-      .filter(col("arn") <= k * rerank)
-      .select(col("q_id"), col("n_id"))
-    val rer = lists.filter(col("cell").isin(probed: _*))
-      .select(col("vec_id").as("n_id"), col("embedding").as("b_emb"),
-        col("norm").as("b_norm"))
-    val exact = broadcast(pool)
-      .join(rer, Seq("n_id"))
+  }
+
+  /** The re-rank pool: each query's `n` best ADC candidates, with their
+    * approximate rank `arn`.
+    */
+  private[graft] def pqPool(approx: DataFrame, n: Int): DataFrame =
+    approx.withColumn("arn", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("approx_dot").desc, col("n_id"))))
+      .filter(col("arn") <= n)
+
+  /** The exact cosine of each pooled (q_id, n_id): the (small) pool
+    * broadcasts against the candidate `vectors` (n_id, b_emb, b_norm),
+    * and the queries `q` (q_id, q_emb, q_norm) broadcast onto it.
+    */
+  private[graft] def exactRerank(spark: SparkSession, pool: DataFrame, q: DataFrame,
+      vectors: DataFrame): DataFrame =
+    broadcast(pool)
+      .join(vectors, Seq("n_id"))
       .join(broadcast(q.select(col("q_id"), col("q_emb").as("a_emb"),
         col("q_norm").as("a_norm"))), Seq("q_id"))
-      .withColumn("cosine",
-        VectorFunctions.floatDot(spark, col("a_emb"), col("b_emb"))
-          / (col("a_norm") * col("b_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("n_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("bigint").as("rank"),
-        col("n_id"), col("cosine"))
-  }
+      .withColumn("cosine", VectorFunctions.cosine(spark))
 }

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * cache goes through [[SessionMemo]], every session is built through
   * [[GraftSession]], every store swap, marker and partition-replacing
   * write through `sources.StoreLifecycle`, and the BM25 and vector-probe
-  * arithmetic through their one core, the media codecs through
+  * arithmetic through their one core, each retrieval step (cosine,
+  * vector top-k, PQ ADC, eval argmax, BM25 pivot and stats, RRF) through
+  * its one definition, the media codecs through
   * Multimodal's one batched seam and the LSH candidate join through
   * `TextDedup.bandedCandidates`, so hand-rolled copies cannot grow
   * back under `src/main/scala`; specs make their temp dirs through
@@ -83,6 +85,24 @@ class SourceHygieneSpec extends AnyFunSuite {
     val sites = sources.flatMap { case (p, text) =>
       probe.r.findAllIn(text).map(_ => p.getFileName.toString) }
     assert(sites == Seq("VectorIndexStore.scala"), sites)
+  }
+
+  test("each retrieval step is written once, in its one core") {
+    // in-query builders, stored indexes and incremental twins all score,
+    // rank and fuse through these definitions
+    for ((step, code, file) <- Seq(
+        ("cosine", """/ (col("a_norm") * col("b_norm"))""", "VectorFunctions.scala"),
+        ("vector top-k tail", """col("rank").cast("bigint")""", "VectorIndexStore.scala"),
+        ("PQ ADC candidates", """posexplode(col("codes"))""", "VectorIndexStore.scala"),
+        ("eval argmax", """max(struct(col("cosine")""", "VectorIndexStore.scala"),
+        ("BM25 pivot", """max(when(col("term") ===""", "TextIndexStore.scala"),
+        ("RRF fusion", "1000000000 div", "TextIndexStore.scala"),
+        ("per-key dl", """agg(sum(col("tf")).as("dl")""", "TextIndexStore.scala"))) {
+      val quoted = java.util.regex.Pattern.quote(code)
+      val sites = sources.flatMap { case (p, text) =>
+        quoted.r.findAllIn(text).map(_ => p.getFileName.toString) }
+      assert(sites == Seq(file), s"$step: `$code` at $sites")
+    }
   }
 
   test("Multimodal's batch loop and each codec step are written once") {

@@ -124,13 +124,36 @@ class RetrievalIndexSpec extends SparkSpec {
     assert(!fs.exists(new Path(s"$idx/docstats")) && !fs.exists(new Path(s"$idx/stats")))
   }
 
-  test("stored BM25 runs at most 2 jobs and hybrid RRF at most 3") {
+  test("stored BM25 and hybrid RRF run at most 2 jobs each") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
+      ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     noop(TextIndexStore.bm25(spark, idx, qterms))
     noop(TextIndexStore.hybridRrf(spark, idx, qterms))
     val bm = jobsDuring(noop(TextIndexStore.bm25(spark, idx, qterms)))._2
     assert(bm <= 2, s"bm25 ran $bm jobs")
     val rrf = jobsDuring(noop(TextIndexStore.hybridRrf(spark, idx, qterms)))._2
-    assert(rrf <= 3, s"hybridRrf ran $rrf jobs")
+    assert(rrf <= 2, s"hybridRrf ran $rrf jobs")
+    // both rank lists read one per-doc aggregate: the final plan has one
+    // shuffle stage over a postings scan (the other list reuses it)
+    val df = TextIndexStore.hybridRrf(spark, idx, qterms)
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    def readsPostings(p: SparkPlan) = nodes(p).exists {
+      case f: FileSourceScanExec => f.toString.contains("postings")
+      case _ => false
+    }
+    val plan = df.queryExecution.executedPlan
+    val stages = nodes(plan).collect {
+      case q: ShuffleQueryStageExec
+        if q.plan.isInstanceOf[ShuffleExchangeExec] && readsPostings(q.plan) => q
+    }
+    assert(stages.size == 1, s"${stages.size} postings shuffle stages:\n$plan")
   }
 
   test("the stats sidecar holds the aggregate's n_docs and avgdl bit for bit") {

@@ -2,7 +2,8 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.streaming.{MediaIngestJob, StreamingCms, StreamingFrameDedup,
-  StreamingMediaDedup, StreamingNbTrain, StreamingNearDedup, StreamingPackedShards}
+  StreamingMediaDedup, StreamingNbTrain, StreamingNearDedup, StreamingPackedShards,
+  StreamingTopKJob}
 import graft.streaming.MediaPayloads._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -64,6 +65,16 @@ class StoreCrashMatrixSpec extends SparkSpec {
       (i * 3L + 1, "image", enc(img(64, 48, seed = 7 + i), "png")),
       (i * 3L + 2, "video", animatedGif(Seq(0, 1, 2, 3).map(q => quadrantImage(64, 48, (q + i) % 4)))))
     .toDF("media_id", "kind", "bytes")
+
+  // space-saving summary emissions (group, item, est, err, n_seen):
+  // batch 1 moves group g past batch 0's summary (with an older g
+  // emission the upsert discards), adds group k and leaves h alone
+  private def summaries(i: Int) = (if (i == 0)
+      Seq(("g", "a", 2L, 0L, 2L), ("h", "z", 1L, 0L, 1L))
+    else
+      Seq(("g", "a", 2L, 0L, 3L), ("g", "a", 3L, 0L, 4L), ("g", "b", 1L, 0L, 4L),
+        ("k", "y", 1L, 0L, 1L)))
+    .toDF("group", "item", "est", "err", "n_seen")
 
   private def fs = StoreLifecycle.fs(spark, "crashfs:///")
 
@@ -229,7 +240,9 @@ class StoreCrashMatrixSpec extends SparkSpec {
     batches("StreamingPackedShards.packBatch", "store", Seq("store", "out"),
       (i, d) => StreamingPackedShards.packBatch(spark,
         half(docs, "doc_id", i).select("doc_id", "text"), i.toLong,
-        s"$d/store", s"$d/out", budget = 64L))
+        s"$d/store", s"$d/out", budget = 64L)),
+    batches("StreamingTopKJob.upsertSummaries", "store", Seq("store"),
+      (i, d) => StreamingTopKJob.upsertSummaries(spark, summaries(i), s"$d/store"))
   )
 
   private def fresh(): String =
